@@ -234,39 +234,6 @@ def _mix64(h: Column, i: int) -> Column:
     return F.xxhash64(h, F.lit(i))
 
 
-#: Bounded number of memoized pair results kept per SparkSession.
-_PAIRS_CACHE_MAX = 8
-
-
-def _pairs_cache(spark) -> "dict":
-    """Per-session memo table, stored ON the SparkSession object so its
-    lifetime is exactly the session's (no id() aliasing across sessions,
-    no process-global growth). Values are persisted DataFrames; eviction
-    unpersists, so executor storage stays bounded at _PAIRS_CACHE_MAX
-    results."""
-    cache = getattr(spark, "_csp_spark_pairs_cache", None)
-    if cache is None:
-        cache = {}
-        try:
-            spark._csp_spark_pairs_cache = cache
-        except Exception:  # session object refuses attributes — no memo
-            pass
-    return cache
-
-
-def clear_pairs_cache(spark) -> None:
-    """Drop (and unpersist) every memoized pair result for a session —
-    call between pipeline builds when the files behind an input path may
-    have changed (the memo key hashes the PLAN, not the data)."""
-    cache = _pairs_cache(spark)
-    for df in cache.values():
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-    cache.clear()
-
-
 def minhash_lsh_pairs(
     docs: DataFrame,
     text_col: str = "text",
@@ -276,7 +243,6 @@ def minhash_lsh_pairs(
     shingle_k: int = 8,
     threshold: float = 0.5,
     use_words: bool = False,
-    use_cache: bool = True,
     bucket_cap: int = DEFAULT_BUCKET_CAP,
 ) -> DataFrame:
     """Near-duplicate candidate pairs via banded MinHash LSH, verified
@@ -297,27 +263,6 @@ def minhash_lsh_pairs(
     candidate pairs.
     """
     rows_per_band = num_hashes // bands
-
-    # Memoize per (input plan, params) within the session — csp parity:
-    # the reference memoizes identical node instantiations at wiring
-    # time (csp/impl/mem_cache.py), so graphs that consume the same
-    # pair stream twice (e.g. pair listing + connected-components
-    # clustering) share one computation. The cached result is the
-    # persisted OUTPUT (a few MB of verified pairs), not the
-    # intermediates. Caveat: the key hashes the PLAN, not the data —
-    # if the files behind a path change mid-session, pass
-    # use_cache=False or call clear_pairs_cache(spark).
-    cache = _pairs_cache(docs.sparkSession) if use_cache else {}
-    try:
-        cache_key = (
-            docs.semanticHash(), text_col, id_col,
-            num_hashes, bands, shingle_k, threshold, use_words, bucket_cap,
-        )
-    except Exception:  # semanticHash unavailable (e.g. connect mode)
-        cache_key = None
-    if cache_key is not None and cache_key in cache:
-        return cache[cache_key]
-
     docs = _spread(docs)
 
     # Stage 1 — exploded shingle-hash rows (id, h), as a REUSABLE
@@ -463,14 +408,6 @@ def minhash_lsh_pairs(
     out.count()
     sig.unpersist()
     cand.unpersist()
-    if cache_key is not None and use_cache:
-        while len(cache) >= _PAIRS_CACHE_MAX:  # bounded: evict oldest
-            oldest = next(iter(cache))
-            try:
-                cache.pop(oldest).unpersist()
-            except Exception:
-                pass
-        cache[cache_key] = out
     return out
 
 

@@ -33,7 +33,15 @@ from pyspark.sql import functions as F
 
 import math as _math
 
-from ..similarity.ann import cosine, dot, ivf_index, norm
+from ..similarity.ann import (
+    _margin_select,
+    _order_key,
+    _rescore,
+    _side_matrix,
+    dot,
+    ivf_index,
+    norm,
+)
 from .dedup import _capped_bucket_pairs
 
 
@@ -139,23 +147,15 @@ def semdedup(
         # valid dup-pair removal
         F.xxhash64(F.col("v").cast("string")).alias("__sigh"),
     )
-    # Removal decisions are a per-cell BLAS pass (r12; the
-    # hard_negatives _select_pairs discipline): the former in-cell
-    # self-join evaluated the interpreted zip_with/aggregate cosine
-    # inside the join condition on EVERY pair — for n_clusters=1 the
-    # constant cell key even folded away, leaving a single-task
-    # BroadcastNestedLoopJoin (executor dump: ArrayAggregate.eval in
-    # the bound condition; 60-110 s at sf0.1 vs ~1 s after). One numpy
-    # matmul per cell decides every pair whose |cosine - eps| clears a
-    # 1e-9 margin (BLAS vs the JVM's sequential fold differs by
-    # ~1e-13); only margin-band pairs — typically zero — are re-scored
-    # with the exact former JVM expressions, so the removed-id SET is
-    # identical. Degenerates match the JVM exactly: NaN-element pairs
-    # (JVM cosine NaN; nanSafeCompare makes NaN >= eps TRUE) are sure
-    # removals, while zero-norm pairs (JVM divisor exactly 0 → NULL →
-    # the filter KEEPS them) go through the exact recheck.
-    # Over-cap cells keep the star/salt guard path with the former
-    # exact filter (bounded pair volume by construction, logged).
+    # Removal decisions are one per-cell _margin_select pass in
+    # threshold mode on the raw cosine (r12; the former in-cell
+    # self-join evaluated the interpreted cosine on EVERY pair: 60-110
+    # s at sf0.1 vs ~1 s after). Pairs clear of the margin band are
+    # decided from the kernel's output; only band pairs — typically
+    # none — are re-scored by _rescore and decided with the same
+    # __ord struct comparison, so the removed-id SET is the
+    # self-join's. Over-cap cells keep the star/salt guard path with
+    # the same exact score (bounded pair volume, logged).
     sizes = rows.groupBy("cell").agg(F.count(F.lit(1)).alias("__n"))
     over_rows = sizes.filter(F.col("__n") > cap).collect()
     removed_parts = []
@@ -167,9 +167,10 @@ def semdedup(
         bad_rows = rows.join(F.broadcast(over_df), "cell", "left_semi")
         pairs_bad = _capped_bucket_pairs(
             bad_rows, ["cell"], cap, "semdedup", payload=("v", "__ord")
-        )
+        ).withColumnsRenamed({"v_a": "__va", "v_b": "__vb"})
         removed_parts.append(
-            pairs_bad.filter(cosine(F.col("v_a"), F.col("v_b")) >= F.lit(eps))
+            _rescore(pairs_bad, "id_a", "id_b", rounded=False)
+            .filter(F.col("cos_sim") >= F.lit(eps))
             .select(
                 F.when(F.col("__ord_a") > F.col("__ord_b"), F.col("id_a"))
                 .otherwise(F.col("id_b")).alias("id")
@@ -187,7 +188,6 @@ def semdedup(
         StructField("__xb", id_type),
     ])
     eps_f = float(eps)
-    margin = 1e-9
     edge_order = keep == "edge"
 
     def _decide(pdf):
@@ -195,38 +195,16 @@ def semdedup(
         import pandas as pd
 
         n = len(pdf)
-        empty = pd.DataFrame({
-            "__kind": pd.Series([], dtype="int8"),
-            "__xa": pd.Series([], dtype=pdf["id"].dtype),
-            "__xb": pd.Series([], dtype=pdf["id"].dtype),
-        })
-        if n < 2:
-            return empty
-        from ..similarity.ann import _vec_matrix
-
-        dim = len(pdf["v"].iloc[0])
-        V = _vec_matrix(pdf["v"], dim, "semdedup", "v")
-        norms = np.sqrt((V * V).sum(axis=1))
         ids = pdf["id"].to_numpy()
-        # keep-order rank replaying the JVM struct comparison: for
-        # "edge" (__csim, id) with NaN mapped to +inf (Spark's
-        # nanSafeCompare ranks NaN above every double and equal to
-        # itself, falling through to the id; cosine cannot be a real
-        # +inf, so the mapping is exact), else id alone; ids are
-        # unique, so the rank is total — higher rank == worse == the
-        # removed side of a duplicate pair
+        V, vnull = _side_matrix(pdf["v"], "semdedup", "v")
+        # keep-order rank replaying the JVM __ord struct comparison:
+        # (__csim, id) for "edge", where Arrow delivers both a NULL
+        # __csim (zero divisor) and a NaN one as NaN, so the engine's
+        # own NULL flag splits them; id alone otherwise. Higher rank
+        # == worse == the removed side of a duplicate pair.
         if edge_order:
-            csim = pdf["__csim"].to_numpy(dtype=np.float64)
-            # JVM __csim is NULL when its divisor is exactly 0 (NULL
-            # ranks SMALLEST in the struct comparison) and NaN from NaN
-            # inputs (ranks LARGEST under nanSafeCompare); Arrow
-            # delivers both as NaN, so the engine's own NULL flag
-            # (__csim_null) splits them exactly
-            cnull = pdf["__csim_null"].to_numpy(dtype=bool)
-            key1 = np.where(
-                cnull, -np.inf,
-                np.where(np.isnan(csim), np.inf, csim),
-            )
+            key1 = _order_key(pdf["__csim"].to_numpy(dtype=np.float64),
+                              pdf["__csim_null"].to_numpy(dtype=bool))
             srt = pd.DataFrame({"k": key1, "i": ids}).sort_values(
                 ["k", "i"], kind="stable"
             ).index.to_numpy()
@@ -237,53 +215,24 @@ def semdedup(
         rank = np.empty(n, dtype=np.int64)
         rank[srt] = np.arange(n)
         rm = np.zeros(n, dtype=bool)
-        out_a: list = []
-        out_b: list = []
-        B = max(1, 4_000_000 // n)  # ~32 MB similarity slabs
-        for s0 in range(0, n, B):
-            s1 = min(n, s0 + B)
-            denom = np.outer(norms[s0:s1], norms)
-            with np.errstate(invalid="ignore", divide="ignore"):
-                S = (V[s0:s1] @ V.T) / denom
-            for bi in range(s1 - s0):
-                i = s0 + bi
-                srow = S[bi]
-                # strict upper triangle: each unordered pair once
-                js = np.arange(i + 1, n)
-                s = srow[i + 1:]
-                # a zero divisor makes the JVM cosine NULL (Spark
-                # division semantics), which fails `>= eps` and keeps
-                # the pair — numpy sees 0/0 NaN there, which must NOT
-                # be conflated with true NaN (NaN elements), where the
-                # JVM comparison is TRUE (nanSafeCompare). Route every
-                # zero-divisor pair through the exact JVM recheck so
-                # the engine itself decides.
-                zd = denom[bi, i + 1:] == 0.0
-                nan = np.isnan(s) & ~zd
-                sure = ((s >= eps_f + margin) | nan) & ~zd
-                maybe = ~sure & (((s >= eps_f - margin) & ~zd) | zd)
-                if sure.any():
-                    jj = js[sure]
-                    worse = np.where(rank[jj] > rank[i], jj, i)
-                    rm[worse] = True
-                mj = js[maybe]
-                if len(mj):
-                    out_a.append(np.full(len(mj), ids[i]))
-                    out_b.append(ids[mj])
-        frames = []
+        band_a: list = [ids[:0]]
+        band_b: list = [ids[:0]]
+        for ia, sure, _, jb in _margin_select(
+            V, vnull, ids, [(V, vnull, ids, np.arange(n))], rounded=False,
+            threshold=eps_f, pairs="lt",
+        ):
+            i, j = ia[sure], jb[sure]
+            rm[np.where(rank[j] > rank[i], j, i)] = True
+            band_a.append(ids[ia[~sure]])
+            band_b.append(ids[jb[~sure]])
         ridx = np.flatnonzero(rm)
-        if len(ridx):
-            frames.append(pd.DataFrame({
-                "__kind": np.zeros(len(ridx), dtype="int8"),
-                "__xa": ids[ridx], "__xb": ids[ridx],
-            }))
-        if out_a:
-            frames.append(pd.DataFrame({
-                "__kind": np.ones(sum(map(len, out_a)), dtype="int8"),
-                "__xa": np.concatenate(out_a),
-                "__xb": np.concatenate(out_b),
-            }))
-        return pd.concat(frames, ignore_index=True) if frames else empty
+        band_a, band_b = np.concatenate(band_a), np.concatenate(band_b)
+        return pd.DataFrame({
+            "__kind": np.repeat(np.array([0, 1], dtype="int8"),
+                                [len(ridx), len(band_a)]),
+            "__xa": np.concatenate([ids[ridx], band_a]),
+            "__xb": np.concatenate([ids[ridx], band_b]),
+        })
 
     dec_cols = ["cell", "id", "v"] + (
         ["__csim", "__csim_null"] if edge_order else [])
@@ -292,19 +241,11 @@ def semdedup(
         .groupBy("cell")
         .applyInPandas(lambda _, pdf: _decide(pdf), schema=dec_schema)
     )
-    # margin-band pairs (|blas_cos - eps| <= 1e-9, usually none) get
-    # the former exact JVM decision: same cosine expression, same
-    # __ord struct comparison — the removed-id set stays identical
     side = rows.select("id", "v", "__ord")
     recheck = (
-        decisions.filter(F.col("__kind") == 1)
-        .join(side.select(F.col("id").alias("__xa"),
-                          F.col("v").alias("v_a"),
-                          F.col("__ord").alias("__ord_a")), "__xa")
-        .join(side.select(F.col("id").alias("__xb"),
-                          F.col("v").alias("v_b"),
-                          F.col("__ord").alias("__ord_b")), "__xb")
-        .filter(cosine(F.col("v_a"), F.col("v_b")) >= F.lit(eps))
+        _rescore(decisions.filter(F.col("__kind") == 1), "__xa", "__xb",
+                 side, side, rounded=False)
+        .filter(F.col("cos_sim") >= F.lit(eps))
         .select(
             F.when(F.col("__ord_a") > F.col("__ord_b"), F.col("__xa"))
             .otherwise(F.col("__xb")).alias("id")

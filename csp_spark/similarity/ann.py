@@ -24,7 +24,11 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-logger = logging.getLogger(__name__)
+logger = logging.getLogger("csp_spark")
+
+#: Similarity cells per BLAS slab in :func:`_margin_select` (~32 MB of
+#: float64), whatever the size of either side.
+_SLAB_CELLS = 4_000_000
 
 
 def _vec_matrix(series, dim: int, label: str, col: str) -> np.ndarray:
@@ -71,6 +75,198 @@ def norm(a: Column) -> Column:
 
 def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
+
+
+def _side_matrix(series, label: str, col: str, dim: int | None = None):
+    """(float64 matrix, NULL-row mask) for one side of the kernel: NULL
+    vectors become flagged zero rows (a NULL element arrives as NaN);
+    every other row must have ``dim`` elements (default: the first
+    non-NULL row's), ragged input raising via :func:`_vec_matrix`."""
+    null = series.isna().to_numpy()
+    live = series[~null]
+    if dim is None:
+        dim = len(live.iloc[0]) if len(live) else 0
+    if not null.any():
+        return _vec_matrix(series, dim, label, col), null
+    V = np.zeros((len(series), dim))
+    if len(live):
+        V[~null] = _vec_matrix(live, dim, label, col)
+    return V, null
+
+
+def _order_key(x: np.ndarray, null: np.ndarray) -> np.ndarray:
+    """Spark's order on a double column as a float64 sort key: NaN
+    ranks above every double, NULL below."""
+    return np.where(null, -np.inf, np.where(np.isnan(x), np.inf, x))
+
+
+def _margin_select(A, a_null, a_ids, blocks, *, rounded: bool,
+                   k: int | None = None, threshold: float | None = None,
+                   below: float | None = None, pairs: str | None = None):
+    """Margin-select: the one candidate kernel behind knn_join,
+    hard_negatives, cosine_pairs_above and semdedup. BLAS cosine slabs
+    (at most ``_SLAB_CELLS`` cells each) between the rows of ``A`` and
+    each block of the other side keep a guaranteed SUPERSET of the
+    pairs the exact JVM expression keeps; callers re-score only those
+    survivors with :func:`_rescore`, so every returned double is the
+    JVM's own.
+
+    ``blocks`` yields ``(B, b_null, b_ids, *payload)``; each candidate
+    chunk comes back as ``(ia, sure, b_ids[jb], *payload[jb])``, ``ia``
+    indexing ``A``. Modes:
+
+    - ``threshold``: pairs scoring at or above it, chunk by chunk;
+      ``sure`` marks those clear of the margin band, which need no
+      re-score.
+    - ``k``: per row of ``A``, every pair that can reach the row's top
+      ``k`` in descending order (boundary ties included), among pairs
+      strictly ``below`` a bound when one is given; yielded after the
+      last block (``sure`` is None).
+
+    ``pairs`` keeps only pairs with ``a_id != b_id`` ("ne") or
+    ``a_id < b_id`` ("lt"); a NULL id passes neither, as in the JVM.
+
+    The JVM rules, stated once: a NULL vector or a zero divisor scores
+    NULL, which ranks below every double and passes no comparison; NaN
+    ranks above every double, so ``NaN >= t`` holds and ``NaN < t``
+    does not. A NaN score is never certain: Arrow hands pandas a NULL
+    element as NaN, and the JVM scores that vector NULL, so NaN pairs
+    are kept wherever either reading would keep them and left to the
+    re-score. The margin follows from the compared score. BLAS and the
+    JVM's sequential fold differ by a few ulp, so raw cosines need
+    1e-9. Scores rounded to 6 dp may land one 1e-6 grid step apart, so
+    a true top-k member can sit 2e-6 below the BLAS kth (and ``kth -
+    margin`` carries an ulp of its own); 2.5e-6 is strictly above that
+    and below the next grid step, so it admits no extra rounded value.
+    """
+    if k is not None and k < 1:
+        return
+    import pandas as pd
+
+    margin = 2.5e-6 if rounded else 1e-9
+    test = {None: None, "ne": np.not_equal, "lt": np.less}[pairs]
+    an = np.linalg.norm(A, axis=1)
+    top = None if k is None else np.full((len(A), k), -np.inf)
+    held = []
+    for B, b_null, b_ids, *payload in blocks:
+        if test is not None:
+            # both sides' ids as shared sorted int codes, NULL = -1: the
+            # id test is an int64 compare whatever the id type
+            codes = pd.factorize(np.concatenate([a_ids, b_ids]), sort=True)[0]
+            ca, cb = codes[:len(A), None], codes[None, len(A):]
+        bn = np.linalg.norm(B, axis=1)
+        step = max(1, _SLAB_CELLS // max(len(B), 1))
+        for s0 in range(0, len(A), step):
+            s1 = min(len(A), s0 + step)
+            den = np.outer(an[s0:s1], bn)
+            with np.errstate(invalid="ignore", divide="ignore"):
+                S = (A[s0:s1] @ B.T) / den
+            if rounded:
+                S = np.round(S, 6)
+            null = (den == 0.0) | a_null[s0:s1, None] | b_null[None, :]
+            r = _order_key(S, null)
+            live = (np.ones(r.shape, dtype=bool) if test is None
+                    else test(ca[s0:s1], cb) & (ca[s0:s1] >= 0) & (cb >= 0))
+            certain = live & ~np.isnan(S)
+            if k is None:
+                keep = live & ~null & (r >= threshold - margin)
+                sure = keep & certain & (r >= threshold + margin)
+            else:
+                if below is None:
+                    keep, sure = live, certain
+                else:
+                    keep = live & ~null & (r < below + margin)
+                    sure = keep & (r < below - margin)
+                # running top-k of the pairs certainly kept: its min is
+                # the kth so far, never above the exact final kth
+                t = np.concatenate([top[s0:s1], np.where(sure, r, -np.inf)],
+                                   axis=1)
+                top[s0:s1] = -np.partition(-t, k - 1, axis=1)[:, :k]
+                keep = keep & (r >= top[s0:s1].min(axis=1)[:, None] - margin)
+            ia, jb = np.nonzero(keep)
+            if not len(ia):
+                continue
+            chunk = (ia + s0, b_ids[jb], *[p[jb] for p in payload])
+            if k is None:
+                yield (chunk[0], sure[ia, jb], *chunk[1:])
+            else:
+                held.append((r[ia, jb], chunk))
+    if held:
+        kth = top.min(axis=1)
+        for rs, (ia, *rest) in held:
+            m = rs >= kth[ia] - margin
+            yield (ia[m], None, *[x[m] for x in rest])
+
+
+def _rescore(pairs: DataFrame, a: str, b: str,
+             side_a: DataFrame | None = None,
+             side_b: DataFrame | None = None,
+             rounded: bool = True) -> DataFrame:
+    """Exact JVM re-score of :func:`_margin_select` survivors: adds
+    ``cos_sim = round(dot / (norm_a * norm_b), 6)`` (unrounded when
+    ``rounded`` is False) from the sequential zip_with/aggregate folds,
+    which any engine replaying a sequential sum reproduces bit-for-bit
+    (the DuckDB oracle). ``a``/``b`` name the id columns of ``pairs``.
+    Each ``side_*`` frame (``id``, ``v``, optionally ``n = norm(v)``,
+    and extra columns, which come back suffixed ``_a``/``_b``) is joined
+    back on its id; a None side means ``pairs`` already carries that
+    vector as ``__va``/``__vb``. A side's norm is taken from its ``n``
+    (once per side row) when given, else computed per pair row: ship
+    ``n`` where most side rows pair (the top-k callers), not where few
+    do (semdedup's usually empty margin band)."""
+    n = {}
+    for key, side, s in ((a, side_a, "a"), (b, side_b, "b")):
+        if side is not None:
+            extra = [F.col(c).alias(f"{c}_{s}") for c in side.columns
+                     if c not in ("id", "v", "n")]
+            if "n" in side.columns:
+                n[s] = F.col(f"__n{s}")
+                extra.append(F.col("n").alias(f"__n{s}"))
+            pairs = pairs.join(side.select(
+                F.col("id").alias(key), F.col("v").alias(f"__v{s}"), *extra,
+            ), key)
+    va, vb = F.col("__va"), F.col("__vb")
+    # the same factors in the same order as cosine(): bit-identical
+    score = dot(va, vb) / (n.get("a", norm(va)) * n.get("b", norm(vb)))
+    return pairs.withColumn("cos_sim", F.round(score, 6) if rounded else score)
+
+
+def _broadcast_side(df: DataFrame, label: str, advice: str):
+    """The guarded driver collect behind a broadcast kernel side. ``df``
+    is (``id``, ``v``); rows stream in partition by partition, and once
+    they pass ``CSP_SPARK_PAIRS_COLLECT_MAX_ELEMENTS`` (rows x dim
+    doubles, the dimension read from the first non-NULL vector; read at
+    call time; default 64M ≈ 0.5 GB) it raises with ``advice`` rather
+    than OOM the driver, holding at most one partition past the budget.
+    Returns (rows, broadcast of (ids, matrix, NULL mask)), the broadcast
+    None when ``df`` is empty."""
+    import pandas as pd
+
+    max_el = int(os.environ.get(
+        "CSP_SPARK_PAIRS_COLLECT_MAX_ELEMENTS", str(64 * 1024 * 1024)
+    ))
+    rows, dim = [], 0
+    it = df.toLocalIterator()
+    for r in it:
+        rows.append(r)
+        if not dim and r["v"] is not None:
+            dim = len(r["v"])
+        cap_rows = max(max_el // max(dim, 1), 1)
+        if len(rows) > cap_rows:
+            it.close()
+            raise ValueError(
+                f"{label}: vector table exceeds {cap_rows} rows "
+                f"x {dim} dims = {max_el} doubles, past the "
+                "driver-collect guard (env "
+                f"CSP_SPARK_PAIRS_COLLECT_MAX_ELEMENTS). {advice}"
+            )
+    if not rows:
+        return rows, None
+    M, null = _side_matrix(
+        pd.Series([r["v"] for r in rows], dtype=object), label, "v", dim
+    )
+    ids = np.array([r["id"] for r in rows])
+    return rows, df.sparkSession.sparkContext.broadcast((ids, M, null))
 
 
 def cosine_topk(
@@ -580,12 +776,6 @@ def hard_negatives(
         cells, _ = ivf_index(
             base, n_cells=n_clusters, id_col="id", vec_col="v", seed=seed
         )
-    # per-row norm ONCE below the join (the knn_join discipline):
-    # cosine() inline would recompute each side's norm per pair —
-    # |cell|x redundant interpreted aggregates. Same factor
-    # expressions in the same (n_a * n_b) order, so every double is
-    # bit-identical to the inline form and oracles are unaffected.
-    celln = cells.withColumn("__vn", norm(F.col("v")))
     sizes = cells.groupBy("cell").agg(F.count(F.lit(1)).alias("__n"))
     over = sizes.filter(F.col("__n") > cap).collect()
     if over and on_over_cap == "raise":
@@ -605,38 +795,12 @@ def hard_negatives(
             "candidate subset (top-k of the sample)",
             len(over), cap, max(r["__n"] for r in over),
         )
-    # Candidate SELECTION is a per-cell BLAS pass; the returned pairs
-    # are RE-SCORED with the exact JVM expressions below (the
-    # knn_join method="blas" discipline, r9-adjudicated): the former
-    # in-cell self-join evaluated the interpreted zip_with/aggregate
-    # cosine on EVERY candidate pair — and twice per pair once
-    # Catalyst pushed the exclude_eps filter into the HashJoin's
-    # bound condition (one eval in the join predicate, one in the
-    # projection feeding the rank window). Interpreted higher-order
-    # evals are 10-100x slower than the same math in one BLAS matmul,
-    # and their megamorphic eval() call sites degrade further in
-    # long-lived sessions. The matmul selects a margin-superset of
-    # every pair that can reach rank<=k; only those <= |anchors| x
-    # (k + boundary ties) survivors pay the exact interpreted
-    # re-score, so the returned doubles are bit-identical to the
-    # former all-pairs form (multiplication is commutative bit-wise
-    # and the dot's index-order sum is symmetric, so anchor/negative
-    # orientation cannot change a rounded value).
-    #
-    # |blas - exact| per similarity is a few ulp; after both round to
-    # 6dp they differ by at most one 1e-6 grid step, so any margin in
-    # (2e-6, 3e-6) admits every true survivor (the knn_join margin
-    # proof verbatim). The kth cutoff under exclude_eps is computed
-    # over the pairs CERTAINLY below eps (s < eps - margin) — a
-    # subset of the exact kept set, so the cutoff can only be lower
-    # than the true kth and selection stays a superset.
-    margin = 2.5e-6
-    eps_f = float(exclude_eps) if exclude_eps is not None else None
-    kk = int(k)
-
+    # Candidate selection is one per-cell _margin_select pass (top-k
+    # per anchor over the pairs strictly below exclude_eps); only its
+    # <= |anchors| x (k + boundary ties) survivors pay the exact JVM
+    # re-score, so every returned double is the all-pairs form's.
     # The md5 candidate draw for over-cap cells is computed JVM-side
-    # (same split_uniform expression and seed+1 as the former sampled
-    # join) and shipped to the selection pass as a boolean column.
+    # (split_uniform with seed+1) and shipped as a boolean column.
     if over:
         over_ids = [r["cell"] for r in over]
         frac_map = F.create_map(*[
@@ -658,107 +822,37 @@ def hard_negatives(
     pair_schema = StructType([
         StructField("anchor", id_type), StructField("negative", id_type)
     ])
+    eps_f = float(exclude_eps) if exclude_eps is not None else None
 
     def _select_pairs(pdf):
-        import numpy as np
         import pandas as pd
 
-        n = len(pdf)
         ids = pdf["id"].to_numpy()
-        out_a: list = []
-        out_n: list = []
-        if n >= 2:
-            dim = len(pdf["v"].iloc[0])
-            V = _vec_matrix(pdf["v"], dim, "hard_negatives", "v")
-            norms = np.sqrt((V * V).sum(axis=1))
-            cand_idx = np.flatnonzero(pdf["__cand"].to_numpy())
-            Vc, nc, idc = V[cand_idx], norms[cand_idx], ids[cand_idx]
-            if len(cand_idx):
-                # anchor blocks bound the similarity slab to ~32 MB
-                # regardless of cell size (cap rows x 8 B doubles)
-                B = max(1, 4_000_000 // len(cand_idx))
-                for s0 in range(0, n, B):
-                    s1 = min(n, s0 + B)
-                    S = np.round(
-                        (V[s0:s1] @ Vc.T)
-                        / np.outer(norms[s0:s1], nc), 6,
-                    )
-                    for bi in range(s1 - s0):
-                        i = s0 + bi
-                        srow = S[bi]
-                        mask = idc != ids[i]
-                        if eps_f is not None:
-                            # NaN < eps is False on both engines, so
-                            # zero-norm pairs drop out identically
-                            sure = mask & (srow < eps_f - margin)
-                            maybe = mask & (srow < eps_f + margin)
-                        else:
-                            sure = maybe = mask
-                        # kth over REAL scores only (with exclude_eps
-                        # the sure mask already excludes NaN — NaN < x
-                        # is False — but the eps-None branch lets them
-                        # through, and a NaN kth would fail every
-                        # comparison and drop the true top-k)
-                        ms = srow[sure]
-                        ms = ms[~np.isnan(ms)]
-                        if len(ms) > kk:
-                            kth = np.partition(ms, len(ms) - kk)[
-                                len(ms) - kk]
-                            # NaN ranks ABOVE every double in Spark's
-                            # DESC order — keep NaN rows like the
-                            # former window input did
-                            keep = maybe & (
-                                (srow >= kth - margin) | np.isnan(srow)
-                            )
-                        else:
-                            keep = maybe
-                        js = np.flatnonzero(keep)
-                        if len(js):
-                            out_a.append(np.full(len(js), ids[i]))
-                            out_n.append(idc[js])
-        if out_a:
-            return pd.DataFrame({
-                "anchor": np.concatenate(out_a),
-                "negative": np.concatenate(out_n),
-            })
+        V, vnull = _side_matrix(pdf["v"], "hard_negatives", vec_col)
+        c = pdf["__cand"].to_numpy(dtype=bool)
+        chunks = list(_margin_select(
+            V, vnull, ids, [(V[c], vnull[c], ids[c])], rounded=True,
+            k=int(k), below=eps_f, pairs="ne",
+        ))
+        # one row per id pair: the re-score joins every row of a
+        # duplicated id back
         return pd.DataFrame({
-            "anchor": pd.Series([], dtype=ids.dtype),
-            "negative": pd.Series([], dtype=ids.dtype),
-        })
+            "anchor": np.concatenate([ids[:0]] + [ids[ia] for ia, *_ in chunks]),
+            "negative": np.concatenate([ids[:0]] + [nb for _, _, nb in chunks]),
+        }).drop_duplicates()
 
     pair_keys = (
-        celln.select("cell", "id", "v", cand_flag.alias("__cand"))
+        cells.select("cell", "id", "v", cand_flag.alias("__cand"))
         .groupBy("cell")
         .applyInPandas(lambda _, pdf: _select_pairs(pdf),
                        schema=pair_schema)
     )
-    # Exact re-score of the survivor pairs with the SAME factor
-    # expressions (and evaluation order) as the former all-pairs
-    # join, so every returned double is bit-identical and the same
-    # oracles replay it.
-    va = celln.select(
-        F.col("id").alias("anchor"), F.col("v").alias("__va"),
-        F.col("__vn").alias("__na"),
-    )
-    vb = celln.select(
-        F.col("id").alias("negative"), F.col("v").alias("__vb"),
-        F.col("__vn").alias("__nb"),
-    )
-    directed = (
-        pair_keys.join(va, "anchor").join(vb, "negative")
-        .select(
-            "anchor", "negative",
-            F.round(
-                dot(F.col("__va"), F.col("__vb"))
-                / (F.col("__na") * F.col("__nb")),
-                6,
-            ).alias("cos_sim"),
-        )
+    side = cells.select("id", "v", norm(F.col("v")).alias("n"))
+    directed = _rescore(pair_keys, "anchor", "negative", side, side).select(
+        "anchor", "negative", "cos_sim"
     )
     if exclude_eps is not None:
-        directed = directed.filter(
-            F.col("cos_sim") < F.lit(float(exclude_eps))
-        )
+        directed = directed.filter(F.col("cos_sim") < F.lit(eps_f))
     w = Window.partitionBy("anchor").orderBy(
         F.desc("cos_sim"), F.col("negative")
     )
@@ -929,128 +1023,74 @@ def cosine_pairs_above(
     counterpart to :func:`embedding_near_dups` (which buckets by LSH
     and only verifies within buckets).
 
-    Scale shape: the former expression form scored every |V|² pair
-    with the interpreted zip_with/aggregate cosine inside a
-    BroadcastNestedLoopJoin — the same per-PAIR megamorphic
-    interpreted-eval cliff r12 removed from knn_join/hard_negatives/
-    semdedup (measured 64 s at sf0.1 for 2000×64 vectors; executor
-    dumps show ArrayAggregate.eval dominating). Scoring is now one
-    numpy/C-BLAS matmul per corpus partition against a broadcast of
-    the full vector matrix; only pairs whose 6dp-rounded BLAS score
-    clears ``threshold − 2.5e-6`` (the knn_join margin proof: rounded
-    scores live on a 1e-6 grid and BLAS vs the JVM's sequential fold
-    differs by last-ulp, so the superset is guaranteed) — plus NaN
-    scores, which Spark's comparison ranks above every double exactly
-    as the former filter did — survive to a JVM re-score with the
-    SAME ``round(cosine(va, vb), 6)`` expression and the same
-    ``id_a < id_b`` comparison, so every returned row and double is
-    bit-identical to the former all-pairs join.
+    Scale shape: the vector table is collected and broadcast once
+    (ids + float64 vectors, like the BroadcastNestedLoopJoin this
+    form replaces — inherent to exact all-pairs; at corpus scale use
+    :func:`embedding_near_dups`). Each corpus partition then runs the
+    threshold mode of :func:`_margin_select` against it, and only the
+    margin survivors are re-scored by :func:`_rescore` with the same
+    ``round(cosine(va, vb), 6)`` and ``id_a < id_b`` comparison, so
+    every returned row and double is bit-identical to the all-pairs
+    join. NULL vectors or elements score NULL and drop out; NaN
+    elements score NaN, which passes the threshold as in Spark.
 
-    Bounds: like the BroadcastNestedLoopJoin it replaces, the vector
-    table is collected and broadcast once (ids + float64 vectors) —
-    inherent to the exact all-pairs form; at corpus scale use
-    :func:`embedding_near_dups`. The driver collect is GUARDED: past
-    ``CSP_SPARK_PAIRS_COLLECT_MAX_ELEMENTS`` (rows × dim doubles,
-    default 64M ≈ 0.5 GB) it raises instead of OOMing the driver —
-    the collect itself is row-capped, so an over-limit corpus never
-    materializes driver-side. Vectors must share one fixed dimension:
-    ragged lengths raise loudly (via the matrix build), where the
-    former join silently yielded NULL cosine and dropped the pair.
-    Duplicate ids are supported: margin selection is per id-pair and
-    the re-score joins every row back, reproducing the join's
-    multiplicity.
+    The driver collect is GUARDED: it streams partition by partition
+    and, past ``CSP_SPARK_PAIRS_COLLECT_MAX_ELEMENTS`` (rows x dim
+    doubles, default 64M ≈ 0.5 GB), raises instead of OOMing the
+    driver, never holding more than one partition past that budget.
+    A NULL id pairs with nothing. The source must be stable
+    between the collect and the candidate scan (both evaluate it).
+    Vectors must share one fixed dimension: ragged lengths raise
+    loudly. Duplicate ids are supported: the re-score joins every
+    row back, reproducing the join's multiplicity.
     """
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     base = embeddings.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).cast("array<double>").alias("v"),
-    ).filter(
-        # a NULL vector (or any NULL element) made the former join's
-        # cosine NULL, which fails every threshold — drop those rows up
-        # front so the output is unchanged and the matrix build is clean
-        F.col("v").isNotNull() & F.forall("v", lambda x: x.isNotNull())
     )
     id_type = base.schema["id"].dataType
-    out_schema = StructType([
-        StructField("id_a", id_type),
-        StructField("id_b", id_type),
-        StructField("cos_sim", DoubleType()),
-    ])
-    # Driver-collect guard (VERDICT r12 item 9, mirroring
-    # _collect_training): cap rows × dim, and cap the collect ITSELF
-    # with a row limit so the driver never pulls more than the guard
-    # allows even when the input is corpus-sized. Row order from the
-    # limit is irrelevant: candidate selection is a per-pair superset
-    # and the re-score join keys on ids, so the output set is
-    # order-independent.
-    first = base.select(F.size("v").alias("d")).first()
-    if first is None:
-        return embeddings.sparkSession.createDataFrame([], out_schema)
-    max_el = int(os.environ.get(
-        "CSP_SPARK_PAIRS_COLLECT_MAX_ELEMENTS", str(64 * 1024 * 1024)
-    ))
-    cap_rows = max(max_el // max(int(first["d"]), 1), 1)
-    rows = base.limit(cap_rows + 1).collect()
-    if len(rows) > cap_rows:
-        raise ValueError(
-            f"cosine_pairs_above: vector table exceeds {cap_rows} rows "
-            f"x {int(first['d'])} dims = {max_el} doubles, past the "
-            "driver-collect guard (env "
-            "CSP_SPARK_PAIRS_COLLECT_MAX_ELEMENTS). This is the "
-            "brute-force exact all-pairs form — at corpus scale use "
-            "embedding_near_dups (LSH-bucketed) instead."
-        )
-    import pandas as pd
-
-    mids = np.array([r["id"] for r in rows])
-    M = _vec_matrix(
-        pd.Series([list(r["v"]) if r["v"] is not None else None for r in rows]),
-        len(rows[0]["v"]), "cosine_pairs_above", vec_col,
+    _, bm = _broadcast_side(
+        base, "cosine_pairs_above",
+        "This is the brute-force exact all-pairs form — at corpus scale "
+        "use embedding_near_dups (LSH-bucketed) instead.",
     )
-    mn = np.linalg.norm(M, axis=1)
-    bm = embeddings.sparkSession.sparkContext.broadcast((mids, M, mn))
+    if bm is None:
+        return embeddings.sparkSession.createDataFrame([], StructType([
+            StructField("id_a", id_type),
+            StructField("id_b", id_type),
+            StructField("cos_sim", DoubleType()),
+        ]))
     thr = float(threshold)
-    margin = 2.5e-6  # see knn_join: strictly above the 2e-6 worst gap
-
-    cand_schema = StructType([
-        StructField("id_a", id_type),
-        StructField("id_b", id_type),
-    ])
 
     def _select_pairs(batches):
-        bmids, bM, bmn = bm.value
+        import pandas as pd
+
+        bids, bM, bnull = bm.value
         for pdf in batches:
             if pdf.empty:
                 continue
-            V = _vec_matrix(pdf["v"], bM.shape[1], "cosine_pairs_above", vec_col)
+            V, vnull = _side_matrix(pdf["v"], "cosine_pairs_above", vec_col,
+                                    bM.shape[1])
             vids = pdf["id"].to_numpy()
-            vn = np.linalg.norm(V, axis=1)
-            with np.errstate(invalid="ignore", divide="ignore"):
-                S = np.round((V @ bM.T) / np.outer(vn, bmn), 6)
-            mask = (S >= thr - margin) | np.isnan(S)
-            ii, jj = np.nonzero(mask)
-            if len(ii):
-                yield pd.DataFrame({"id_a": vids[ii], "id_b": bmids[jj]})
+            for ia, _, jid in _margin_select(
+                V, vnull, vids, [(bM, bnull, bids)], rounded=True,
+                threshold=thr, pairs="lt",
+            ):
+                yield pd.DataFrame({"id_a": vids[ia], "id_b": jid})
 
     cand = (
-        base.mapInPandas(_select_pairs, schema=cand_schema)
-        # one candidate per id PAIR (each unordered pair is seen from
-        # both orientations across partitions; dup-id multiplicity is
-        # reinstated by the row-level join-back below)
-        .filter(F.col("id_a") < F.col("id_b"))
+        base.mapInPandas(_select_pairs, schema=StructType([
+            StructField("id_a", id_type), StructField("id_b", id_type),
+        ]))
+        # one candidate per id PAIR; dup-id multiplicity is reinstated
+        # by the row-level join-back of the re-score
         .dropDuplicates(["id_a", "id_b"])
     )
-    # exact re-score: the SAME expressions, casts and comparison as the
-    # former all-pairs join, evaluated only on the margin survivors
+    side = F.broadcast(base)
     return (
-        cand.join(
-            F.broadcast(base.select(F.col("id").alias("id_a"),
-                                    F.col("v").alias("va"))), "id_a")
-        .join(
-            F.broadcast(base.select(F.col("id").alias("id_b"),
-                                    F.col("v").alias("vb"))), "id_b")
-        .withColumn("cos_sim", F.round(cosine(F.col("va"), F.col("vb")), 6))
+        _rescore(cand, "id_a", "id_b", side, side)
         .filter(F.col("cos_sim") >= F.lit(thr))
         .select("id_a", "id_b", "cos_sim")
     )
@@ -1078,233 +1118,118 @@ def knn_join(
     survivors (<= partitions x |Q| x k, independent of corpus size),
     selected map-side BEFORE the global per-query window. Never
     broadcast a large query side — flip the arguments and transpose
-    the result instead.
+    the result instead. The query collect is guarded like
+    :func:`cosine_pairs_above`'s (``CSP_SPARK_PAIRS_COLLECT_MAX_ELEMENTS``).
 
-    Scoring (both method values — the names are kept for call-site
-    compat): one Arrow pass SELECTS each partition's top-k candidates
-    against the whole query matrix with a numpy matmul (C-BLAS;
-    ~10-50x an interpreted zip_with/aggregate scorer's throughput at
-    large |C|x|Q|), keeping a 2.5e-6 safety margin around the k-th
-    score (strictly above the worst-case 2e-6 rounding gap, below the
-    next 1e-6 grid step); the surviving <= partitions x |Q| x k rows
-    are then RE-SCORED with JVM-side sequential zip_with/aggregate
-    sums — bit-reproducible by any engine replaying a sequential sum
-    (the DuckDB oracle). BLAS-vs-sequential summation differs by
-    last-ulp (<< the margin), so the exact top-k set provably survives
-    selection and the returned values are bit-identical to the former
-    all-pairs interpreted scorer, which r12 removed after executor
-    thread dumps showed its ZipWith/ArrayAggregate eval() dominating
-    (higher-order lambdas never enter whole-stage codegen, and their
-    megamorphic call sites degrade further in long sessions). (An
-    unrolled codegen sum was measured and rejected twice, r9 and r12:
-    64-dim element_at chains exceed Janino's 64KB method limit and
-    the compile latency exceeds the interpreted win.)
+    One scoring path: each corpus partition runs the top-k mode of
+    :func:`_margin_select` against the broadcast query matrix (C-BLAS,
+    ~10-50x an interpreted zip_with/aggregate scorer's throughput),
+    and the survivors are re-scored by :func:`_rescore` with
+    JVM-side sequential sums, so the returned doubles are
+    bit-identical to the all-pairs interpreted scorer and the DuckDB
+    oracle replays them. Ties rank by corpus id; NaN scores rank
+    first and NULL scores (NULL vectors, zero norms) last, as in a
+    Spark descending sort. ``method`` accepts ``"exact"`` (default)
+    and ``"blas"``, kept for call-site compatibility — both name this
+    path; anything else raises ``ValueError``. (An unrolled codegen
+    sum was measured and rejected twice: 64-dim element_at chains
+    exceed Janino's 64KB method limit and the compile latency exceeds
+    the interpreted win.)
     """
     from pyspark.sql import Window
-
-    q = queries.select(
-        F.col(query_id).alias("__qid"), F.col(query_vec).alias("__qv")
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import (
+        ArrayType, DoubleType, LongType, StructField, StructType,
     )
-    if method in ("blas", "exact"):
-        from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
 
-        sel_schema = StructType([
-            StructField("__qid", q.schema["__qid"].dataType),
-            StructField("__cid", corpus.schema[corpus_id].dataType),
-            StructField("__cv", ArrayType(DoubleType())),
-        ])
-        # Collect + broadcast the query side (small by the same
-        # contract that lets the exact path broadcast-join it).
-        qrows = q.collect()
-        if not qrows:  # (0,) qmat would break axis-1 norms / matmul
-            from pyspark.sql.types import IntegerType
-
-            empty = StructType([
-                StructField(query_id, q.schema["__qid"].dataType),
-                StructField(corpus_id, corpus.schema[corpus_id].dataType),
-                StructField("rank", IntegerType(), False),
-                StructField("cos_sim", DoubleType()),
-            ])
-            return corpus.sparkSession.createDataFrame([], empty)
-        qids = np.array([r["__qid"] for r in qrows])
-        qmat = np.array([list(r["__qv"]) for r in qrows], dtype=np.float64)
-        qnorm = np.linalg.norm(qmat, axis=1)
-        bq = corpus.sparkSession.sparkContext.broadcast((qids, qmat, qnorm))
-        # |blas_score - exact_score| is a few ulp (~1e-15); after both
-        # round to 6dp they differ by at most one 1e-6 step at a
-        # rounding boundary. The worst admissible gap is exactly 2e-6
-        # (kth-tie rounded one step down, kth blas score one step up),
-        # and `kth - margin` itself carries ~1 ulp of float error — so
-        # the margin must sit STRICTLY above 2e-6. Rounded scores live
-        # on a 1e-6 grid, so any margin in (2e-6, 3e-6) admits no extra
-        # survivors; 2.5e-6 keeps every member of the exact top-k
-        # (including kth-value ties) with zero recall or cost change.
-        margin = 2.5e-6
-
-        def _select_topk(batches):
-            import pandas as pd
-
-            bqids, bqmat, bqnorm = bq.value
-            pools: "list[pd.DataFrame]" = []
-            for pdf in batches:
-                if pdf.empty:  # (0,) array would break the matmul
-                    continue
-                C = _vec_matrix(pdf["__cv"], bqmat.shape[1],
-                                "knn_join", corpus_vec)
-                cids = pdf["__cid"].to_numpy()
-                cn = np.linalg.norm(C, axis=1)
-                s = np.round(
-                    (C @ bqmat.T) / np.outer(cn, bqnorm), 6
-                )  # |batch| x |Q|
-                for j in range(len(bqids)):
-                    idx = np.arange(len(cids))
-                    if exclude_self:
-                        idx = idx[cids != bqids[j]]
-                    ss = s[idx, j]
-                    if len(idx) > k:
-                        # kth over REAL scores only: a NaN kth (>= k
-                        # degenerate corpus rows) would fail every
-                        # comparison and silently drop the true top-k.
-                        # NaN-scored rows stay candidates — the exact
-                        # final window replays the JVM order (NaN
-                        # pairs rank first, zero-norm pairs NULL-last)
-                        nanm = np.isnan(ss)
-                        real = ss[~nanm]
-                        if len(real) > k:
-                            kth = np.partition(real, len(real) - k)[
-                                len(real) - k]
-                            keep = (ss >= kth - margin) | nanm
-                            idx, ss = idx[keep], ss[keep]
-                    pools.append(pd.DataFrame({
-                        "__qid": bqids[j],
-                        "__cid": cids[idx],
-                        "__cv": pdf["__cv"].iloc[idx].to_numpy(),
-                        "__blas": ss,
-                    }))
-            if pools:
-                pool = pd.concat(pools).sort_values(
-                    ["__qid", "__blas"], ascending=[True, False]
-                )
-
-                def _kth(g):
-                    # pandas sorts NaN last, so dropna keeps the real
-                    # scores in descending order; all-NaN groups keep
-                    # everything through the isna() arm below
-                    r = g.dropna()
-                    if r.empty:
-                        return -np.inf
-                    return r.iloc[min(k, len(r)) - 1]
-
-                kthv = pool.groupby("__qid", sort=False)["__blas"].transform(_kth)
-                yield pool.loc[
-                    (pool["__blas"] >= kthv - margin) | pool["__blas"].isna(),
-                    ["__qid", "__cid", "__cv"],
-                ]
-
-        cand = (
-            corpus.select(
-                F.col(corpus_id).alias("__cid"),
-                F.col(corpus_vec).cast("array<double>").alias("__cv"),
-            )
-            .mapInPandas(_select_topk, schema=sel_schema)
+    if method not in ("exact", "blas"):
+        raise ValueError(
+            f"knn_join: method must be 'exact' or 'blas', got {method!r}"
         )
-        # Exact re-score of the tiny survivor set with the SAME factor
-        # expressions (and evaluation order) as the exact path below,
-        # so every returned double is bit-identical to method="exact"
-        # and the same DuckDB oracle replays it. The query table is
-        # rebuilt from the rows already collected for the broadcast —
-        # no second scan of the query side's source.
-        qn = (
-            corpus.sparkSession.createDataFrame(qrows, schema=q.schema)
-            .select(
-                "__qid",
-                F.col("__qv").cast("array<double>").alias("__qv"),
-            )
-            .withColumn("__qn", norm(F.col("__qv")))
-        )
-        pruned = (
-            cand.withColumn("__cn", norm(F.col("__cv")))
-            .join(F.broadcast(qn), "__qid")
-            .select(
-                "__qid",
-                "__cid",
-                F.round(
-                    dot(F.col("__cv"), F.col("__qv"))
-                    / (F.col("__cn") * F.col("__qn")),
-                    6,
-                ).alias("cos_sim"),
-            )
-        )
-    else:
-        # Precompute each side's norm ONCE per row below the join
-        # (cosine() inline would recompute the corpus norm per query
-        # and the query norm per corpus row — |C|x|Q| redundant
-        # interpreted aggregates). Same factor expressions in the same
-        # (norm_c * norm_q) order, so every double is bit-identical to
-        # the inline form and the oracle comparison is unaffected.
-        qn = q.select(
-            "__qid",
-            F.col("__qv").cast("array<double>").alias("__qv"),
-        ).withColumn("__qn", norm(F.col("__qv")))
-        cn = corpus.select(
-            F.col(corpus_id).alias("__cid"),
-            F.col(corpus_vec).cast("array<double>").alias("__cv"),
-        ).withColumn("__cn", norm(F.col("__cv")))
-        scored = (
-            cn.join(F.broadcast(qn))
-            .select(
-                "__qid",
-                "__cid",
-                F.round(
-                    dot(F.col("__cv"), F.col("__qv"))
-                    / (F.col("__cn") * F.col("__qn")),
-                    6,
-                ).alias("cos_sim"),
-            )
-        )
-        if exclude_self:
-            scored = scored.filter(F.col("__qid") != F.col("__cid"))
+    q = queries.select(
+        F.col(query_id).alias("id"),
+        F.col(query_vec).cast("array<double>").alias("v"),
+    )
+    qrows, bq = _broadcast_side(
+        q, "knn_join",
+        "knn_join broadcasts its query side — pass the smaller side as "
+        "queries (flip the arguments and transpose the result).",
+    )
+    if bq is None:
+        from pyspark.sql.types import IntegerType
 
-        # local pre-top-k WITHOUT shuffling the |C|x|Q| scored set: a
-        # mapInPandas pass keeps a running top-k per query within each
-        # corpus partition (selection only — every similarity was
-        # already computed and rounded JVM-side, so no float math
-        # crosses the Arrow boundary and the oracle stays bit-exact).
-        def _local_topk(batches):
-            import pandas as pd
+        return corpus.sparkSession.createDataFrame([], StructType([
+            StructField(query_id, q.schema["id"].dataType),
+            StructField(corpus_id, corpus.schema[corpus_id].dataType),
+            StructField("rank", IntegerType(), False),
+            StructField("cos_sim", DoubleType()),
+        ]))
+    kk = int(k)
+    cid_type = to_arrow_type(corpus.schema[corpus_id].dataType)
 
-            best: "pd.DataFrame | None" = None
-            for pdf in batches:
-                pool = pdf if best is None else pd.concat((best, pdf))
-                pool = pool.sort_values(
-                    ["__qid", "cos_sim", "__cid"], ascending=[True, False, True]
-                )
-                best = pool.groupby("__qid", sort=False).head(k)
-            if best is not None:
-                yield best
+    def _select_topk(batches):
+        import pyarrow as pa
+        import pyarrow.compute as pc
 
-        # Degenerate scores NEVER enter the Python pruner (r13, the
-        # ADVICE fix): pandas sorts NaN last so head(k) dropped rows the
-        # final desc window ranks FIRST — and the Arrow boundary itself
-        # rewrites JVM NaN to NULL (pandas NaN -> Arrow null), flipping
-        # a rank-1 row to rank-last. NaN/NULL cos_sim rows (zero-norm or
-        # NaN-element vectors only; real corpora carry none) bypass the
-        # pruner JVM-side, so their exact values reach the final window
-        # untouched. The scoring projection is map-side over the corpus
-        # scan, so the split costs a second pass of this fallback path
-        # only, never a shuffle.
-        degen = F.col("cos_sim").isNull() | F.isnan("cos_sim")
-        pruned = (
-            scored.filter(~degen)
-            .mapInPandas(_local_topk, schema=scored.schema)
-            .unionByName(scored.filter(degen))
-        )
-    final = Window.partitionBy("__qid").orderBy(F.desc("cos_sim"), F.col("__cid"))
+        bqids, bQ, bqnull = bq.value
+
+        def blocks():
+            for b in batches:
+                if b.num_rows:
+                    # NULL ids stay None: a float64 cast would lose them
+                    # (and ids past 2^53)
+                    pdf = b.to_pandas(integer_object_nulls=True)
+                    vals = pdf["__va"].to_numpy()
+                    flat = b.column("__va").flatten()
+                    if flat.null_count:
+                        # a NULL element reaches pandas as NaN; the JVM
+                        # scores its vector NULL, so re-score it as one
+                        holes = pc.list_parent_indices(b.column("__va"))
+                        vals = vals.copy()
+                        vals[np.asarray(holes)[np.asarray(flat.is_null())]] = None
+                    yield (*_side_matrix(pdf["__va"], "knn_join", corpus_vec,
+                                         bQ.shape[1]),
+                           pdf["__cid"].to_numpy(), vals)
+
+        for ia, _, cids, cvs in _margin_select(
+            bQ, bqnull, bqids, blocks(), rounded=True, k=kk,
+            pairs="ne" if exclude_self else None,
+        ):
+            # built in Arrow, not pandas: pandas -> Arrow would turn the
+            # NaN elements the re-score must see into NULLs
+            yield pa.RecordBatch.from_arrays([
+                pa.array(ia, pa.int64()),
+                pa.array(cids, cid_type, from_pandas=True),
+                pa.array(list(cvs), pa.list_(pa.float64()), from_pandas=False),
+            ], names=["__qrow", "__cid", "__va"])
+
+    cand = corpus.select(
+        F.col(corpus_id).alias("__cid"),
+        F.col(corpus_vec).cast("array<double>").alias("__va"),
+    ).mapInArrow(_select_topk, schema=StructType([
+        StructField("__qrow", LongType()),
+        StructField("__cid", corpus.schema[corpus_id].dataType),
+        StructField("__va", ArrayType(DoubleType())),
+    ]))
+    # the query side of the re-score is rebuilt from the rows already
+    # collected for the broadcast — no second scan of its source — and
+    # joined back on the query's ROW, so duplicate query ids stay apart
+    qside = corpus.sparkSession.createDataFrame(
+        [(i, r["id"], r["v"]) for i, r in enumerate(qrows)],
+        schema=StructType([
+            StructField("id", LongType()),
+            StructField("__qid", q.schema["id"].dataType),
+            StructField("v", ArrayType(DoubleType())),
+        ]),
+    ).withColumn("n", norm(F.col("v")))
+    scored = _rescore(cand, "__cid", "__qrow", side_b=F.broadcast(qside))
+    final = Window.partitionBy("__qid_b").orderBy(
+        F.desc("cos_sim"), F.col("__cid"))
     return (
-        pruned.withColumn("rank", F.row_number().over(final))
+        scored.withColumn("rank", F.row_number().over(final))
         .filter(F.col("rank") <= k)
         .select(
-            F.col("__qid").alias(query_id),
+            F.col("__qid_b").alias(query_id),
             F.col("__cid").alias(corpus_id),
             "rank",
             "cos_sim",

@@ -57,7 +57,7 @@ def main() -> None:
         clean.select("doc_id", "text"), incoming.select("doc_id", "text"),
         pair_fn=lambda d: minhash_lsh_pairs(
             d, shingle_k=5, use_words=True, threshold=0.5,
-            num_hashes=48, bands=12, use_cache=False),
+            num_hashes=48, bands=12),
     )
     n_kept = kept.count()
     print(f"incremental: {incoming.count()} incoming -> {n_kept} kept")

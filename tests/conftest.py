@@ -44,197 +44,19 @@ def load_module(path, name):
 
 
 # ---------------------------------------------------------------------------
-# Slow-tier deselection (r13, VERDICT r12 item 2): the full suite grew to
-# ~40 min and the DRIVER's verification run was cut off at ~402/432 in r12
-# (tests_ok=false with zero failure markers — a time-budget problem).
-# The default profile deselects the duration-measured slow tier (every
-# test >= 3 s in the r13 full-run durations capture; endurance, fuzz,
-# verbatim-example and stream-matches-batch classes), keeping the default
-# `python -m pytest tests/ -x -q` well under the driver's budget.
-#
-# Run EVERYTHING (done locally each round before shipping):
+# Slow tier: tests marked ``@pytest.mark.slow`` (or parametrized cases
+# wrapped in ``pytest.param(..., marks=pytest.mark.slow)``) are
+# deselected by default — each took >= 3 s in a full-run durations
+# capture (endurance, fuzz, verbatim-example and stream-matches-batch
+# classes). Run everything with:
 #     CSP_SPARK_RUN_SLOW=1 python -m pytest tests/ -q
-#
-# New tests are FAST-tier by default (unlisted) — the gate only slows
-# down when a test is deliberately added here.
-_SLOW = {
-    "test_streaming.py::test_streaming_state_stays_bounded",  # 231.1s
-    "test_properties.py::test_streaming_alarms_fuzz_match_batch",  # 120.1s
-    "test_pipeline_ops.py::test_multimodal_stub_pipeline",  # 85.6s
-    "test_reference_verbatim.py::test_reference_nand_computer_verbatim",  # 78.8s
-    "test_streaming.py::test_alarm_handover_review_fixes",  # 57.5s
-    "test_streaming.py::test_run_node_stream_alarms_survive_checkpoint_restart",  # 52.3s
-    "test_examples.py::test_example_runs[14_streaming_alarms]",  # 51.9s
-    "test_pipeline_ops.py::test_cosine_pairs_above_matches_join_form",  # 40.0s
-    "test_pipeline_ops.py::test_simhash_block_combination_tables",  # 37.3s
-    "test_streaming.py::test_incremental_dedup_stream_matches_batch_loop",  # 36.0s
-    "test_streaming.py::test_alarm_handover_idle_key_fires",  # 30.6s
-    "test_streaming.py::test_alarm_handover_replay_to_live",  # 29.0s
-    "test_streaming.py::test_run_node_stream_alarm_cap_is_per_wake",  # 28.3s
-    "test_streaming.py::test_run_node_stream_matches_batch",  # 27.6s
-    "test_properties.py::test_knn_join_blas_bit_identical_to_exact",  # 27.6s
-    "test_streaming.py::test_run_node_stream_alarms_match_batch",  # 26.9s
-    "test_streaming.py::test_hybrid_align_equals_pure_batch",  # 25.2s
-    "test_pipeline_ops.py::test_embedding_near_dups_self",  # 23.7s
-    "test_streaming.py::test_align_stream_matches_batch",  # 21.9s
-    "test_streaming.py::test_hybrid_ema_equals_pure_batch",  # 21.9s
-    "test_examples.py::test_example_runs[04_curation_pipeline]",  # 20.5s
-    "test_properties.py::test_sync_dict_trigger_windows_match_replay",  # 19.6s
-    "test_pipeline_ops.py::test_semdedup_degenerate_matches_jvm[edge]",  # 19.4s
-    "test_streaming.py::test_watermark_drops_late_data",  # 19.4s
-    "test_examples.py::test_example_runs[02_dedup_pipeline]",  # 18.3s
-    "test_properties.py::test_pending_row_manager_timeslices_fuzz",  # 18.0s
-    "test_pipeline_ops.py::test_composed_curation_plan_pin",  # 17.9s
-    "test_properties.py::test_split_partitions_stream",  # 17.3s
-    "test_properties.py::test_pq_codes_select_nearest_center",  # 17.3s
-    "test_properties.py::test_filter_and_split_match_replay",  # 17.2s
-    "test_properties.py::test_multiplex_demultiplex_collect_match_replay",  # 16.8s
-    "test_pipeline_ops.py::test_minhash_degenerate_bucket_capped",  # 16.6s
-    "test_reference_verbatim.py::test_reference_pandas_extension_example_flow",  # 16.5s
-    "test_streaming.py::test_session_bars_stream_matches_batch",  # 16.4s
-    "test_streaming.py::test_incremental_dedup_batch_retry_idempotent",  # 16.2s
-    "test_pipeline_ops.py::test_semdedup_degenerate_matches_jvm[min_id]",  # 16.0s
-    "test_streaming.py::test_hybrid_node_equals_pure_batch",  # 15.5s
-    "test_properties.py::test_sync_dict_threshold_windows_match_replay",  # 15.4s
-    "test_runtime.py::test_windowed_unkeyed_matches_global_window",  # 15.1s
-    "test_pipeline_ops.py::test_winnow_doubling_matches_bruteforce",  # 15.0s
-    "test_properties.py::test_diff_tick_and_time_lag_match_replay",  # 14.9s
-    "test_streaming.py::test_publish_websocket_stream",  # 14.8s
-    "test_pipeline_ops.py::test_dsir_hashed_buckets_agree_and_select",  # 14.4s
-    "test_properties.py::test_struct_fromts_matches_cycle_replay",  # 14.1s
-    "test_runtime.py::test_running_hot_keys_matches_plain_keyed_window",  # 14.1s
-    "test_properties.py::test_rolling_trigger_reset_matches_cycle_replay",  # 13.7s
-    "test_streaming.py::test_dedup_stream",  # 13.7s
-    "test_streaming.py::test_run_node_stream_state_factory",  # 13.6s
-    "test_pipeline_ops.py::test_hard_negatives",  # 13.1s
-    "test_examples.py::test_example_runs[10_reference_verbatim]",  # 13.1s
-    "test_streaming.py::test_hybrid_rolling_equals_pure_batch",  # 12.6s
-    "test_properties.py::test_struct_collectts_matches_cycle_replay",  # 12.4s
-    "test_properties.py::test_rolling_sampler_matches_cycle_replay",  # 12.3s
-    "test_reference_verbatim.py::test_reference_adaptermanager_pushinput_verbatim",  # 11.5s
-    "test_properties.py::test_sample_asof_matches_cycle_replay",  # 11.4s
-    "test_pipeline_ops.py::test_ivf_topk_recall",  # 10.7s
-    "test_examples.py::test_example_runs[05_hybrid_replay_live]",  # 10.5s
-    "test_properties.py::test_rolling_time_window_nan_poisoning_matches_cycle_replay",  # 10.5s
-    "test_stats.py::test_functional_stats_surface",  # 10.3s
-    "test_properties.py::test_burst_last_value_flatten_match_replay",  # 10.3s
-    "test_baselib.py::test_exprtk_full_surface",  # 10.1s
-    "test_runtime.py::test_windowed_hot_keys_matches_plain_keyed_window",  # 10.0s
-    "test_reference_verbatim.py::test_reference_adapter_manager_verbatim",  # 9.5s
-    "test_runtime.py::test_running_unkeyed_matches_global_window",  # 9.4s
-    "test_pipeline_ops.py::test_incremental_dedup",  # 9.4s
-    "test_properties.py::test_values_times_at_policies_match_python_replay",  # 9.3s
-    "test_properties.py::test_binary_op_validity_gating_matches_cycle_replay",  # 9.3s
-    "test_baselib.py::test_review_fixes_round4",  # 9.3s
-    "test_pipeline_ops.py::test_minhash_lsh_finds_near_dups",  # 9.2s
-    "test_reference_verbatim.py::test_reference_dynamic_verbatim",  # 9.2s
-    "test_examples.py::test_example_runs[08_ann_retrieval]",  # 9.1s
-    "test_reference_verbatim.py::test_reference_e4_trade_pnl_verbatim",  # 9.1s
-    "test_pipeline_ops.py::test_minhash_cap_keeps_outside_pairs",  # 9.1s
-    "test_properties.py::test_run_node_cumsum_equals_accum",  # 8.8s
-    "test_reference_verbatim.py::test_reference_websocket_output_verbatim",  # 8.7s
-    "test_pipeline_ops.py::test_winnow_fingerprints",  # 8.7s
-    "test_pipeline_ops.py::test_pq_adc_matches_reconstruction_and_recall",  # 8.6s
-    "test_pipeline_ops.py::test_connected_components_local_equals_distributed",  # 8.2s
-    "test_examples.py::test_example_runs[09_imperative_nodes]",  # 8.1s
-    "test_properties.py::test_merge_left_wins_matches_replay",  # 7.8s
-    "test_properties.py::test_gate_matches_replay",  # 7.5s
-    "test_examples.py::test_example_runs[07_reference_api_tour]",  # 7.5s
-    "test_pipeline_ops.py::test_repeated_spans",  # 7.4s
-    "test_properties.py::test_windowed_unkeyed_equals_bruteforce",  # 7.3s
-    "test_pandas_ext.py::test_csp_perspective_table",  # 7.2s
-    "test_pandas_ext.py::test_series_accessor_apply_run_snap",  # 7.1s
-    "test_properties.py::test_hamming_pairs_exact_recall",  # 6.8s
-    "test_properties.py::test_delay_ticks_and_timedelta_match_replay",  # 6.8s
-    "test_runtime.py::test_windowed_unkeyed_time_boundary_ties",  # 6.7s
-    "test_pipeline_ops.py::test_semdedup_clustered",  # 6.6s
-    "test_properties.py::test_run_node_alarm_fires_iff_gap_exceeds_timeout",  # 6.6s
-    "test_reference_verbatim.py::test_reference_kafka_example_shape_seam",  # 6.6s
-    "test_pipeline_ops.py::test_windowed_unkeyed_overflow_raises",  # 6.5s
-    "test_pipeline_ops.py::test_bucketed_tables_eliminate_join_shuffle",  # 6.3s
-    "test_properties.py::test_drop_dups_idempotent",  # 6.1s
-    "test_properties.py::test_alarm_schedule_cancel_matches_replay",  # 6.1s
-    "test_baselib.py::test_spread_readme_slice",  # 6.0s
-    "test_pipeline_ops.py::test_lm_scores",  # 6.0s
-    "test_io_and_sources.py::test_parquet_writer_named_columns_keyed",  # 6.0s
-    "test_frame.py::test_to_pandas_ts_tindex",  # 6.0s
-    "test_baselib.py::test_edge_dunder_compare_and_unary",  # 5.9s
-    "test_reference_verbatim.py::test_reference_adaptermanager_inputoutput_verbatim",  # 5.8s
-    "test_streaming.py::test_websocket_adapter_manager_in_realtime_run",  # 5.7s
-    "test_reference_verbatim.py::test_reference_e3_numpy_stats_verbatim",  # 5.7s
-    "test_streaming.py::test_run_node_stream_alarm_raises",  # 5.6s
-    "test_properties.py::test_partitioned_jdbc_tie_order_fuzz",  # 5.6s
-    "test_streaming.py::test_ema_stream_matches_batch",  # 5.5s
-    "test_reference_verbatim.py::test_reference_feedback_verbatim",  # 5.3s
-    "test_pandas_ext.py::test_dataframe_accessor_run_snap",  # 5.2s
-    "test_properties.py::test_merge_left_wins_on_ties",  # 5.1s
-    "test_stats.py::test_ema_horizon_is_windowed_not_truncated",  # 5.1s
-    "test_surface.py::test_make_passive_and_engine_services",  # 5.0s
-    "test_pipeline_ops.py::test_semdedup_degenerate_cell_cap",  # 5.0s
-    "test_pipeline_ops.py::test_pq_encode_expr_matches_arrow_encode",  # 5.0s
-    "test_examples.py::test_example_runs[12_incremental_refresh]",  # 5.0s
-    "test_streaming.py::test_rolling_tick_stats_stream_matches_batch",  # 4.8s
-    "test_stats.py::test_first_last_unique_rank_argminmax",  # 4.8s
-    "test_examples.py::test_example_runs[03_realtime]",  # 4.8s
-    "test_pipeline_ops.py::test_quality_classifier_scores",  # 4.7s
-    "test_examples.py::test_example_runs[06_pandas_edges]",  # 4.7s
-    "test_pipeline_ops.py::test_hamming_pairs_degenerate_bucket_capped",  # 4.7s
-    "test_reference_verbatim.py::test_reference_math_module_surface",  # 4.7s
-    "test_reference_verbatim.py::test_reference_e2_stats_verbatim",  # 4.7s
-    "test_pipeline_ops.py::test_saved_pq_index_roundtrip",  # 4.7s
-    "test_streaming.py::test_ohlc_bars_stream_matches_batch",  # 4.6s
-    "test_history.py::test_values_at_extrapolate_pad",  # 4.6s
-    "test_streaming.py::test_run_node_stream_watermark_applies_without_alarms",  # 4.6s
-    "test_reference_verbatim.py::test_reference_e4_exprtk_verbatim",  # 4.6s
-    "test_pipeline_ops.py::test_simhash",  # 4.6s
-    "test_baselib.py::test_edge_pipe_apply",  # 4.5s
-    "test_frame.py::test_to_pandas_ts_duplicate_trigger_timestamps",  # 4.5s
-    "test_baselib.py::test_exprtk_output_ndarray",  # 4.5s
-    "test_properties.py::test_repeated_spans_equals_bruteforce",  # 4.5s
-    "test_io_and_sources.py::test_sync_list_and_trigger",  # 4.4s
-    "test_frame.py::test_to_pandas_ts_count_window",  # 4.4s
-    "test_properties.py::test_drop_dups_eps_nan_matches_replay",  # 4.4s
-    "test_history.py::test_value_at_times",  # 4.4s
-    "test_pipeline_ops.py::test_term_stats_and_tfidf",  # 4.4s
-    "test_pipeline_ops.py::test_saved_ivf_index_prunes_partitions",  # 4.3s
-    "test_baselib.py::test_log_settings_and_schedule_on_engine_stop",  # 4.3s
-    "test_reference_verbatim.py::test_reference_readme_spread_verbatim",  # 4.1s
-    "test_pipeline_ops.py::test_dsir_tiebreak_on_duplicate_text",  # 4.1s
-    "test_record.py::test_fromts_with_defaults",  # 4.0s
-    "test_pipeline_ops.py::test_png_decode_golden",  # 4.0s
-    "test_surface.py::test_add_graph_output_and_build_graph",  # 3.9s
-    "test_baselib.py::test_curve_input_forms",  # 3.8s
-    "test_baselib.py::test_delayed_demultiplex_by_key_column",  # 3.8s
-    "test_pipeline_ops.py::test_ivf_assign_incremental_append",  # 3.8s
-    "test_pipeline_ops.py::test_bpe_train_and_apply",  # 3.8s
-    "test_properties.py::test_feedback_scan_equals_python_fold",  # 3.7s
-    "test_streaming.py::test_pushpull_live_seq_after_history_seq",  # 3.7s
-    "test_pipeline_ops.py::test_knn_join_blas_matches_exact",  # 3.6s
-    "test_properties.py::test_kafka_field_map_roundtrip_fuzz",  # 3.6s
-    "test_pipeline_ops.py::test_dsir_weights_match_numpy",  # 3.6s
-    "test_surface.py::test_feedback_bind_then_out",  # 3.6s
-    "test_properties.py::test_diff_of_accum_recovers_values",  # 3.5s
-    "test_pipeline_ops.py::test_decontaminate_ngram_overlap",  # 3.5s
-    "test_history.py::test_values_and_times_at",  # 3.5s
-    "test_io_and_sources.py::test_csv_db_runtime_impl_halves",  # 3.5s
-    "test_examples.py::test_example_runs[11_live_table]",  # 3.5s
-    "test_reference_verbatim.py::test_reference_profiling_verbatim",  # 3.4s
-    "test_history.py::test_time_at",  # 3.4s
-    "test_streaming.py::test_pushpull_adapter_replay_then_live",  # 3.3s
-    "test_pipeline_ops.py::test_new_op_plan_shapes",  # 3.3s
-    "test_baselib.py::test_asof_join_directions_match_pandas",  # 3.3s
-    "test_pipeline_ops.py::test_knn_join_degenerate_zero_corpus_rows",  # 3.3s
-    "test_reference_verbatim.py::test_reference_sync_list_internal",  # 3.2s
-    "test_properties.py::test_ohlc_bars_match_cycle_replay",  # 3.2s
-    "test_properties.py::test_unroll_of_burst_preserves_multiset",  # 3.1s
-    "test_baselib.py::test_delay_diff_accum_count_firstN",  # 3.1s
-    "test_pipeline_ops.py::test_image_phash_near_dups",  # 3.1s
-    "test_properties.py::test_unroll_matches_replay",  # 3.1s
-    "test_examples.py::test_example_runs[13_class_adapters]",  # 3.1s
-    "test_properties.py::test_firstn_counts",  # 3.1s
-    "test_properties.py::test_sessionize_matches_pure_python",  # 3.1s
-    "test_frame.py::test_to_spark_ts_long_form",  # 3.0s
-}
+
+
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers",
+        "slow: deselected unless CSP_SPARK_RUN_SLOW=1 (>= 3 s per test)",
+    )
 
 
 def pytest_collection_modifyitems(config, items):
@@ -244,12 +66,7 @@ def pytest_collection_modifyitems(config, items):
         return
     keep, dropped = [], []
     for item in items:
-        # nodeid like "tests/test_x.py::test_y[param]" — match on the
-        # file::name form used in the _SLOW capture
-        nid = item.nodeid
-        if nid.startswith("tests/"):
-            nid = nid[len("tests/"):]
-        (dropped if nid in _SLOW else keep).append(item)
+        (dropped if item.get_closest_marker("slow") else keep).append(item)
     if dropped:
         config.hook.pytest_deselected(items=dropped)
         items[:] = keep

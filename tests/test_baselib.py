@@ -18,6 +18,7 @@ def t(s):
     return START + TD(seconds=s)
 
 
+@pytest.mark.slow
 def test_spread_readme_slice(spark):
     # reference README.md:25-47 bid/ask spread with valid-gating
     bid = bl.curve(spark, [(t(0.5), 99.0), (t(1.5), 99.1)])
@@ -44,6 +45,7 @@ def test_merge_left_wins_on_tie(spark):
     assert bl.merge(a, b).collect_ticks() == [(t(0), 1.0), (t(1), 11.0), (t(2), 2.0)]
 
 
+@pytest.mark.slow
 def test_delay_diff_accum_count_firstN(spark):
     x = bl.curve(spark, [(t(i), float(i * i)) for i in range(5)])
     assert bl.delay(x, TD(seconds=10)).collect_ticks()[0] == (t(10), 0.0)
@@ -168,6 +170,7 @@ def test_edge_dunder_math_valid_gating(spark):
     assert [round(x[1], 9) for x in got] == [99.5, 99.55, 99.65]
 
 
+@pytest.mark.slow
 def test_edge_dunder_compare_and_unary(spark):
     x = bl.curve(spark, [(t(i), float(i)) for i in range(1, 4)])
     flags = (x >= 2.0).collect_ticks()
@@ -178,6 +181,7 @@ def test_edge_dunder_compare_and_unary(spark):
     assert [v for _, v in (10.0 - x).collect_ticks()] == [9.0, 8.0, 7.0]
 
 
+@pytest.mark.slow
 def test_edge_pipe_apply(spark):
     x = bl.curve(spark, [(t(1), 2.0), (t(2), 3.0)])
     assert x.pipe(bl.count).collect_ticks() == [(t(1), 1), (t(2), 2)]
@@ -200,6 +204,7 @@ def test_dynamic_collect(spark):
     ]
 
 
+@pytest.mark.slow
 def test_exprtk_full_surface(spark):
     """csp.exprtk parity (reference test_baselib.py exprtk tests):
     constants, inline functions, trigger sampling, state vars."""
@@ -238,6 +243,7 @@ def test_exprtk_full_surface(spark):
     assert vals == exp
 
 
+@pytest.mark.slow
 def test_exprtk_output_ndarray(spark):
     """output_ndarray=True (reference baselib.py:665): 'return [..]'
     ticks a vector — codegen F.array when stateless, list output on
@@ -312,6 +318,7 @@ def test_delayed_collect(spark):
     assert got == [(t(1), [1.0, 2.0]), (t(3), [3.0])]
 
 
+@pytest.mark.slow
 def test_delayed_demultiplex_by_key_column(spark):
     a = bl.curve(spark, [(t(1), 1.0), (t(2), 2.0)], key="k1")
     b = bl.curve(spark, [(t(1.5), 5.0)], key="k2")
@@ -329,6 +336,7 @@ def test_delayed_demultiplex_by_key_stream(spark):
     assert dd.demultiplex("b").collect_ticks() == [(t(2), 2.0), (t(3), 3.0)]
 
 
+@pytest.mark.slow
 def test_log_settings_and_schedule_on_engine_stop(spark, caplog):
     import logging
 
@@ -379,6 +387,7 @@ def test_ticked_valid_now_over_align(spark):
     assert all(r.now_ok for r in rows)
 
 
+@pytest.mark.slow
 def test_curve_input_forms(spark):
     """curve accepts datetime tuples, timedelta tuples (+start), and
     the numpy pair fast path (reference csp/curve.py:16-65, _npcurve)."""
@@ -400,6 +409,7 @@ def test_curve_input_forms(spark):
         bl.curve(spark, [(TD(seconds=1), 1.0)])
 
 
+@pytest.mark.slow
 def test_asof_join_directions_match_pandas(spark):
     """asof_join's backward/forward/nearest (+tolerance) reproduce
     pandas.merge_asof row-for-row, including exact-tie resolution."""
@@ -458,6 +468,7 @@ def test_asof_join_directions_match_pandas(spark):
         asof_join(sl, sr, on=["k"], direction="sideways")
 
 
+@pytest.mark.slow
 def test_review_fixes_round4(spark):
     """Regressions for the round-4 core review findings: from_table
     coincident-tick seq derivation, gate release_on_tick, timedelta

@@ -9,19 +9,19 @@ from tests.conftest import load_module
 
 EXAMPLES = [
     "01_spread",
-    "02_dedup_pipeline",
-    "03_realtime",
-    "04_curation_pipeline",
-    "05_hybrid_replay_live",
-    "06_pandas_edges",
-    "07_reference_api_tour",
-    "08_ann_retrieval",
-    "09_imperative_nodes",
-    "10_reference_verbatim",
-    "11_live_table",
-    "12_incremental_refresh",
-    "13_class_adapters",
-    "14_streaming_alarms",
+    pytest.param("02_dedup_pipeline", marks=pytest.mark.slow),
+    pytest.param("03_realtime", marks=pytest.mark.slow),
+    pytest.param("04_curation_pipeline", marks=pytest.mark.slow),
+    pytest.param("05_hybrid_replay_live", marks=pytest.mark.slow),
+    pytest.param("06_pandas_edges", marks=pytest.mark.slow),
+    pytest.param("07_reference_api_tour", marks=pytest.mark.slow),
+    pytest.param("08_ann_retrieval", marks=pytest.mark.slow),
+    pytest.param("09_imperative_nodes", marks=pytest.mark.slow),
+    pytest.param("10_reference_verbatim", marks=pytest.mark.slow),
+    pytest.param("11_live_table", marks=pytest.mark.slow),
+    pytest.param("12_incremental_refresh", marks=pytest.mark.slow),
+    pytest.param("13_class_adapters", marks=pytest.mark.slow),
+    pytest.param("14_streaming_alarms", marks=pytest.mark.slow),
 ]
 
 

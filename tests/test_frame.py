@@ -81,6 +81,7 @@ def test_to_spark_last_value(frame):
 # tick, each holding the windowed buffers of every column.
 
 
+@pytest.mark.slow
 def test_to_pandas_ts_count_window(frame, spark):
     trig = bl.curve(spark, [(t(1.6), 1.0), (t(3), 2.0)])
     out = frame.to_pandas_ts(trig, window=2)
@@ -127,6 +128,7 @@ def test_to_pandas_ts_empty_frame(frame, spark):
     assert len(f) == 0 and list(f.columns) == ["bid", "ask"]
 
 
+@pytest.mark.slow
 def test_to_pandas_ts_duplicate_trigger_timestamps(frame, spark):
     # two trigger ticks at the SAME timestamp (distinct engine cycles)
     # must stay two Series entries — the reference pandas Series keeps
@@ -139,6 +141,7 @@ def test_to_pandas_ts_duplicate_trigger_timestamps(frame, spark):
     assert list(out.iloc[0].index) == [t(1), t(1.5)]
 
 
+@pytest.mark.slow
 def test_to_pandas_ts_tindex(frame, spark):
     # tindex aligns every column on the sampling clock: frames share
     # one index = tindex ticks (after all-valid), last-value sampled
@@ -151,6 +154,7 @@ def test_to_pandas_ts_tindex(frame, spark):
     assert f["ask"].tolist() == [100.0, 100.0, 100.2]
 
 
+@pytest.mark.slow
 def test_to_spark_ts_long_form(frame, spark):
     trig = bl.curve(spark, [(t(3), 1.0)])
     rows = frame.to_spark_ts(trig, window=2).orderBy("ts", "seq").collect()

@@ -40,6 +40,7 @@ def test_value_at_indices(buf):
     assert last(H.value_at(buf, -4, default=-1.0)) == -1.0
 
 
+@pytest.mark.slow
 def test_value_at_times(buf):
     # half a minute before 180s → last tick ≤ 150s is (60s, seq1, 2.0)
     assert last(H.value_at(buf, TD(seconds=-30))) == 2.0
@@ -52,6 +53,7 @@ def test_value_at_times(buf):
     assert got[0][1] == -7.0
 
 
+@pytest.mark.slow
 def test_time_at(buf):
     assert last(H.time_at(buf)) == t(180)
     assert last(H.time_at(buf, -1)) == t(60)
@@ -68,6 +70,7 @@ def test_item_at(buf):
     assert (it["ts"], it["value"]) == (t(60), 2.0)
 
 
+@pytest.mark.slow
 def test_values_and_times_at(buf):
     assert last(H.values_at(buf)) == [0.0, 1.0, 2.0, 3.0]
     assert last(H.values_at(buf, -3, -1)) == [0.0, 1.0, 2.0]
@@ -181,6 +184,7 @@ def test_values_at_extrapolate_carry(xbuf):
     assert ts == [t(6), t(10)]
 
 
+@pytest.mark.slow
 def test_values_at_extrapolate_pad(xbuf):
     # window [7s, 8s] at t=10: nothing in range; carry = 3.0 (t=3),
     # end pad duplicates it; timestamps clamp to both boundaries

@@ -67,6 +67,7 @@ def test_sync_complete_buckets(spark):
     assert out2.df.count() == 2
 
 
+@pytest.mark.slow
 def test_sync_list_and_trigger(spark):
     from csp_spark.operators.basketlib import sync_list
 
@@ -307,6 +308,7 @@ def test_parquet_reader_writer_classes(spark, tmp_path):
     assert tbl.num_rows == 5
 
 
+@pytest.mark.slow
 def test_parquet_writer_named_columns_keyed(spark, tmp_path):
     """Named-column publish of KEYED streams: coincident (ts, seq)
     cycles on different keys must stay separate rows — the flush join
@@ -1580,6 +1582,7 @@ def test_dbreader_partitioned_jdbc_read(spark, tmp_path):
                  num_partitions=2, lower_bound=dt.datetime(2020, 1, 1))
 
 
+@pytest.mark.slow
 def test_csv_db_runtime_impl_halves(spark, tmp_path):
     """r11: the managed-sim runtime halves (reference csv.py:49-113,
     db.py:312-440) — CSVReadAdapter/DBReadAdapter subscriptions driven

@@ -51,6 +51,7 @@ def test_series_of_edges_dunder_broadcast(spark, edges):
     assert list(got.loc["a"].index) == [t(0), t(2)]
 
 
+@pytest.mark.slow
 def test_series_accessor_apply_run_snap(spark, edges):
     a, b = edges
     s = pd.Series(TsArray([a, b]), index=["a", "b"], name="px")
@@ -78,6 +79,7 @@ def test_to_csp_lifts_series(spark):
         pd.Series([1.0], index=["x"]).to_csp(spark)
 
 
+@pytest.mark.slow
 def test_dataframe_accessor_run_snap(spark, edges):
     a, b = edges
     df = pd.DataFrame({
@@ -96,6 +98,7 @@ def test_dataframe_accessor_run_snap(spark, edges):
     assert list(snap["static"]) == [1, 2]  # non-ts columns untouched
 
 
+@pytest.mark.slow
 def test_csp_perspective_table(spark, edges):
     """CspPerspectiveTable (reference impl/pandas_perspective.py:
     114-261) over TsFrame + the websocket table stack: run_historical

@@ -76,6 +76,7 @@ def test_shingles_and_jaccard(spark):
     assert 0.5 < pairs[0]["jaccard"] < 1.0
 
 
+@pytest.mark.slow
 def test_minhash_lsh_finds_near_dups(spark):
     rows = [
         (1, "the quick brown fox jumps over the lazy dog " * 4),
@@ -90,6 +91,7 @@ def test_minhash_lsh_finds_near_dups(spark):
     assert {(r["id_a"], r["id_b"]) for r in got} <= truth
 
 
+@pytest.mark.slow
 def test_simhash(spark):
     df = spark.createDataFrame(
         [
@@ -135,6 +137,7 @@ def test_lsh_topk_recall(emb):
     assert full == exact  # 1 bit + 1-bit probe covers both buckets
 
 
+@pytest.mark.slow
 def test_embedding_near_dups_self(spark, emb):
     # duplicate a vector to guarantee one true near-dup pair
     dup = emb.filter("vec_id = 1").withColumn("vec_id", F.lit(9999).cast("long"))
@@ -149,6 +152,7 @@ def test_embedding_near_dups_self(spark, emb):
         lsh_index(both, bits=6)
 
 
+@pytest.mark.slow
 def test_multimodal_stub_pipeline(spark):
     media = spark.createDataFrame(
         [(1, bytearray(b"imagebytes-1"), 100), (2, bytearray(b"imagebytes-2"), 25)],
@@ -220,6 +224,7 @@ def _encode_png(img, color_type, filters):
     )
 
 
+@pytest.mark.slow
 def test_png_decode_golden(spark):
     """The stdlib PNG decoder inverts every filter type bit-exactly on
     constructed images, across gray/RGB/RGBA color types — and the
@@ -256,6 +261,7 @@ def test_png_decode_golden(spark):
     assert abs(feats["mean_g"] - rgb[..., 1].mean()) < 1e-9
 
 
+@pytest.mark.slow
 def test_winnow_fingerprints(spark):
     # explicit tiny corpus: identical docs share the full fingerprint
     # set; a local edit perturbs only a bounded neighborhood of it
@@ -275,6 +281,7 @@ def test_winnow_fingerprints(spark):
     assert len(sets[1]) < n_shingles / 2
 
 
+@pytest.mark.slow
 def test_winnow_doubling_matches_bruteforce(spark):
     """The log-step doubling sliding-min (incl. odd w — uneven final
     step — and w=1) selects exactly the brute-force trailing-window
@@ -309,6 +316,7 @@ def test_winnow_doubling_matches_bruteforce(spark):
         assert got == sorted(exp), w
 
 
+@pytest.mark.slow
 def test_windowed_unkeyed_overflow_raises(spark):
     """Prefix-difference windows fail LOUD on |v| >= 1e17 (the
     DECIMAL(27,10) per-value domain) instead of silently skipping the
@@ -350,6 +358,7 @@ def test_windowed_unkeyed_overflow_raises(spark):
     assert got == {0: (9e16, 1), 1: (9e16, 1), 2: (2.0, 1)}
 
 
+@pytest.mark.slow
 def test_ivf_topk_recall(spark):
     from csp_spark.similarity import cosine_topk, ivf_topk
 
@@ -378,6 +387,7 @@ def test_ivf_topk_recall(spark):
     assert len(exact01 & sampled) >= 8, (exact01, sampled)
 
 
+@pytest.mark.slow
 def test_image_phash_near_dups(spark):
     """Perceptual-hash image dedup with an injected structured decoder
     (the stub's flat-gray fake would make every hash degenerate): a
@@ -425,6 +435,7 @@ def test_image_phash_near_dups(spark):
     assert pairs == [(1, 2)]
 
 
+@pytest.mark.slow
 def test_saved_pq_index_roundtrip(spark, tmp_path):
     """A persisted PQ index (codes table + codebook sidecar) answers
     pq_topk identically to the freshly-built index — no original
@@ -448,6 +459,7 @@ def test_saved_pq_index_roundtrip(spark, tmp_path):
     assert got == ref and len(got) == 10
 
 
+@pytest.mark.slow
 def test_bpe_train_and_apply(spark):
     """BPE on the Sennrich ACL'16 example corpus: the first merges are
     the known ones; applying the merges reproduces each word's
@@ -483,6 +495,7 @@ def test_bpe_train_and_apply(spark):
     assert sampled == merges
 
 
+@pytest.mark.slow
 def test_pq_adc_matches_reconstruction_and_recall(spark):
     """PQ/ADC: the Spark lut-scored similarity must equal the numpy
     cosine of (query, reconstructed-from-codes vector) — that verifies
@@ -512,6 +525,7 @@ def test_pq_adc_matches_reconstruction_and_recall(spark):
     assert 3 in approx  # the query's own vector reconstructs closest
 
 
+@pytest.mark.slow
 def test_pq_encode_expr_matches_arrow_encode(spark):
     """The pure-expression encode (pq_encode_expr) must produce the
     SAME codes as pq_index's Arrow/numpy encode for identical
@@ -691,27 +705,6 @@ def test_chunk_documents_coverage(spark):
     assert len(d2) == 1 and d2[0]["n_chunk_tokens"] == 3
 
 
-def test_knn_join_blas_matches_exact(spark, emb):
-    """The BLAS scale path is BIT-IDENTICAL to the oracle-checked
-    exact path: margin-guarded BLAS selection keeps a superset of the
-    exact top-k, and the survivors are re-scored with the exact path's
-    own JVM expressions, so ranks AND doubles agree exactly (this is
-    what lets ann_knn_join_blas share the knn DuckDB oracle)."""
-    from csp_spark.similarity import knn_join
-
-    qs = emb.filter(F.col("vec_id") % 10 == 0).select(
-        F.col("vec_id").alias("qid"), "embedding")
-    cs = emb.select(F.col("vec_id").alias("cid"), "embedding")
-    # repartition(7) forces multi-partition selection pools
-    e = sorted((r.qid, r.rank, r.cid, r.cos_sim) for r in
-               knn_join(qs, cs, k=5, query_id="qid", corpus_id="cid").collect())
-    b = sorted((r.qid, r.rank, r.cid, r.cos_sim) for r in
-               knn_join(qs, cs.repartition(7), k=5, query_id="qid",
-                        corpus_id="cid", method="blas").collect())
-    assert len(e) == len(b) > 0
-    assert e == b
-
-
 def test_redact_pii_golden(spark):
     rows = [
         (1, "mail me at jane.doe+x@corp.example.com or call +1 (555) 123-4567"),
@@ -770,6 +763,7 @@ def test_boilerplate_lines_and_removal(spark):
     assert bp2 == {footer, cookie}
 
 
+@pytest.mark.slow
 def test_decontaminate_ngram_overlap(spark):
     """GPT-3-style eval-set decontamination: docs sharing >= k distinct
     word n-grams with any eval doc are flagged; normalization makes
@@ -798,6 +792,7 @@ def test_decontaminate_ngram_overlap(spark):
     assert len(strict) == 4  # every doc is reported, flagged or not
 
 
+@pytest.mark.slow
 def test_repeated_spans(spark):
     """Lee-et-al-style exact repeated-substring dedup: duplicated
     k-gram cover intervals merge into spans; the globally-first
@@ -836,6 +831,7 @@ def test_repeated_spans(spark):
     assert all_gone[3]["n_removed_tokens"] == 0
 
 
+@pytest.mark.slow
 def test_lm_scores(spark):
     """Bigram add-k LM self-perplexity equals a pure-Python fold; the
     statistical-outlier doc scores worse than the repetitive ones."""
@@ -873,6 +869,7 @@ def test_lm_scores(spark):
     assert ext[3]["avg_nll"] > ext[1]["avg_nll"]
 
 
+@pytest.mark.slow
 def test_term_stats_and_tfidf(spark):
     docs = spark.createDataFrame(
         [
@@ -902,6 +899,7 @@ def test_term_stats_and_tfidf(spark):
     assert top[(3, 1)][0] == "elderberry"
 
 
+@pytest.mark.slow
 def test_quality_classifier_scores(spark):
     docs = spark.createDataFrame(
         [(1, "alpha beta gamma"), (2, "alpha beta gamma"),
@@ -926,6 +924,7 @@ def test_quality_classifier_scores(spark):
     assert out3[1] != out[1]
 
 
+@pytest.mark.slow
 def test_saved_ivf_index_prunes_partitions(spark, emb, tmp_path):
     """The persisted, cell-partitioned IVF index answers queries
     identically to the in-memory path AND its probe filter reaches the
@@ -970,6 +969,7 @@ def test_saved_ivf_index_prunes_partitions(spark, emb, tmp_path):
     assert m.apply("numFiles").value() <= 3 * 4
 
 
+@pytest.mark.slow
 def test_hard_negatives(spark, emb):
     """Hard-negative mining: n_clusters=1 equals the exact numpy
     all-pairs top-k on the 6dp-rounded cosine with id tiebreak;
@@ -1021,6 +1021,7 @@ def test_hard_negatives(spark, emb):
 from tests.conftest import load_module as _load_module  # noqa: E402
 
 
+@pytest.mark.slow
 def test_composed_curation_plan_pin(spark, tmp_path):
     """The composed-plan pin (r8 verdict item 6): C4 line cleaning →
     SemDeDup → next-fit packing → training shards composed as one
@@ -1156,6 +1157,7 @@ def test_ivf_assign_guards(spark, emb):
         ivf_assign(ragged, centers), "fixed-dimension|ragged")
 
 
+@pytest.mark.slow
 def test_ivf_assign_incremental_append(spark, emb, tmp_path):
     """ivf_assign: new vectors land in the numpy-nearest cell of the
     FROZEN quantizer via one Arrow-batched matmul per batch (no
@@ -1197,6 +1199,7 @@ def test_ivf_assign_incremental_append(spark, emb, tmp_path):
         "PartitionFilters")[1][:200]
 
 
+@pytest.mark.slow
 def test_bucketed_tables_eliminate_join_shuffle(spark, tmp_path):
     """Two tables bucketed the same way on the join key plan their
     join with ZERO exchanges (the write-once co-location contract);
@@ -1236,6 +1239,7 @@ def test_bucketed_tables_eliminate_join_shuffle(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS t_meta_b")
 
 
+@pytest.mark.slow
 def test_simhash_block_combination_tables(spark):
     """The Manku block-combination layout (n_blocks > d+1) returns the
     SAME pairs as the single-block pigeonhole — recall is 100% in both,
@@ -1275,6 +1279,7 @@ def _boilerplate_corpus(spark, n, extra_rows=()):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
+@pytest.mark.slow
 def test_minhash_degenerate_bucket_capped(spark):
     """An adversarial corpus putting thousands of docs into ONE
     (band, bucket) must not go |bucket|^2: with the cap, the emitted
@@ -1283,7 +1288,7 @@ def test_minhash_degenerate_bucket_capped(spark):
     n = 2000
     df = _boilerplate_corpus(spark, n)
     pairs = DD.minhash_lsh_pairs(
-        df, threshold=0.5, bucket_cap=50, use_cache=False
+        df, threshold=0.5, bucket_cap=50
     ).collect()
     assert len(pairs) == n - 1  # O(n), not n*(n-1)/2 = 1_999_000
     assert all(r["id_a"] == 0 and abs(r["jaccard"] - 1.0) < 1e-9
@@ -1291,6 +1296,7 @@ def test_minhash_degenerate_bucket_capped(spark):
     assert sorted(r["id_b"] for r in pairs) == list(range(1, n))
 
 
+@pytest.mark.slow
 def test_minhash_cap_keeps_outside_pairs(spark):
     """Docs OUTSIDE the degenerate bucket keep exact pair enumeration
     — the reroute applies per-bucket, not globally."""
@@ -1302,7 +1308,7 @@ def test_minhash_cap_keeps_outside_pairs(spark):
     df = _boilerplate_corpus(spark, 500, extra)
     got = {(r["id_a"], r["id_b"])
            for r in DD.minhash_lsh_pairs(
-               df, threshold=0.5, bucket_cap=50, use_cache=False).collect()}
+               df, threshold=0.5, bucket_cap=50).collect()}
     assert (100_001, 100_002) in got
     assert all(b != 100_003 for _, b in got)
     # family stays one component: star pairs to min id
@@ -1310,6 +1316,7 @@ def test_minhash_cap_keeps_outside_pairs(spark):
     assert fam == {(0, i) for i in range(1, 500)}
 
 
+@pytest.mark.slow
 def test_hamming_pairs_degenerate_bucket_capped(spark):
     """Same guard on the generic hamming join: n identical signatures
     collapse to an O(n) hamming-0 star instead of n^2 chunk-join rows;
@@ -1621,6 +1628,7 @@ def test_cap_per_group(docs):
         cap_per_group(t, "doc_id", "source", 0)
 
 
+@pytest.mark.slow
 def test_connected_components_local_equals_distributed(spark):
     """The size-based local union-find fallback returns exactly the
     distributed contraction loop's labels (union-by-min contract),
@@ -1688,6 +1696,7 @@ def test_pack_offsets_plan_shape(docs):
     assert exchanges_in_plan(ws) == 0
 
 
+@pytest.mark.slow
 def test_incremental_dedup(spark):
     """Ingestion-time dedup: existing corpus fixed, incoming docs drop
     iff they (transitively) duplicate an existing doc or lose the
@@ -1905,6 +1914,7 @@ def test_semdedup_edge_policy(spark, emb):
             != minid.sort_values("vec_id").kept.to_numpy()).any()
 
 
+@pytest.mark.slow
 def test_semdedup_clustered(spark, emb):
     # clustered run: verify the removal decisions against numpy GIVEN
     # the returned cell assignment (kmeans itself is seeded/deterministic)
@@ -1920,6 +1930,7 @@ def test_semdedup_clustered(spark, emb):
     assert rerun.sort_values("vec_id").kept.tolist() == out.kept.tolist()
 
 
+@pytest.mark.slow
 def test_semdedup_degenerate_cell_cap(spark, emb):
     # a family of identical vectors larger than cap must be star-routed
     # (exact-signature grouping), not exploded quadratically — and every
@@ -1946,6 +1957,7 @@ def _mk_docs(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string, source string")
 
 
+@pytest.mark.slow
 def test_dsir_weights_match_numpy(spark):
     # two dialects; target = dialect A. Weights must equal an
     # independent pure-python replication of the paper's formula.
@@ -1993,6 +2005,7 @@ def test_dsir_weights_match_numpy(spark):
     assert min(got[i] for i in range(20)) > max(got[i] for i in range(20, 40))
 
 
+@pytest.mark.slow
 def test_dsir_hashed_buckets_agree_and_select(spark):
     import numpy as np
 
@@ -2018,6 +2031,7 @@ def test_dsir_hashed_buckets_agree_and_select(spark):
     assert int(all_sel.selected.sum()) == len(rows)
 
 
+@pytest.mark.slow
 def test_dsir_tiebreak_on_duplicate_text(spark):
     from csp_spark.pipeline.dsir import dsir_select
 
@@ -2190,6 +2204,7 @@ def test_rule_bundles_fuzz_vs_python(spark):
         assert got4[i] == py_c4(text), (i, repr(text), got4[i], py_c4(text))
 
 
+@pytest.mark.slow
 def test_new_op_plan_shapes(spark, docs, emb):
     """Pin the r7 ops' physical-plan contracts so regressions fail
     loudly: the rule bundles stay zero-shuffle scans; hashed-model
@@ -2419,6 +2434,7 @@ def _jvm_semdedup_removed(spark, df, eps, keep):
     return {r["id_a"] for r in rem.collect()}
 
 
+@pytest.mark.slow
 @pytest.mark.parametrize("keep", ["min_id", "edge"])
 def test_semdedup_degenerate_matches_jvm(spark, degenerate_emb, keep):
     exp = _jvm_semdedup_removed(spark, degenerate_emb, 0.5, keep)
@@ -2443,6 +2459,7 @@ def test_semdedup_degenerate_matches_jvm(spark, degenerate_emb, keep):
     assert exp == {2, 4, 5, 6, 7}
 
 
+@pytest.mark.slow
 def test_knn_join_degenerate_zero_corpus_rows(spark):
     # >= k zero-norm corpus rows used to poison the BLAS kth (NaN
     # partition value fails every comparison -> ALL candidates dropped)
@@ -2490,12 +2507,10 @@ def test_knn_join_degenerate_zero_corpus_rows(spark):
 
 
 def test_knn_join_reference_path_nan_rows(spark):
-    # the non-BLAS fallback path (any method outside {"blas","exact"}):
-    # its per-partition pandas pre-top-k sorted NaN cos_sim LAST and
-    # head(k)-pruned it, while the final Spark desc window ranks JVM
-    # NaN FIRST — with >= k NaN-scored corpus rows the returned top-k
-    # was wrong. NaN rows now pass through un-pruned (r13 ADVICE fix,
-    # mirroring the r12 BLAS-pool guard).
+    # >= k NaN-scored corpus rows: the final Spark desc window ranks
+    # JVM NaN FIRST, so a selection that sorted NaN last (pandas) or
+    # dropped it would return the wrong top-k. The pure-JVM reference
+    # below is the ground truth.
     import math
 
     from pyspark.sql import Window
@@ -2516,8 +2531,7 @@ def test_knn_join_reference_path_nan_rows(spark):
         ],
         "cid int, embedding array<double>",
     )
-    out = knn_join(q, corpus, k=3, query_id="qid", corpus_id="cid",
-                   method="reference").collect()
+    out = knn_join(q, corpus, k=3, query_id="qid", corpus_id="cid").collect()
     # pure-JVM reference: identical expressions and the same window
     qn = q.select(F.col("qid").alias("__qid"),
                   F.col("embedding").cast("array<double>").alias("__qv"))
@@ -2569,6 +2583,7 @@ def test_hard_negatives_eps_none_zero_corpus_rows(spark):
             assert g["cos_sim"].notna().all()
 
 
+@pytest.mark.slow
 def test_cosine_pairs_above_matches_join_form(spark, emb, degenerate_emb):
     # the BLAS-selected form must be row- and bit-identical to the
     # former all-pairs join expression, including degenerate inputs
@@ -2622,9 +2637,7 @@ def test_cosine_pairs_above_matches_join_form(spark, emb, degenerate_emb):
 def test_cosine_pairs_above_collect_guard(spark, emb, monkeypatch):
     # the driver collect is capped (VERDICT r12 item 9): past
     # CSP_SPARK_PAIRS_COLLECT_MAX_ELEMENTS (rows x dim doubles) it
-    # raises loudly, pointing at embedding_near_dups — and the collect
-    # itself is row-limited, so the over-cap table never materializes
-    # driver-side
+    # raises loudly, pointing at embedding_near_dups
     from csp_spark.similarity import cosine_pairs_above
 
     monkeypatch.setenv("CSP_SPARK_PAIRS_COLLECT_MAX_ELEMENTS", "8")
@@ -2636,3 +2649,166 @@ def test_cosine_pairs_above_collect_guard(spark, emb, monkeypatch):
     assert cosine_pairs_above(
         emb, 0.99, id_col="vec_id", vec_col="embedding"
     ).count() >= 0  # in-cap path unchanged
+
+
+@pytest.mark.parametrize("scorer", ["cosine_pairs_above", "knn_join"])
+def test_collect_guard_stops_before_over_cap_partitions(spark, monkeypatch,
+                                                        scorer):
+    # the guarded collect streams partition by partition and stops once
+    # past the budget: 4 partitions x 3 rows of 2-dim vectors against a
+    # budget of 8 doubles (4 rows) must raise the guard's error during
+    # partition 1, before partitions 2 and 3 — which fail when
+    # evaluated — are ever computed
+    from csp_spark.similarity import cosine_pairs_above, knn_join
+
+    df = spark.range(0, 12, 1, numPartitions=4).select(
+        F.col("id").alias("vec_id"),
+        F.when(F.spark_partition_id() >= 2,
+               F.raise_error(F.lit("collected past the guard")))
+        .otherwise(F.array(F.lit(1.0), F.col("id").cast("double")))
+        .alias("embedding"),
+    )
+    monkeypatch.setenv("CSP_SPARK_PAIRS_COLLECT_MAX_ELEMENTS", "8")
+    with pytest.raises(ValueError, match="exceeds 4 rows x 2 dims"):
+        if scorer == "knn_join":
+            knn_join(df, df, k=1, query_id="vec_id", corpus_id="vec_id")
+        else:
+            cosine_pairs_above(df, 0.5)
+
+
+# ---------------------------------------------------------------------------
+# One degenerate-input contract for the four margin-select scorers: each
+# result equals the pure-JVM expression form (every row pair scored by
+# Spark expressions, never numpy), and ragged vectors raise loudly.
+
+_NAN = float("nan")
+_VEC_BASE = [
+    (1, [1.0, 0.0, 0.0]), (2, [0.9, 0.1, 0.0]), (3, [0.5, 0.5, 0.0]),
+    (4, [0.0, 1.0, 0.0]), (5, [0.2, 0.1, 0.9]), (6, [-1.0, 0.2, 0.0]),
+]
+_VEC_CASES = {
+    "null_vector": _VEC_BASE + [(7, None), (8, [1.0, None, 0.0])],
+    "nan_element": _VEC_BASE + [(7, [_NAN, 0.0, 0.0]), (8, [_NAN, 1.0, 0.0])],
+    "zero_norm": _VEC_BASE + [(7, [0.0, 0.0, 0.0]), (8, [0.0, 0.0, 0.0])],
+    "duplicate_ids": _VEC_BASE + [(2, [0.9, 0.1, 0.0]), (3, [0.4, 0.6, 0.0])],
+    # a NULL id passes no id comparison, so it pairs with nothing
+    "null_id": _VEC_BASE + [(None, [1.0, 0.0, 0.0]), (None, [0.4, 0.6, 0.0])],
+    # exact-tie groups at the top-k boundary (cos = 1.0 three ways)
+    "tied_vectors": _VEC_BASE + [(9, [1.0, 0.0, 0.0]), (10, [1.0, 0.0, 0.0]),
+                                 (11, [2.0, 0.0, 0.0])],
+    "ragged": _VEC_BASE + [(7, [1.0, 0.0])],
+    "empty": [],
+}
+
+
+def _jvm_pairs(df, cond):
+    """Every row pair meeting ``cond`` scored with the exact expression."""
+    from csp_spark.similarity.ann import dot, norm
+
+    a = df.select(F.col("vec_id").alias("id_a"),
+                  F.col("embedding").cast("array<double>").alias("va"))
+    b = df.select(F.col("vec_id").alias("id_b"),
+                  F.col("embedding").cast("array<double>").alias("vb"))
+    return a.crossJoin(b).filter(cond(F.col("id_a"), F.col("id_b"))).select(
+        "id_a", "id_b",
+        F.round(dot(F.col("va"), F.col("vb"))
+                / (norm(F.col("va")) * norm(F.col("vb"))), 6).alias("cos_sim"),
+    )
+
+
+def _jvm_topk(df, k, eps=None):
+    from pyspark.sql import Window
+
+    s = _jvm_pairs(df, lambda a, b: a != b)
+    if eps is not None:
+        s = s.filter(F.col("cos_sim") < eps)
+    w = Window.partitionBy("id_a").orderBy(F.desc("cos_sim"), F.col("id_b"))
+    return s.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
+def _run_knn(df):
+    from csp_spark.similarity import knn_join
+
+    spark = df.sparkSession
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    # several Arrow batches per partition and several partitions: the
+    # running top-k across blocks and the per-partition pools both run
+    spark.conf.set(key, "3")
+    try:
+        out = knn_join(
+            df.select(F.col("vec_id").alias("qid"), "embedding"),
+            df.select(F.col("vec_id").alias("cid"), "embedding").repartition(2),
+            k=3,
+        ).collect()
+    finally:
+        spark.conf.set(key, old)
+    return [(r["qid"], r["cid"], r["rank"], r["cos_sim"]) for r in out]
+
+
+def _run_hard_negatives(df):
+    from csp_spark.similarity import hard_negatives
+
+    out = hard_negatives(df, k=2, n_clusters=1, exclude_eps=0.95).collect()
+    return [(r["anchor"], r["negative"], r["rank"], r["cos_sim"]) for r in out]
+
+
+def _run_cosine_pairs(df):
+    from csp_spark.similarity import cosine_pairs_above
+
+    return [tuple(r) for r in cosine_pairs_above(df, 0.5).collect()]
+
+
+def _run_semdedup(df):
+    out = DD.semdedup(df, eps=0.9, n_clusters=1, keep="min_id").collect()
+    return {r["vec_id"] for r in out if r["kept"] == 0}
+
+
+def _topk_rows(df, k, eps=None):
+    return [(r["id_a"], r["id_b"], r["rank"], r["cos_sim"])
+            for r in _jvm_topk(df, k, eps).collect()]
+
+
+_VEC_SCORERS = {
+    "knn_join": (_run_knn, lambda df: _topk_rows(df, 3)),
+    # knn_join covers the top-k mode without a bound, this with one
+    "hard_negatives": (_run_hard_negatives, lambda df: _topk_rows(df, 2, 0.95)),
+    "cosine_pairs_above": (_run_cosine_pairs, lambda df: [
+        tuple(r) for r in _jvm_pairs(df, lambda a, b: a < b)
+        .filter(F.col("cos_sim") >= 0.5).collect()]),
+    "semdedup": (_run_semdedup,
+                 lambda df: _jvm_semdedup_removed(df.sparkSession, df, 0.9,
+                                                  "min_id")),
+}
+
+
+def _canon_rows(rows):
+    if isinstance(rows, set):
+        return rows
+    return sorted(
+        (tuple("NaN" if isinstance(v, float) and math.isnan(v) else v
+               for v in r) for r in rows),
+        key=repr,
+    )
+
+
+@pytest.mark.parametrize("case", list(_VEC_CASES))
+@pytest.mark.parametrize("scorer", list(_VEC_SCORERS))
+def test_vector_scorers_degenerate_match_jvm(spark, scorer, case):
+    df = spark.createDataFrame(
+        _VEC_CASES[case], "vec_id int, embedding array<double>"
+    )
+    run, reference = _VEC_SCORERS[scorer]
+    if case == "ragged":
+        with pytest.raises(Exception, match="ragged"):
+            run(df)
+        return
+    assert _canon_rows(run(df)) == _canon_rows(reference(df))
+
+
+def test_knn_join_unknown_method_raises(spark, emb):
+    from csp_spark.similarity import knn_join
+
+    with pytest.raises(ValueError, match="'exact' or 'blas'"):
+        knn_join(emb, emb, k=3, query_id="vec_id", corpus_id="vec_id",
+                 method="reference")

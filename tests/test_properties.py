@@ -46,6 +46,7 @@ def _mk(spark, rows):
     return TickStream(spark.createDataFrame(data, SCHEMA)), data
 
 
+@pytest.mark.slow
 @given(rows=rows_strategy)
 @settings(**_SETTINGS)
 def test_split_partitions_stream(spark, rows):
@@ -57,6 +58,7 @@ def test_split_partitions_stream(spark, rows):
     assert t.df.count() + f.df.count() == len(data)
 
 
+@pytest.mark.slow
 @given(rows=rows_strategy)
 @settings(**_SETTINGS)
 def test_drop_dups_idempotent(spark, rows):
@@ -68,6 +70,7 @@ def test_drop_dups_idempotent(spark, rows):
     assert a == b
 
 
+@pytest.mark.slow
 @given(rows=rows_strategy)
 @settings(**_SETTINGS)
 def test_diff_of_accum_recovers_values(spark, rows):
@@ -83,6 +86,7 @@ def test_diff_of_accum_recovers_values(spark, rows):
         seen[k] = seen.get(k, 0) + 1
 
 
+@pytest.mark.slow
 @given(rows=rows_strategy)
 @settings(**_SETTINGS)
 def test_firstn_counts(spark, rows):
@@ -95,6 +99,7 @@ def test_firstn_counts(spark, rows):
     assert got == sum(min(n, c) for c in per_key.values())
 
 
+@pytest.mark.slow
 @given(rows=rows_strategy)
 @settings(**_SETTINGS)
 def test_merge_left_wins_on_ties(spark, rows):
@@ -107,6 +112,7 @@ def test_merge_left_wins_on_ties(spark, rows):
     assert all(r[VALUE] < 1000 for r in got)
 
 
+@pytest.mark.slow
 @given(rows=rows_strategy)
 @settings(**_SETTINGS)
 def test_unroll_of_burst_preserves_multiset(spark, rows):
@@ -120,6 +126,7 @@ def test_unroll_of_burst_preserves_multiset(spark, rows):
 # ---------------------------------------------------------------- round 4
 
 
+@pytest.mark.slow
 @given(
     rows=rows_strategy,
     window=st.integers(min_value=1, max_value=8),
@@ -146,6 +153,7 @@ def test_windowed_unkeyed_equals_bruteforce(spark, rows, window, nparts):
         assert mn == min(frame) and mx == max(frame)
 
 
+@pytest.mark.slow
 @given(rows=rows_strategy, init=st.floats(-10, 10, allow_nan=False))
 @settings(**_SETTINGS)
 def test_feedback_scan_equals_python_fold(spark, rows, init):
@@ -208,6 +216,7 @@ def test_websocket_frame_roundtrip_fuzz(payloads, sizes):
         assert fin2 and op2 == OP_CONT and p1 + p2 == padded
 
 
+@pytest.mark.slow
 @given(
     sigs=st.lists(
         st.integers(min_value=-(2**63), max_value=2**63 - 1),
@@ -236,6 +245,7 @@ def test_hamming_pairs_exact_recall(spark, sigs, max_hamming):
     assert got == want
 
 
+@pytest.mark.slow
 @given(
     texts=st.lists(
         st.lists(
@@ -289,6 +299,7 @@ def test_repeated_spans_equals_bruteforce(spark, texts, k):
     assert got == sorted(want)
 
 
+@pytest.mark.slow
 @given(
     vals=st.lists(
         st.floats(min_value=-50, max_value=50, allow_nan=False, width=32),
@@ -320,6 +331,7 @@ def test_pq_codes_select_nearest_center(spark, vals, m):
             assert d2[code] <= d2.min() + 1e-9, (r, j, d2)
 
 
+@pytest.mark.slow
 @given(
     vals=st.lists(
         st.floats(min_value=-100, max_value=100, allow_nan=False, width=32),
@@ -354,6 +366,7 @@ def test_run_node_cumsum_equals_accum(spark, vals, nkeys):
             assert gt == wt and math.isclose(gv, wv, rel_tol=1e-12, abs_tol=1e-12)
 
 
+@pytest.mark.slow
 @given(
     gaps=st.lists(st.integers(min_value=1, max_value=10), min_size=1, max_size=12),
     timeout=st.integers(min_value=2, max_value=8),
@@ -395,6 +408,7 @@ def test_run_node_alarm_fires_iff_gap_exceeds_timeout(spark, gaps, timeout):
 from hypothesis import example
 
 
+@pytest.mark.slow
 @given(
     rows=rows_strategy,
     start_s=st.integers(min_value=1, max_value=12),
@@ -466,6 +480,7 @@ def test_values_times_at_policies_match_python_replay(
             assert got_t[keyk] == tss, (keyk, sp, ep)
 
 
+@pytest.mark.slow
 @given(
     rows=rows_strategy,
     gap_s=st.sampled_from([1, 2, 5]),
@@ -649,6 +664,7 @@ def _assert_maps_equal(got, want):
             assert same, (k, got[k], want[k])
 
 
+@pytest.mark.slow
 @given(cycles=cycles_strategy)
 @settings(**_SETTINGS)
 def test_binary_op_validity_gating_matches_cycle_replay(spark, cycles):
@@ -695,6 +711,7 @@ def test_binary_op_validity_gating_matches_cycle_replay(spark, cycles):
         assert math.isclose(got[k], want[k], rel_tol=1e-12, abs_tol=1e-12)
 
 
+@pytest.mark.slow
 @given(cycles=cycles_strategy)
 @settings(**_SETTINGS)
 def test_sample_asof_matches_cycle_replay(spark, cycles):
@@ -724,6 +741,7 @@ def test_sample_asof_matches_cycle_replay(spark, cycles):
         assert got[k] == want[k]
 
 
+@pytest.mark.slow
 @given(
     cycles=cycles_strategy,
     interval=st.integers(min_value=1, max_value=4),
@@ -754,6 +772,7 @@ def test_rolling_trigger_reset_matches_cycle_replay(
     _assert_maps_equal(got, want)
 
 
+@pytest.mark.slow
 @given(
     cycles=cycles_strategy,
     interval=st.integers(min_value=1, max_value=4),
@@ -778,6 +797,7 @@ def test_rolling_sampler_matches_cycle_replay(spark, cycles, interval, mw):
     _assert_maps_equal(got, want)
 
 
+@pytest.mark.slow
 @given(
     cycles=cycles_strategy,
     gap_s=st.integers(min_value=1, max_value=5),
@@ -807,6 +827,7 @@ def test_rolling_time_window_nan_poisoning_matches_cycle_replay(
     _assert_maps_equal(got, want)
 
 
+@pytest.mark.slow
 @given(
     vals=st.lists(
         st.floats(min_value=-8, max_value=8, allow_nan=False, width=16),
@@ -815,20 +836,21 @@ def test_rolling_time_window_nan_poisoning_matches_cycle_replay(
     ndup=st.integers(min_value=0, max_value=4),
 )
 @settings(**_SETTINGS)
-def test_knn_join_blas_bit_identical_to_exact(spark, vals, ndup):
-    """knn_join must return the all-pairs sequential-sum result
-    BIT-FOR-BIT on arbitrary corpora — including duplicated vectors
-    (forced cos=1.0 ties at the top-k boundary, the adversarial case
-    for the margin-guarded BLAS selection + exact JVM re-score).
+def test_vector_scorers_bit_identical_to_fold(spark, vals, ndup):
+    """knn_join, hard_negatives(n_clusters=1) and cosine_pairs_above
+    share one margin-select kernel; each must return the all-pairs
+    sequential-sum result BIT-FOR-BIT on arbitrary corpora, including
+    duplicated vectors (forced cos=1.0 ties at the top-k boundary) and
+    a bound (exclude_eps, threshold) equal to a score that occurs, so
+    pairs sit exactly on it — the adversarial cases for the margin
+    around 6-dp rounded scores.
 
-    Since r12 both method values share the BLAS-selection path, so
-    the ground truth here is an INDEPENDENT pure-Python replay of the
-    former interpreted scorer: a 0.0-seeded left-to-right float fold
-    for dot and norm (IEEE addition is deterministic, so this
-    reproduces the JVM aggregate() doubles exactly), every pair
-    scored, rounded to 6dp, ranked desc with cid tiebreak."""
-    import numpy as np
-    from csp_spark.similarity import knn_join
+    The ground truth is an INDEPENDENT pure-Python replay of the
+    interpreted scorer: a 0.0-seeded left-to-right float fold for dot
+    and norm (IEEE addition is deterministic, so this reproduces the
+    JVM aggregate() doubles exactly), every pair scored, rounded to
+    6dp, ranked desc with id tiebreak."""
+    from csp_spark.similarity import cosine_pairs_above, hard_negatives, knn_join
 
     dim = 4
     base = [
@@ -839,46 +861,48 @@ def test_knn_join_blas_bit_identical_to_exact(spark, vals, ndup):
     # duplicate the first ndup vectors under new ids: exact-tie groups
     rows = [(i, v) for i, v in enumerate(base)]
     rows += [(100 + i, list(base[i])) for i in range(ndup)]
-    # drop zero-norm vectors (cosine undefined; out of contract)
+    # drop zero-norm vectors (their NULL scores have their own test)
     rows = [r for r in rows if any(abs(x) > 1e-12 for x in r[1])]
     if len(rows) < 2:
         return
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    qs = emb.select(F.col("vec_id").alias("qid"), "embedding")
-    cs = emb.select(F.col("vec_id").alias("cid"), "embedding")
-    def _fold_dot(a, b):
+
+    def _fold(a, b):
         acc = 0.0
         for x, y in zip(a, b):
             acc = acc + float(x) * float(y)
         return acc
 
-    def _fold_norm(a):
-        import math
+    score = {
+        (a, b): round(_fold(va, vb)
+                      / (math.sqrt(_fold(va, va)) * math.sqrt(_fold(vb, vb))), 6)
+        for a, va in rows for b, vb in rows if a != b
+    }
+    bound = sorted(score.values())[len(score) // 2]
 
-        acc = 0.0
-        for x in a:
-            acc = acc + float(x) * float(x)
-        return math.sqrt(acc)
+    def _topk(eps):
+        out = []
+        for q, _ in rows:
+            ranked = sorted((-s, b) for (a, b), s in score.items()
+                            if a == q and (eps is None or s < eps))
+            out += [(q, b, rank, -neg)
+                    for rank, (neg, b) in enumerate(ranked[:3], 1)]
+        return sorted(out)
 
-    expect = []
-    for qid, qv in rows:
-        scored = sorted(
-            (
-                -round(_fold_dot(cv, qv) / (_fold_norm(cv) * _fold_norm(qv)), 6),
-                cid,
-            )
-            for cid, cv in rows if cid != qid
-        )
-        for rank, (negs, cid) in enumerate(scored[:3], 1):
-            expect.append((qid, rank, cid, -negs))
-    e = sorted(expect)
-    b = sorted((r.qid, r.rank, r.cid, r.cos_sim) for r in
-               knn_join(qs, cs.repartition(3), k=3, query_id="qid",
-                        corpus_id="cid", method="blas").collect())
-    d = sorted((r.qid, r.rank, r.cid, r.cos_sim) for r in
-               knn_join(qs, cs, k=3, query_id="qid", corpus_id="cid").collect())
-    assert e == b
-    assert e == d
+    knn = knn_join(
+        emb.select(F.col("vec_id").alias("qid"), "embedding"),
+        emb.select(F.col("vec_id").alias("cid"), "embedding").repartition(3),
+        k=3,
+    )
+    assert sorted((r.qid, r.cid, r.rank, r.cos_sim)
+                  for r in knn.collect()) == _topk(None)
+    hn = hard_negatives(emb, k=3, n_clusters=1, exclude_eps=bound)
+    assert sorted((r.anchor, r.negative, r.rank, r.cos_sim)
+                  for r in hn.collect()) == _topk(bound)
+    cp = cosine_pairs_above(emb, bound)
+    assert sorted(tuple(r) for r in cp.collect()) == sorted(
+        (a, b, s) for (a, b), s in score.items() if a < b and s >= bound
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -917,6 +941,7 @@ def _collect_scalar(ts_stream):
     }
 
 
+@pytest.mark.slow
 @given(cycles=cycles_strategy, n=st.integers(min_value=1, max_value=3))
 @settings(**_SETTINGS)
 def test_delay_ticks_and_timedelta_match_replay(spark, cycles, n):
@@ -942,6 +967,7 @@ def test_delay_ticks_and_timedelta_match_replay(spark, cycles, n):
     _scalar_maps_equal(got_tk, want_tk)
 
 
+@pytest.mark.slow
 @given(cycles=cycles_strategy, lag=st.integers(min_value=1, max_value=3))
 @settings(**_SETTINGS)
 def test_diff_tick_and_time_lag_match_replay(spark, cycles, lag):
@@ -973,6 +999,7 @@ def test_diff_tick_and_time_lag_match_replay(spark, cycles, lag):
     _scalar_maps_equal(got_td, want_td)
 
 
+@pytest.mark.slow
 @given(cycles=cycles_strategy)
 @settings(**_SETTINGS)
 def test_merge_left_wins_matches_replay(spark, cycles):
@@ -996,6 +1023,7 @@ def test_merge_left_wins_matches_replay(spark, cycles):
     _scalar_maps_equal(got, want)
 
 
+@pytest.mark.slow
 @given(cycles=cycles_strategy,
        eps=st.sampled_from([None, 0.75, 5.0]))
 @settings(**_SETTINGS)
@@ -1022,6 +1050,7 @@ def test_drop_dups_eps_nan_matches_replay(spark, cycles, eps):
     _scalar_maps_equal(got, want)
 
 
+@pytest.mark.slow
 @given(cycles=cycles_strategy, on_tick=st.booleans())
 @settings(**_SETTINGS)
 def test_gate_matches_replay(spark, cycles, on_tick):
@@ -1068,6 +1097,7 @@ def test_gate_matches_replay(spark, cycles, on_tick):
             assert (math.isnan(g) and math.isnan(w)) or g == w, (kk, g, w)
 
 
+@pytest.mark.slow
 @given(cycles=cycles_strategy)
 @settings(**_SETTINGS)
 def test_unroll_matches_replay(spark, cycles):
@@ -1095,6 +1125,7 @@ def test_unroll_matches_replay(spark, cycles):
     _scalar_maps_equal(got, want)
 
 
+@pytest.mark.slow
 @given(cycles=cycles_strategy)
 @settings(**_SETTINGS)
 def test_filter_and_split_match_replay(spark, cycles):
@@ -1127,6 +1158,7 @@ def test_filter_and_split_match_replay(spark, cycles):
     _scalar_maps_equal(got_fa, want_f)
 
 
+@pytest.mark.slow
 @given(cycles=cycles_strategy)
 @settings(**_SETTINGS)
 def test_burst_last_value_flatten_match_replay(spark, cycles):
@@ -1180,6 +1212,7 @@ def test_burst_last_value_flatten_match_replay(spark, cycles):
     _scalar_maps_equal(got_fl, want_fl)
 
 
+@pytest.mark.slow
 @given(cycles=cycles_strategy)
 @settings(**_SETTINGS)
 def test_multiplex_demultiplex_collect_match_replay(spark, cycles):
@@ -1278,6 +1311,7 @@ def _mk_two_fields(spark, cycles):
     return mk(fs), mk(gs), mk(trs)
 
 
+@pytest.mark.slow
 @given(cycles=two_field_cycles, use_trigger=st.booleans())
 @settings(**_SETTINGS)
 def test_struct_fromts_matches_cycle_replay(spark, cycles, use_trigger):
@@ -1311,6 +1345,7 @@ def test_struct_fromts_matches_cycle_replay(spark, cycles, use_trigger):
     assert got == want
 
 
+@pytest.mark.slow
 @given(cycles=two_field_cycles)
 @settings(**_SETTINGS)
 def test_struct_collectts_matches_cycle_replay(spark, cycles):
@@ -1347,6 +1382,7 @@ sync_cycles = st.lists(
 )
 
 
+@pytest.mark.slow
 @given(
     cycles=sync_cycles,
     threshold_s=st.integers(min_value=1, max_value=6),
@@ -1408,6 +1444,7 @@ def test_sync_dict_threshold_windows_match_replay(
             == sorted(want[k], key=lambda x: (x[0], sorted(x[1].items())))
 
 
+@pytest.mark.slow
 @given(
     ticks=st.lists(
         st.tuples(
@@ -1488,6 +1525,7 @@ def test_alarm_schedule_cancel_matches_replay(spark, ticks):
     assert got == want
 
 
+@pytest.mark.slow
 @given(
     cycles=sync_cycles,
     trig_gaps=st.lists(st.integers(min_value=0, max_value=9),
@@ -1572,6 +1610,7 @@ def test_sync_dict_trigger_windows_match_replay(
         assert sorted(got[k], key=kf) == sorted(want[k], key=kf)
 
 
+@pytest.mark.slow
 @given(
     rows=rows_strategy,
     interval_s=st.integers(min_value=1, max_value=15),
@@ -1674,6 +1713,7 @@ _KAFKA_RENAMES = [
 ]
 
 
+@pytest.mark.slow
 @given(
     rows=st.lists(
         st.tuples(
@@ -1913,6 +1953,7 @@ def test_dbreader_datetime_accessor_span_vs_pandas(spark, offs, win, tz_ny):
 _derby_counter = [0]
 
 
+@pytest.mark.slow
 @given(
     rows=st.lists(
         st.tuples(
@@ -2004,6 +2045,7 @@ def test_partitioned_jdbc_tie_order_fuzz(spark, rows, n_parts):
         jconn.close()
 
 
+@pytest.mark.slow
 @given(
     rows=st.lists(
         st.tuples(
@@ -2067,6 +2109,7 @@ def test_pending_row_manager_timeslices_fuzz(spark, tmp_path_factory,
         (t, round(v, 3)) for t, v in want]
 
 
+@pytest.mark.slow
 @given(
     rows=st.lists(
         st.tuples(

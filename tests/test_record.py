@@ -81,6 +81,7 @@ def test_pack_and_from_row(spark):
     assert rec.price == 0.5 and rec.qty == 0 and not rec.is_set("venue")
 
 
+@pytest.mark.slow
 def test_fromts_with_defaults(spark):
     price = bl.curve(spark, [(t(1), 10.0), (t(3), 11.0)])
     qty = bl.curve(spark, [(t(2), 5.0)])

@@ -53,6 +53,7 @@ def _exec_file(path, spark):
     return ns
 
 
+@pytest.mark.slow
 def test_reference_readme_spread_verbatim(spark, capture_print):
     """README.md's first program: @csp.node spread with csp.valid."""
     if not os.path.exists(REF_README):
@@ -76,6 +77,7 @@ def test_reference_readme_spread_verbatim(spark, capture_print):
     assert capture_print["ask"].collect_ticks() == [(START, 2.0)]
 
 
+@pytest.mark.slow
 def test_reference_e4_trade_pnl_verbatim(spark, capture_print):
     """examples/01_basics/e4_trade_pnl.py: csp.state vwap node with
     csp.Outputs/csp.output, struct-field edges, Trade.fromts, split."""
@@ -280,6 +282,7 @@ def test_reference_e3_show_graph_verbatim(spark, capture_print):
 REF_E4X = "/root/reference/examples/02_intermediate/e4_exprtk.py"
 
 
+@pytest.mark.slow
 def test_reference_e4_exprtk_verbatim(spark, capture_print):
     """02_intermediate/e4_exprtk.py: the exprtk DSL with if/else-if
     chains, := state vars, csp.now(), triggers, inline functions and
@@ -315,6 +318,7 @@ REF_E2S = "/root/reference/examples/02_intermediate/e2_stats.py"
 REF_E3N = "/root/reference/examples/02_intermediate/e3_numpy_stats.py"
 
 
+@pytest.mark.slow
 def test_reference_e2_stats_verbatim(spark):
     """02_intermediate/e2_stats.py: the functional csp.stats surface
     with reference gating — weighted rolling VWAP with trigger/reset/
@@ -351,6 +355,7 @@ def test_reference_e2_stats_verbatim(spark):
     ]
 
 
+@pytest.mark.slow
 def test_reference_e3_numpy_stats_verbatim(spark):
     """02_intermediate/e3_numpy_stats.py: np-array edges through the
     elementwise stats adapter (mean/gmean/adjusted ema) and the
@@ -455,6 +460,7 @@ REF_AM = ("/root/reference/examples/04_writing_adapters/"
           "e3_adaptermanager_pullinput.py")
 
 
+@pytest.mark.slow
 def test_reference_adapter_manager_verbatim(spark, capture_print):
     """04_writing_adapters/e3_adaptermanager_pullinput.py: the
     AdapterManagerImpl/ManagedSimInputAdapter protocol — one timeslice
@@ -530,6 +536,7 @@ REF_PUSH5 = ("/root/reference/examples/04_writing_adapters/"
              "e5_adaptermanager_pushinput.py")
 
 
+@pytest.mark.slow
 def test_reference_adaptermanager_pushinput_verbatim(spark, capture_print):
     """04_writing_adapters/e5_adaptermanager_pushinput.py: ONE
     AdapterManager drives 15 push subscriptions (5 symbols × 3
@@ -560,6 +567,7 @@ REF_PUSH7 = ("/root/reference/examples/04_writing_adapters/"
              "e7_adaptermanager_inputoutput.py")
 
 
+@pytest.mark.slow
 def test_reference_adaptermanager_inputoutput_verbatim(
     spark, capture_print, capsys
 ):
@@ -592,6 +600,7 @@ def test_reference_adaptermanager_inputoutput_verbatim(
 REF_FB = "/root/reference/examples/02_intermediate/e1_feedback.py"
 
 
+@pytest.mark.slow
 def test_reference_feedback_verbatim(spark):
     """02_intermediate/e1_feedback.py: a true graph cycle — my_algo's
     orders feed my_exchange, whose ACKs feed back into my_algo via
@@ -639,6 +648,7 @@ def _basket_summary(x: {csp_spark.ts[str]: csp_spark.ts[int]}) -> csp_spark.ts[s
         return repr(sorted(x.tickeditems()))
 
 
+@pytest.mark.slow
 def test_reference_dynamic_verbatim(spark, capture_print, capfd):
     """06_advanced/e1_dynamic.py: csp.dynamic spawns a sub-graph per
     discovered symbol (csp.snapkey / csp.attach / csp.snap markers,
@@ -1010,6 +1020,7 @@ def test_reference_impl_functional_shims(spark):
     assert instantiate_pending() == 0  # drained
 
 
+@pytest.mark.slow
 def test_reference_math_module_surface(spark):
     """csp.math variadic and_/or_, andnode/ornode, and the
     define_binary_op/define_unary_op factories (reference
@@ -1071,6 +1082,7 @@ def test_reference_curve_class_and_null_ts(spark):
     assert csp.null_ts(spark, "long").df.count() == 0
 
 
+@pytest.mark.slow
 def test_reference_sync_list_internal(spark):
     """csp.basketlib.sync_list_internal (reference basketlib.py:15-39)
     matches the public sync_list wrapper for both trigger modes."""
@@ -1162,6 +1174,7 @@ def total_per_cycle(b: {ts[str]: ts[float]}) -> ts[str]:
 REF_NAND = "/root/reference/examples/98_just_for_fun/e1_csp_nand_computer.py"
 
 
+@pytest.mark.slow
 def test_reference_nand_computer_verbatim(spark, capture_print):
     """98_just_for_fun/e1_csp_nand_computer.py: the whole computer is
     one @csp.node NAND gate wired through csp.graph combinators — NOT/
@@ -1194,6 +1207,7 @@ def test_reference_nand_computer_verbatim(spark, capture_print):
 REF_PROF = "/root/reference/examples/99_developer_tools/e1_profiling.py"
 
 
+@pytest.mark.slow
 def test_reference_profiling_verbatim(spark, capsys):
     """99_developer_tools/e1_profiling.py: graph_info over a graph
     FUNCTION (static wiring inspection) + the no-argument
@@ -1217,6 +1231,7 @@ REF_WSOUT = ("/root/reference/examples/03_using_adapters/websocket/"
              "e2_websocket_output.py")
 
 
+@pytest.mark.slow
 def test_reference_websocket_output_verbatim(spark, capture_print):
     """03_using_adapters/websocket/e2_websocket_output.py: a realtime
     timer graph fans N keyed MyData structs (count/delay/sin/fromts/
@@ -1468,6 +1483,7 @@ def test_struct_classmethods_collectts_metadata_fieldmap(spark):
     }
 
 
+@pytest.mark.slow
 def test_reference_kafka_example_shape_seam(spark):
     """examples/03_using_adapters/kafka/e1_kafka.py
     ``json_producer_graph``, broker-free (r11 verdict task 5): the
@@ -1607,6 +1623,7 @@ def test_reference_kafka_example_shape_seam(spark):
     assert status.df.count() == 0
 
 
+@pytest.mark.slow
 def test_reference_pandas_extension_example_flow(spark):
     """examples/06_advanced/e2_pandas_extension.py — the reference's
     pandas-extension program, verbatim operations: module-scope edge

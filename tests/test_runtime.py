@@ -3,6 +3,7 @@
 import datetime as dt
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from csp_spark import KEY, SEQ, TS, VALUE, TickStream, binary_op
@@ -147,6 +148,7 @@ def test_dynamic_snap_and_attach(spark):
     assert [v for _, v in got["b"]] == [3.0 + 20.0 + 1]
 
 
+@pytest.mark.slow
 def test_running_unkeyed_matches_global_window(spark):
     """Two-pass prefix plan equals the single-window form bit-for-bit
     for all four associative aggregates, and the plan's data windows
@@ -212,6 +214,7 @@ def test_running_unkeyed_matches_global_window(spark):
     assert lines and all("__pid" in l for l in lines)
 
 
+@pytest.mark.slow
 def test_windowed_unkeyed_matches_global_window(spark):
     """Tail-replication windowed plan equals the single global window
     bit-for-bit (sum/count/mean/min/max), including NULL gaps and the
@@ -442,6 +445,7 @@ def test_feedback_scan_per_cycle(spark):
     assert [v for _, v in got["b"]] == ref([100, 100]) == [60.0, 60.0]
 
 
+@pytest.mark.slow
 def test_windowed_hot_keys_matches_plain_keyed_window(spark):
     """Skew-routing: hot keys run the tail-replication plan, normal
     keys the plain keyed window — together they equal the single keyed
@@ -507,6 +511,7 @@ def test_windowed_hot_keys_matches_plain_keyed_window(spark):
     assert tgot == tref
 
 
+@pytest.mark.slow
 def test_windowed_unkeyed_time_boundary_ties(spark):
     """RANGE frames include later same-timestamp peers; when a
     timestamp tie-group straddles a range-partition boundary the plan
@@ -545,6 +550,7 @@ def test_windowed_unkeyed_time_boundary_ties(spark):
         assert got == ref, nparts
 
 
+@pytest.mark.slow
 def test_running_hot_keys_matches_plain_keyed_window(spark):
     """Running-aggregate skew routing equals the single keyed window
     for every agg, incl. NULL gaps on the hot key."""

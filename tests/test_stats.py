@@ -117,6 +117,7 @@ def test_time_window_decays_at_trigger(spark):
     assert got[1] == (t(60), 0.0)  # all data expired; csp sum of empty = 0
 
 
+@pytest.mark.slow
 def test_first_last_unique_rank_argminmax(spark):
     def t(s):
         return START + TD(seconds=s)
@@ -453,6 +454,7 @@ def test_sessionize_and_session_bars(spark):
         sessionize(x, dt.timedelta(0))
 
 
+@pytest.mark.slow
 def test_functional_stats_surface(spark, ticks):
     """The reference-shaped functional API (csp.stats.mean(x, interval,
     ...)) adapts onto the Rolling engine: values equal the fluent
@@ -511,6 +513,7 @@ def F_lit_one(x):
     return F.when(x.df["value"].isNotNull(), 1.0)
 
 
+@pytest.mark.slow
 def test_ema_horizon_is_windowed_not_truncated(spark):
     """Finite-horizon EMA removes old values FROM THE COMPUTATION
     (reference stats.py:2938): every tick emits, each equal to the

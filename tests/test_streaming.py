@@ -95,6 +95,7 @@ def test_burst_stream(spark, landing):
         assert list(r[VALUE]) == expect[(r[KEY], b)]
 
 
+@pytest.mark.slow
 def test_ema_stream_matches_batch(spark, landing):
     """Stateful streaming EMA == batch EMA on the same ticks, state
     carried across 3 microbatches."""
@@ -149,6 +150,7 @@ def test_rolling_time_stats_stream_matches_batch(spark, landing):
         assert math.isclose(r["roll_mean"], e["roll_mean"])
 
 
+@pytest.mark.slow
 def test_watermark_drops_late_data(spark, tmp_path):
     """A row older than the watermark arriving in a later microbatch is
     dropped from append-mode windowed aggregation — the documented
@@ -304,6 +306,7 @@ def test_push_group_barrier(spark, tmp_path):
     assert pg.push_tick("bid", 1.0) is False
 
 
+@pytest.mark.slow
 def test_dedup_stream(spark, tmp_path):
     """Streaming exact dedup drops repeated fingerprints across
     microbatches while watermark-bounded state holds; matches the
@@ -334,6 +337,7 @@ def test_dedup_stream(spark, tmp_path):
     assert sorted(r["ts"] for r in got) == [START + dt.timedelta(seconds=i) for i in range(3)]
 
 
+@pytest.mark.slow
 def test_align_stream_matches_batch(spark, tmp_path):
     """Streaming align over microbatch drops equals batch core.align
     on the same ticks — same wide frame, same valid/ticked semantics,
@@ -383,6 +387,7 @@ def _write_drops(spark, d, rows, n_drops=2):
             "append").parquet(str(d))
 
 
+@pytest.mark.slow
 def test_hybrid_align_equals_pure_batch(spark, tmp_path):
     """csp's replay->live splice (RootEngine.cpp:150-237): batch align
     over history, terminal last values seeded into the streaming align,
@@ -444,6 +449,7 @@ def test_hybrid_align_equals_pure_batch(spark, tmp_path):
     assert first_ask[3] is not None
 
 
+@pytest.mark.slow
 def test_hybrid_ema_equals_pure_batch(spark, tmp_path):
     """Replay->live EMA: the recursion state (terminal EMA per key)
     seeds the streaming kernel; live values must continue the batch
@@ -650,6 +656,7 @@ def test_websocket_adapter_reconnect(spark):
     assert vals == [0.0, 1.0]
 
 
+@pytest.mark.slow
 def test_pushpull_adapter_replay_then_live(spark):
     """PushPullInputAdapter parity: one channel delivers the history
     rows first, then live pushes — a stateful kernel downstream folds
@@ -685,6 +692,7 @@ def test_pushpull_adapter_replay_then_live(spark):
     pp.stop()
 
 
+@pytest.mark.slow
 def test_rolling_tick_stats_stream_matches_batch(spark, landing):
     """PER-TICK trailing-N-tick stats over the stream — csp.stats
     realtime semantics (emit every tick, not per slide) — equals the
@@ -728,6 +736,7 @@ def test_rolling_tick_stats_stream_matches_batch(spark, landing):
         assert g[5] == r["p50"] and g[6] == r["p25"], (g, r)
 
 
+@pytest.mark.slow
 def test_pushpull_live_seq_after_history_seq(spark):
     """Live seqs continue from max(history seq)+1, not the row count —
     a live tick at the SAME timestamp as the last replay row must fold
@@ -758,6 +767,7 @@ def test_pushpull_live_seq_after_history_seq(spark):
     pp.stop()
 
 
+@pytest.mark.slow
 def test_hybrid_rolling_equals_pure_batch(spark, tmp_path):
     """Replay->live for the rolling kernel: the ring state is seeded
     with each key's last window-1 history rows, so live windows span
@@ -811,6 +821,7 @@ def test_hybrid_rolling_equals_pure_batch(spark, tmp_path):
     assert replay.count() == 24
 
 
+@pytest.mark.slow
 def test_publish_websocket_stream(spark, tmp_path):
     """Outbound websocket publish: streaming rows arrive at a real WS
     server as JSON text frames (one client connection per microbatch)."""
@@ -887,6 +898,7 @@ def test_publish_websocket_stream(spark, tmp_path):
     assert vals == [0.0, 1.0, 2.0, 3.0, 4.0]
 
 
+@pytest.mark.slow
 def test_ohlc_bars_stream_matches_batch(spark, landing):
     """Streaming tumbling OHLC bars equal the batch resample over the
     same rows (epoch-aligned buckets, (ts, seq) open/close order)."""
@@ -916,6 +928,7 @@ def test_ohlc_bars_stream_matches_batch(spark, landing):
         assert math.isclose(g[5], v[5], rel_tol=1e-12)
 
 
+@pytest.mark.slow
 def test_session_bars_stream_matches_batch(spark, landing):
     """Streaming gap sessions (native session_window) equal the batch
     session_bars rollup over the same rows — including at exact-gap
@@ -961,6 +974,7 @@ def test_session_bars_stream_matches_batch(spark, landing):
         assert math.isclose(g[5], v[5], rel_tol=1e-12)
 
 
+@pytest.mark.slow
 def test_incremental_dedup_stream_matches_batch_loop(spark, tmp_path):
     """Streaming rolling-corpus dedup over two microbatch waves lands
     exactly the corpus the sequential batch loop builds: duplicates of
@@ -1019,6 +1033,7 @@ def test_incremental_dedup_stream_matches_batch_loop(spark, tmp_path):
     assert 10 not in got and 12 not in got
 
 
+@pytest.mark.slow
 def test_incremental_dedup_batch_retry_idempotent(spark, tmp_path):
     """A retried epoch (ran fully, crashed before the checkpoint
     commit, re-executed on restart) must land the same corpus: the
@@ -1065,6 +1080,7 @@ def test_incremental_dedup_batch_retry_idempotent(spark, tmp_path):
     assert raised
 
 
+@pytest.mark.slow
 def test_run_node_stream_matches_batch(spark, tmp_path):
     """Streaming imperative nodes equal batch run_node on the same
     ticks: a two-input stateful spread-watcher (cumulative count of
@@ -1115,6 +1131,7 @@ def test_run_node_stream_matches_batch(spark, tmp_path):
     assert grows == ref and len(grows) > 0
 
 
+@pytest.mark.slow
 def test_run_node_stream_alarm_raises(spark, tmp_path):
     """schedule_alarm inside a streaming node raises the documented
     batch-only error instead of silently misbehaving."""
@@ -1138,6 +1155,7 @@ def test_run_node_stream_alarm_raises(spark, tmp_path):
         collect_stream(run_node_stream(arm, x))
 
 
+@pytest.mark.slow
 def test_run_node_stream_alarms_match_batch(spark, tmp_path):
     """Streaming alarms (r11 verdict task 3): run_node_stream(
     alarms=True) runs csp.alarms in a LIVE streaming query with the
@@ -1248,6 +1266,7 @@ def test_run_node_stream_alarms_match_batch(spark, tmp_path):
     assert s_fired == 13 and [h for h in s_heap if h[2]["alive"]]
 
 
+@pytest.mark.slow
 def test_hybrid_node_equals_pure_batch(spark, tmp_path):
     """Replay->live for imperative nodes: a stateful counter/EW node
     replays history, its terminal state dicts seed the streaming
@@ -1677,6 +1696,7 @@ def test_websocket_adapter_manager_class_surface(spark):
     assert hdrs.get("X-Token") == "s3"
 
 
+@pytest.mark.slow
 def test_websocket_adapter_manager_in_realtime_run(spark):
     """The reference program shape (examples/03_using_adapters/
     websocket/e1_websocket_client.py wiring): WebsocketAdapterManager
@@ -1797,6 +1817,7 @@ def _endurance_run(spark, tmp_path, tag, build, n_batches, n_keys=16,
     return state, progress
 
 
+@pytest.mark.slow
 def test_streaming_state_stays_bounded(spark, tmp_path):
     """r11 verdict item 7 — ENDURANCE, not batch-equality: over many
     keys x many microbatches the streaming twins' state-store rows must
@@ -1865,6 +1886,7 @@ def test_streaming_state_stays_bounded(spark, tmp_path):
     assert sizes["node_long"] <= sizes["node_short"] + 8
 
 
+@pytest.mark.slow
 def test_run_node_stream_alarm_cap_is_per_wake(spark, tmp_path,
                                                monkeypatch):
     """The _MAX_ALARM_CYCLES runaway guard scopes to ONE wake (as one
@@ -1924,6 +1946,7 @@ def test_run_node_stream_alarm_cap_is_per_wake(spark, tmp_path,
     assert len(fired) % 2 == 0
 
 
+@pytest.mark.slow
 def test_run_node_stream_watermark_applies_without_alarms(spark,
                                                           tmp_path):
     """The watermark= parameter reaches the plan on the alarms=False
@@ -1946,6 +1969,7 @@ def test_run_node_stream_watermark_applies_without_alarms(spark,
         ).logical().toString()
 
 
+@pytest.mark.slow
 def test_alarm_handover_replay_to_live(spark, tmp_path):
     """Pending alarms CROSS the replay->live handover:
     run_node_with_states(keep_alarms=True) keeps alarms scheduled past
@@ -2044,6 +2068,7 @@ def test_alarm_handover_replay_to_live(spark, tmp_path):
         run_node_stream(node, {"x": stream}, initial_states=states)
 
 
+@pytest.mark.slow
 def test_alarm_handover_idle_key_fires(spark, tmp_path):
     """A seeded key with pending alarms but NO live input at all: the
     synthetic seed row materializes its state in trigger 1, so the
@@ -2096,6 +2121,7 @@ def test_alarm_handover_idle_key_fires(spark, tmp_path):
     assert got == [(START + dt.timedelta(seconds=7), 300.0)]
 
 
+@pytest.mark.slow
 def test_alarm_handover_review_fixes(spark, tmp_path):
     """Second-review regressions on the handover: (1) the replay's
     LAST INPUT VALUES cross — an alarm firing live before any live
@@ -2185,6 +2211,7 @@ def test_alarm_handover_review_fixes(spark, tmp_path):
     assert vals == {10.0}  # 3+4+2+1 — the tuple arrived untouched
 
 
+@pytest.mark.slow
 def test_run_node_stream_state_factory(spark, tmp_path):
     """Batch parity (run_node accepts a zero-arg state FACTORY): the
     streaming runner now does too — fresh state per key, both with and
@@ -2224,6 +2251,7 @@ def test_run_node_stream_state_factory(spark, tmp_path):
     assert ("b", START + dt.timedelta(seconds=1), 15.0) in got
 
 
+@pytest.mark.slow
 def test_run_node_stream_alarms_survive_checkpoint_restart(spark,
                                                            tmp_path):
     """Deployment realism: a streaming alarm query stopped after some

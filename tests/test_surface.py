@@ -41,6 +41,7 @@ def test_enum_and_marker_surface():
     assert issubclass(csp.OutputTypeError, csp.TypeMismatchError)
 
 
+@pytest.mark.slow
 def test_feedback_bind_then_out(spark):
     x = _curve(spark)
     fb = csp.feedback(float)
@@ -79,6 +80,7 @@ def test_delayed_edge(spark):
     assert null.is_bound()
 
 
+@pytest.mark.slow
 def test_add_graph_output_and_build_graph(spark):
     def graph():
         x = _curve(spark)
@@ -147,6 +149,7 @@ def test_typing_markers():
     assert NumpyNDArray([1.5]).tolist() == [1.5]
 
 
+@pytest.mark.slow
 def test_make_passive_and_engine_services(spark):
     """Passive inputs update last-values without emitting cycles
     (builtin_functions.py:67-104), and the run-scoped engine services

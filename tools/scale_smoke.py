@@ -156,7 +156,7 @@ def main() -> None:
     for n in sizes:
         t0 = time.time()
         c = DD.minhash_lsh_pairs(
-            _family(n), threshold=0.5, bucket_cap=500, use_cache=False
+            _family(n), threshold=0.5, bucket_cap=500
         ).count()
         times.append(time.time() - t0)
         assert c == n - 1, f"expected O(n) star pairs, got {c}"
