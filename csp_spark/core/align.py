@@ -65,7 +65,6 @@ def make_active(x: TickStream) -> TickStream:
 def align(
     streams: Mapping[str, TickStream],
     keep_ticked: bool = True,
-    pre_partition: Column | None = None,
 ) -> DataFrame:
     """Union-align streams to a wide last-value frame.
 
@@ -81,15 +80,10 @@ def align(
     __ticked flags true. Distinct cycles at one timestamp differ in seq
     and stay distinct rows.
 
-    ``pre_partition`` (internal; r13 guide §2.4 "share one exchange"):
-    a deterministic pure function of KEY (the node runners pass their
-    hash-bucket expression). When given, the union is hash-repartitioned
-    by it ONCE and every window spec partitions by (bucket, key) instead
-    of (key) — identical frames, since a function of the key can never
-    split a key's rows across buckets — so the runner's downstream
-    ``groupBy(bucket).applyInPandas`` reuses the SAME exchange instead
-    of paying a second full shuffle of the wide frame. The bucket
-    column ``__node_b`` stays on the output for that groupBy.
+    The windows partition by KEY alone, so the frame leaves hash-
+    partitioned by KEY: a keyed consumer that repartitions by KEY next
+    (the node runners' ``repartition(KEY)``) reuses this one exchange
+    instead of shuffling the wide frame again.
     """
     names = list(streams)
     # wiring-time diagnostics (reference type-resolver parity): a
@@ -116,28 +110,16 @@ def align(
         parts.append(s.df.select(*cols))
     u = reduce(lambda a, b: a.unionByName(b), parts)
 
-    pkeys: list = [KEY]
-    if pre_partition is not None:
-        u = u.withColumn("__node_b", pre_partition).repartition(
-            F.col("__node_b")
-        )
-        # HashPartitioning([__node_b]) satisfies ClusteredDistribution
-        # ([__node_b, KEY]) — the windows below add only a local sort,
-        # and the runner's groupBy(__node_b) adds nothing.
-        pkeys = ["__node_b", KEY]
-
     w = (
-        Window.partitionBy(*pkeys)
+        Window.partitionBy(KEY)
         .orderBy(TS, SEQ, SRC)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     # same (key, ts, seq) = same engine cycle: keep only the final row of
     # the cycle (it has seen every same-cycle update via the running
     # last()) and OR the ticked flags across the cycle's rows
-    w_cycle = Window.partitionBy(*pkeys, TS, SEQ)
+    w_cycle = Window.partitionBy(KEY, TS, SEQ)
     out_cols: list[Column] = [F.col(KEY), F.col(TS), F.col(SEQ)]
-    if pre_partition is not None:
-        out_cols.insert(0, F.col("__node_b"))
     for i, name in enumerate(names):
         out_cols.append(F.last(name, ignorenulls=True).over(w).alias(name))
         if keep_ticked:

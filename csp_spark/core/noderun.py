@@ -8,18 +8,16 @@ self-scheduling, and an optional output per cycle. ``run_node`` gives
 the same authoring surface on Spark: the inputs align to engine
 cycles (core/align.py — one row per cycle with last-values and ticked
 flags), and the user's function runs over each KEY's cycles
-sequentially inside ``applyInPandas``, with an alarm heap merged into
-the cycle sequence.
+sequentially inside pandas, with an alarm heap merged into the cycle
+sequence.
 
 Scale shape: per-key sequential Python — the deliberate slow path,
-exactly like the reference's Python nodes vs their cppimpl twins.
-Keys hash into ``buckets`` Arrow groups (default: 4 × shuffle
-partitions, see _default_buckets — per-group Arrow dispatch costs
-~2 ms regardless of size, so the count tracks task parallelism)
-with the per-key loop inside pandas: task parallelism follows
-spark.sql.shuffle.partitions, per-group pandas memory is bounded at
-~stream/buckets, and per-group Arrow overhead amortizes over many
-keys. The GLOBAL_KEY case still runs one group
+exactly like the reference's Python nodes vs their cppimpl twins. The
+aligned frame goes through ``_per_key_pandas``, the one keyed pandas
+runner every per-key Python fold in the package shares: one
+repartition by key (align's own exchange, reused), one engine-order
+sort, and one pandas call per post-AQE shuffle partition, with the
+per-key loop inside pandas. The GLOBAL_KEY case still runs one key
 (same limit as the reference's single-threaded engine). Prefer the
 combinator library (apply/exprtk/stats/feedback_scan) for hot paths —
 this exists so imperative reference nodes port line-for-line.
@@ -92,8 +90,8 @@ class AlarmHandoff:
 
 #: seq marker for the synthetic group-seed row injected when a node
 #: with csp.start() alarms has NO input ticks at all (e.g. a feedback
-#: graph's first fixed-point pass): applyInPandas produces zero groups
-#: over an empty frame, so the alarm chain would never run — the seed
+#: graph's first fixed-point pass): the runner sees no key at all in
+#: an empty frame, so the alarm chain would never run — the seed
 #: row materializes one GLOBAL_KEY group and is skipped as a cycle
 _START_SEED_SEQ = -(1 << 41)
 
@@ -153,60 +151,42 @@ class NodeCycle:
         handle["alive"] = False
 
 
-#: sentinel: resolve the bucket count from the session at call time
-_NODE_BUCKETS = None
+def _per_key_pandas(df, fn, schema):
+    """The one keyed pandas runner behind every per-key Python fold
+    (node runners, dynamic_apply, feedback_scan, exprtk state vars,
+    the EMA family, basket trigger selection). It states three rules
+    once:
 
+    - engine order: each partition arrives sorted by (KEY, TS, SEQ),
+      and pandas groupby keeps row order within a group, so every
+      key's rows reach ``fn`` in engine order with no pandas sort;
+    - NULL keys: ``dropna=False`` makes a NULL key a real group, as
+      Spark's own groupBy(KEY) and the JVM windows treat it;
+    - group count: one pandas call per partition of the
+      ``repartition(KEY)`` exchange, so the number of calls follows
+      the post-AQE shuffle partition count, not a per-key or bucket
+      constant. A frame already hash-partitioned by KEY (align's
+      windows) reuses that exchange.
 
-def _default_buckets(spark) -> int:
-    """Arrow groups per node execution: 4 × shuffle partitions,
-    clamped to [64, 8192]. Spark's applyInPandas pays ~2 ms of
-    JVM-grouping + Arrow-dispatch overhead PER GROUP regardless of
-    group size (measured: a 40k-row identity runner took 8.8 s at
-    4096 groups vs 2.0 s at 128), so the count must track the
-    cluster's task parallelism, not a fixed constant: ~4 groups per
-    task amortizes the overhead while keeping each pandas batch at
-    ~1/4 of a task's input (bounded worker memory). A million-key
-    stream still costs only this many pandas roundtrips — keys hash
-    into buckets, they don't each get one."""
-    try:
-        p = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        p = 200
-    return max(64, min(8192, 4 * p))
+    ``fn(pdf, by_key)`` gets the partition frame and its
+    ``groupby(KEY)`` and returns the output frame (or None for no
+    rows) matching ``schema``."""
 
+    def run(batches):
+        # an empty partition still invokes run, with no batches
+        chunks = [b for b in batches if len(b)]
+        if not chunks:
+            return
+        pdf = pd.concat(chunks, ignore_index=True)
+        out = fn(pdf, pdf.groupby(KEY, sort=False, dropna=False))
+        if out is not None and len(out):
+            yield out
 
-def _bucketed(df, n_buckets: int | None = _NODE_BUCKETS):
-    """Group a keyed frame by key-hash bucket (shared by the node
-    runners and basketlib's trigger-selection pass). NULL keys hash to
-    a bucket of their own (xxhash64(NULL) is NULL → pmod NULL), so the
-    in-pandas loop must groupby with dropna=False to keep them.
-
-    When the frame ALREADY carries ``__node_b`` (align ran with
-    ``pre_partition`` — the r13 shared-exchange path), group on it
-    directly: the frame is hash-partitioned by that column, so the
-    groupBy adds no exchange at all."""
-    from pyspark.sql import functions as F
-
-    if "__node_b" in df.columns:
-        return df.groupBy("__node_b")
-    if n_buckets is None:
-        n_buckets = _default_buckets(df.sparkSession)
-    return df.withColumn(
-        "__node_b", F.pmod(F.xxhash64(F.col(KEY)), F.lit(n_buckets))
-    ).groupBy("__node_b")
-
-
-def _bucket_expr(streams, buckets: int | None = _NODE_BUCKETS):
-    """The node runners' hash-bucket expression (a pure function of
-    KEY), resolved at wiring time so align() can pre-partition its one
-    exchange by it (guide §2.4 — the window passes AND the runner's
-    groupBy then share that single shuffle of the wide frame)."""
-    from pyspark.sql import functions as F
-
-    if buckets is None:
-        spark = next(iter(streams.values())).df.sparkSession
-        buckets = _default_buckets(spark)
-    return F.pmod(F.xxhash64(F.col(KEY)), F.lit(buckets))
+    return (
+        df.repartition(KEY)
+        .sortWithinPartitions(KEY, TS, SEQ)
+        .mapInPandas(run, schema)
+    )
 
 
 def _state_factory(state):
@@ -224,39 +204,27 @@ def _keyed_runner(fn, names, mk_state, multi, end, emit_state,
                   on_stop=None, keep_alarms=False):
     """The per-key cycle engine shared by run_node and
     run_node_with_states: input cycles in (ts, seq) order, alarm heap
-    merged in, optional terminal-state row (pickled) appended.
-
-    The outer Arrow group is a key-hash BUCKET, not a key (one pandas
-    roundtrip per bucket — per-key groups are per-group-overhead-bound
-    at high key cardinality); each key's cycles run sequentially
-    inside the bucket loop."""
+    merged in, optional terminal-state row (pickled) appended. Runs
+    under _per_key_pandas: each key's cycles run sequentially inside
+    the partition loop."""
     import pickle
 
-    def _run(bpdf: pd.DataFrame) -> pd.DataFrame:
+    def _run(pdf: pd.DataFrame, by_key) -> pd.DataFrame:
         out = []
-        # ONE (ts, seq) lexsort per bucket — groupby preserves row
-        # order within groups, so the per-key slices arrive already in
-        # engine order (a per-key sort_values was ~25% of runner time
-        # at 1.5k keys/bucket)
-        bpdf = bpdf.sort_values([TS, SEQ])
-        # columns extracted ONCE per bucket, sliced per key by the
+        # columns extracted ONCE per partition, sliced per key by the
         # groupby's positional indices: building 5+ pandas column
         # objects per KEY (frame __getitem__ + block _chop) was most
-        # of runner time at 1.5k keys/bucket. Positional .array /
-        # fancy-indexed ExtensionArrays keep pandas value semantics
-        # (pd.NaT, np.float64) without Series indexing machinery.
-        keys_all = bpdf[KEY].array
-        tss_all = bpdf[TS].array
-        seqs_all = bpdf[SEQ].to_numpy()
-        tcols_all = {n: bpdf[_ticked_col(n)].to_numpy() for n in names}
-        vcols_all = {n: bpdf[n].array for n in names}
-        # dropna=False: a NULL key is a real group (pandas drops it by
-        # default; Spark's own groupBy(KEY) kept it). .indices yields
-        # first-occurrence-ordered positional arrays, increasing
-        # within each group — engine order under the lexsort above.
-        for idx in bpdf.groupby(
-            KEY, sort=False, dropna=False
-        ).indices.values():
+        # of runner time at 1.5k keys per pandas call. Positional
+        # .array / fancy-indexed ExtensionArrays keep pandas value
+        # semantics (pd.NaT, np.float64) without Series indexing.
+        keys_all = pdf[KEY].array
+        tss_all = pdf[TS].array
+        seqs_all = pdf[SEQ].to_numpy()
+        tcols_all = {n: pdf[_ticked_col(n)].to_numpy() for n in names}
+        vcols_all = {n: pdf[n].array for n in names}
+        # .indices yields each key's positional array, increasing
+        # within the key — engine order
+        for idx in by_key.indices.values():
             _one_key(
                 keys_all[idx[0]],
                 tss_all[idx], seqs_all[idx],
@@ -413,7 +381,6 @@ def run_node(
     output_type: str = "double",
     end: _dt.datetime | None = None,
     outputs: Mapping[str, str] | None = None,
-    buckets: int | None = _NODE_BUCKETS,
     on_start: Callable | None = None,
     start: _dt.datetime | None = None,
     seed_empty_start: bool = False,
@@ -447,13 +414,12 @@ def run_node(
         {"x": inputs} if isinstance(inputs, TickStream) else dict(inputs)
     )
     names = list(streams)
-    wide = align(streams, keep_ticked=True,
-                 pre_partition=_bucket_expr(streams, buckets))
+    wide = align(streams, keep_ticked=True)
     has_seed = False
     if seed_empty_start and on_start is not None and start is not None:
         # a start-alarm node over a completely empty input (feedback
         # pass 0, pure-alarm clocks): inject one skipped seed row so
-        # applyInPandas materializes the GLOBAL_KEY group and the
+        # the runner materializes the GLOBAL_KEY group and the
         # alarm chain runs (cost: one isEmpty job, paid only by nodes
         # that declared csp.start() alarms)
         if wide.isEmpty():
@@ -489,13 +455,13 @@ def run_node(
         on_start=on_start, start_ts=start, has_seed=has_seed,
         on_stop=on_stop,
     )
-    res = _bucketed(wide, buckets).applyInPandas(runner, schema)
+    res = _per_key_pandas(wide, runner, schema)
     if multi:
         from pyspark.sql import functions as F
 
         # Checkpoint the combined frame before slicing per output —
         # without it each returned TickStream would re-execute the
-        # whole applyInPandas node run on action (N full executions of
+        # whole pandas node run on action (N full executions of
         # the user's fn), mirroring run_node_with_states below.
         res = res.localCheckpoint(eager=False)
         return {
@@ -521,7 +487,6 @@ def run_node_with_states(
     state: Mapping[str, Any] | Callable[[], dict] | None = None,
     output_type: str = "double",
     end: _dt.datetime | None = None,
-    buckets: int | None = _NODE_BUCKETS,
     keep_alarms: bool = False,
 ) -> "tuple[TickStream, Any]":
     """run_node plus each key's TERMINAL state: returns
@@ -557,8 +522,7 @@ def run_node_with_states(
         {"x": inputs} if isinstance(inputs, TickStream) else dict(inputs)
     )
     names = list(streams)
-    wide = align(streams, keep_ticked=True,
-                 pre_partition=_bucket_expr(streams, buckets))
+    wide = align(streams, keep_ticked=True)
     mk_state = _state_factory(state)
     schema = (
         f"{KEY} string, {TS} timestamp, {SEQ} long, {VALUE} {output_type}, "
@@ -571,7 +535,7 @@ def run_node_with_states(
 
     from pyspark.sql import functions as F
 
-    combined = _bucketed(wide, buckets).applyInPandas(runner, schema)
+    combined = _per_key_pandas(wide, runner, schema)
     combined = combined.localCheckpoint(eager=False)
     ticks = TickStream(
         combined.filter(F.col(SEQ) != STATE_SEQ).select(KEY, TS, SEQ, VALUE)

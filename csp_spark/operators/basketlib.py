@@ -92,22 +92,16 @@ def sync_dict(
     else:
         # Accepted triggers: greedy per-key subsequence spaced >=
         # threshold (see module docstring). The pandas pass touches
-        # ONLY trigger rows — and groups by a 64-way key-hash BUCKET,
-        # not by key: one Arrow roundtrip per bucket (per-key groups
-        # made the pass per-group-overhead-bound at high key
-        # cardinality — measured 2.5x scaling at 10x keys), with the
-        # per-key greedy scan looping inside pandas.
-        from ..core.noderun import _bucketed
+        # ONLY trigger rows.
+        from ..core.noderun import _per_key_pandas
 
         tdf = trigger.df.select(KEY, TS, SEQ).withColumn(
             "__tus", F.unix_micros(F.col(TS))
         )
 
-        def _accept(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values([KEY, TS, SEQ])
+        def _accept(pdf: pd.DataFrame, by_key) -> pd.DataFrame:
             out_k, out_t = [], []
-            # dropna=False: NULL-key triggers still open windows
-            for key, grp in pdf.groupby(KEY, sort=False, dropna=False):
+            for key, grp in by_key:
                 last = None
                 for t in grp["__tus"]:
                     if last is None or t - last >= us:
@@ -116,8 +110,8 @@ def sync_dict(
                         last = t
             return pd.DataFrame({KEY: out_k, "__tus": out_t})
 
-        accepted = _bucketed(tdf).applyInPandas(
-            _accept, schema=f"{KEY} string, __tus long"
+        accepted = _per_key_pandas(
+            tdf, _accept, f"{KEY} string, __tus long"
         )
         # Attach each member tick to the latest accepted trigger at or
         # before it (last-value carry over the unioned order), keep it

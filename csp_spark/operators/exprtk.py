@@ -18,9 +18,10 @@ C++ ExprTk JIT (cppimpl exprtk_impl). Spark-first mapping:
   input tick) — same align kernel as csp.sample.
 - ``state_vars`` make the expression a per-key RECURRENCE, which no
   window aggregate expresses; that is the designated Arrow path
-  (SURVEY.md §7.3): one mapInPandas pass per key partition evaluating
-  the statement list with Python syntax (``;``-separated, ``:=`` or
-  ``=`` assignment, last expression is the emitted value), state
+  (SURVEY.md §7.3): the keyed pandas runner
+  (core.noderun._per_key_pandas) evaluates, per key, the statement
+  list with Python syntax (``;``-separated, ``:=`` or ``=``
+  assignment, last expression is the emitted value), state
   persisting across rows exactly like ``csp.state()`` vars.
 """
 
@@ -264,19 +265,16 @@ def exprtk_ts(
 
     import pandas as pd
 
+    from ..core.noderun import _per_key_pandas
+
     vtype = "array<double>" if output_ndarray else "double"
     schema = f"{KEY} string, {TS} timestamp, {SEQ} long, {VALUE} {vtype}"
-    base = a.select(KEY, TS, SEQ, *in_names).repartition(KEY).sortWithinPartitions(KEY, TS, SEQ)
+    base = a.select(KEY, TS, SEQ, *in_names)
 
-    def gen(batches):
-        chunks = list(batches)
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True)
-        if pdf.empty:
-            return
+    def fold(pdf, by_key):
         env_base = {"math": math, **vars(math)}
-        for _, g in pdf.groupby(KEY, sort=False):
+        outs = []
+        for _, g in by_key:
             sv = dict(sv0)
             out_vals = []
             for row in g.itertuples(index=False):
@@ -297,6 +295,7 @@ def exprtk_ts(
                 )
             out = g[[KEY, TS, SEQ]].copy()
             out[VALUE] = out_vals
-            yield out
+            outs.append(out)
+        return pd.concat(outs, ignore_index=True)
 
-    return TickStream(base.mapInPandas(gen, schema))
+    return TickStream(_per_key_pandas(base, fold, schema))

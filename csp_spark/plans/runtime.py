@@ -363,32 +363,24 @@ def feedback_scan(
     ``out_i = fn(x_i, out_{i-1})``.
 
     This is a per-key sequential recurrence — inherently not a window
-    aggregate — so it runs on the designated Arrow path (same shape as
-    exprtk state vars): ONE repartition(key) + sortWithinPartitions,
-    partition-level pandas batches, per-key Python fold. Keys are
-    independent → embarrassingly parallel; within a key the fold is
-    sequential, exactly as the reference engine executes it.
+    aggregate — so it runs on the keyed pandas runner
+    (core.noderun._per_key_pandas) with a per-key Python fold. Keys
+    are independent → embarrassingly parallel; within a key the fold
+    is sequential, exactly as the reference engine executes it.
 
     For multi-round fixed-point graphs (label propagation) use
     :func:`feedback_iterate`; for cycle-delayed *wiring* of an already
     computed stream use ``baselib.wrap_feedback``."""
     import pandas as pd
 
-    base = (
-        x.df.select(KEY, TS, SEQ, F.col(x.value_col).alias("__v"))
-        .repartition(KEY)
-        .sortWithinPartitions(KEY, TS, SEQ)
-    )
+    from ..core.noderun import _per_key_pandas
+
+    base = x.df.select(KEY, TS, SEQ, F.col(x.value_col).alias("__v"))
     schema = f"{KEY} string, {TS} timestamp, {SEQ} long, {VALUE} {result_type}"
 
-    def gen(batches):
-        chunks = list(batches)
-        if not chunks:
-            return
-        pdf = pd.concat(chunks, ignore_index=True)
-        if pdf.empty:
-            return
-        for _, g in pdf.groupby(KEY, sort=False):
+    def fold(pdf, by_key):
+        outs = []
+        for _, g in by_key:
             prev = init
             vals = []
             for v in g["__v"]:
@@ -396,9 +388,10 @@ def feedback_scan(
                 vals.append(prev)
             out = g[[KEY, TS, SEQ]].copy()
             out[VALUE] = vals
-            yield out
+            outs.append(out)
+        return pd.concat(outs, ignore_index=True)
 
-    return TickStream(base.mapInPandas(gen, schema))
+    return TickStream(_per_key_pandas(base, fold, schema))
 
 
 class _SnapKeyMarker:
@@ -456,7 +449,7 @@ def attached(pdf=None, name: str | None = None):
     import pandas as _pd
 
     # one-allocation construction (r13, guide §4.5 — this helper runs
-    # once per KEY inside the bucketed runner, and the former
+    # once per KEY inside the keyed runner, and the former
     # mask-filter + select + rename + reset_index chain built four
     # intermediate frames per call; fancy-indexed .array slices keep
     # pandas value semantics (pd.NaT, extension dtypes) and a fresh
@@ -591,9 +584,10 @@ def dynamic_apply(
     """csp.dynamic analog (csp/impl/wiring/dynamic.py:12-100;
     DynamicEngine.cpp): the reference spawns a sub-graph per basket key
     at runtime; Spark is data-parallel over keys already, so a dynamic
-    graph is ``groupBy(key).applyInPandas`` — ``fn(pdf)`` receives one
-    key's ticks in engine order and returns that key's output table
-    (must include key/ts/seq columns per ``output_schema``).
+    graph is a per-key pandas call on the keyed runner
+    (core.noderun._per_key_pandas) — ``fn(pdf)`` receives one key's
+    ticks in engine order and returns that key's output table (must
+    include key/ts/seq columns per ``output_schema``).
 
     Dynamic-argument parity:
     - ``attach={name: stream}`` (csp.attach): each attachment's per-key
@@ -603,8 +597,9 @@ def dynamic_apply(
     - ``snap_streams={name: stream}`` (csp.snap): the stream's
       last value as of this key's FIRST trigger tick, delivered as a
       constant ``__snap_<name>`` column — read it with :func:`snap`.
-      One tiny per-key aggregate + as-of lookup, joined in before the
-      group shuffle (AQE broadcasts it).
+      The snapped stream's rows ride the same union as marker rows;
+      two window passes over the key derive it inside the runner's
+      one exchange, and the marker rows are dropped before ``fn``.
     """
     attach = dict(attach or {})
     snap_streams = dict(snap_streams or {})
@@ -631,23 +626,13 @@ def dynamic_apply(
         )
         df = df.unionByName(part)
     if snap_streams:
-        # r13 (guide §2.4 — share one exchange, remove joins outright):
-        # the snap value (last tick of the snapped stream at-or-before
-        # this key's FIRST trigger tick) used to be a per-stream
-        # [aggregate t0 + join + sort-aggregate + broadcast-join-back]
-        # subtree — 2 extra scans, 2 joins and 2 broadcast-build jobs
-        # per snap stream. It is now computed INSIDE the runner's own
-        # bucket exchange: the snapped stream's (ts, seq, value) rows
-        # ride the union as marker rows (an un-spoofable "\\x00snap:"
-        # __src tag — user attach names are column identifiers and
-        # never contain NUL), two full-frame window passes over
-        # (bucket, key) derive first-trigger-ts and the as-of max, and
-        # the marker rows are dropped before the pandas runner, so fn
-        # receives exactly the frame it did before. max(struct(ts,
-        # seq, value)) picks the row max_by picked ((TS, SEQ) is
-        # unique within a stream) but stays a declarative aggregate.
-        # NULL keys keep a NULL snap (the former left join never
-        # matched them).
+        # The snap value is the last tick of the snapped stream at or
+        # before this key's FIRST trigger tick. Its (ts, seq, value)
+        # rows ride the union as marker rows (an un-spoofable
+        # "\\x00snap:" __src tag — user attach names are column
+        # identifiers and never contain NUL); the key windows below
+        # share the runner's exchange and sort, and the marker rows are
+        # dropped before fn sees the frame.
         df = df.select(
             "*",
             *[
@@ -674,37 +659,34 @@ def dynamic_apply(
             )
             df = df.unionByName(part)
 
-    n_buckets = max(df.sparkSession.sparkContext.defaultParallelism * 4, 8)
-    df = df.withColumn(
-        "__bkt", F.pmod(F.xxhash64(F.col(KEY)), F.lit(n_buckets))
-    )
-    if snap_streams:
         from pyspark.sql import Window as _W
 
-        df = df.repartition(F.col("__bkt"))
-        wb = _W.partitionBy("__bkt", KEY)
+        wb = (
+            _W.partitionBy(KEY).orderBy(TS, SEQ)
+            .rowsBetween(_W.unboundedPreceding, _W.unboundedFollowing)
+        )
         df = df.withColumn(
             "__t0", F.min(F.when(F.col(DYN_SRC) == "", F.col(TS))).over(wb)
         )
         for n in snap_streams:
-            m = F.when(
+            # max_by, not max(struct(ts, seq, value)): the value may be
+            # a type with no ordering (a map)
+            at = F.when(
                 (F.col(DYN_SRC) == F.lit("\x00snap:" + n))
                 & (F.col(TS) <= F.col("__t0")),
-                F.struct(
-                    F.col(TS).alias("__t"),
-                    F.col(SEQ).alias("__s"),
-                    F.col(f"__snapv_{n}").alias("__v"),
-                ),
+                F.struct(TS, SEQ),
             )
             df = df.withColumn(
-                f"__snap_{n}",
-                F.when(F.col(KEY).isNotNull(), F.max(m).over(wb)["__v"]),
+                f"__snap_{n}", F.max_by(f"__snapv_{n}", at).over(wb)
             )
         df = df.filter(
             ~F.col(DYN_SRC).startswith("\x00")
         ).drop("__t0", *[f"__snapv_{n}" for n in snap_streams])
 
+    import pandas as pd
     from pyspark.sql.types import StructType, _parse_datatype_string
+
+    from ..core.noderun import _per_key_pandas
 
     st = (
         _parse_datatype_string(output_schema)
@@ -713,13 +695,11 @@ def dynamic_apply(
     )
     names = st.fieldNames() if isinstance(st, StructType) else None
 
-    def _per_key(pdf, presorted=False):
-        out = fn(pdf if presorted else pdf.sort_values([TS, SEQ]))
-        # fail-loud on fn contract breaches (r13 ADVICE fix): the
-        # pre-bucketing per-key applyInPandas surfaced a None return or
-        # a missing declared column as an error; the bucketed runner's
-        # pd.concat would silently null-fill instead — keep the old
-        # behavior so user-fn bugs stay visible.
+    def _per_key(pdf):
+        out = fn(pdf)
+        # fail-loud on fn contract breaches: a None return or a missing
+        # declared column is an error, where pd.concat would silently
+        # null-fill instead — keep user-fn bugs visible.
         if out is None:
             raise ValueError(
                 "dynamic_apply fn returned None; return a DataFrame "
@@ -737,38 +717,11 @@ def dynamic_apply(
             out = out[names]
         return out
 
-    # Group by a HASH BUCKET of the key, not the key itself, and loop
-    # keys inside pandas (r12; the noderun item-13 device): Spark's
-    # per-group applyInPandas machinery costs ~ms per group, which
-    # dominates at thousands of keys, while a pandas groupby slice is
-    # ~µs. fn still receives exactly the per-key frame it did before —
-    # (TS, SEQ) is a total order, so the per-key sort reproduces the
-    # identical frame regardless of grouping. Bucket count scales with
-    # the session's parallelism (scale-adaptive, not a local constant).
-    # The __bkt column is added (and, on the snap path, the frame is
-    # already repartitioned by it) above, so the groupBy below reuses
-    # that single exchange.
+    def _run(pdf, by_key):
+        outs = [o for o in (_per_key(g) for _, g in by_key) if len(o)]
+        return pd.concat(outs, ignore_index=True) if outs else None
 
-    def _per_bucket(pdf):
-        import pandas as pd
-
-        # ONE engine-order sort per bucket; pandas groupby preserves
-        # within-group row order, so every per-key slice arrives
-        # already (TS, SEQ)-sorted — identical to the per-key sort
-        # ((TS, SEQ) is a total order, no ties to re-break)
-        pdf = pdf.sort_values([TS, SEQ]).drop(columns="__bkt")
-        outs = [
-            _per_key(g, presorted=True)
-            for _, g in pdf.groupby(KEY, sort=False, dropna=False)
-        ]
-        outs = [o for o in outs if len(o)]  # empty frames contribute 0 rows
-        if not outs:
-            return pd.DataFrame({n: pd.Series([], dtype=object)
-                                 for n in (names or [])})
-        return pd.concat(outs, ignore_index=True)
-
-    out = df.groupBy("__bkt").applyInPandas(_per_bucket, schema=output_schema)
-    return TickStream(out)
+    return TickStream(_per_key_pandas(df, _run, output_schema))
 
 
 # ----------------------------------------------------------------------

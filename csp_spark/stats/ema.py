@@ -3,16 +3,19 @@ AdjustedEMA :1542, AlphaDebiasEMA :1620, HalflifeEMA :1723).
 
 EMA is inherently recursive (s_i = a·v_i + (1-a)·s_{i-1}) — not
 expressible as a Spark window aggregate without numeric blow-up — so
-this is the designated Arrow/pandas path (SURVEY.md §7.3):
-``applyInPandas`` per key, pandas ``ewm`` inside (C-vectorized). This
-matches the reference's *own* test oracle (csp/tests/test_stats.py:
-247-261 uses pandas ewm as expected output).
+this is the designated Arrow/pandas path (SURVEY.md §7.3): the keyed
+pandas runner (core.noderun._per_key_pandas) hands each shuffle
+partition's keys to pandas ``ewm`` (C-vectorized, all keys of the
+partition in one grouped pass). This matches the reference's *own*
+test oracle (csp/tests/test_stats.py:247-261 uses pandas ewm as
+expected output). The adjusted event-time halflife EMA runs JVM-side
+(see ema).
 
-Scale: one pandas group = one key's full history. The 100 TB layout
-keys by symbol/entity (millions of keys × bounded history each), which
-is exactly the shape applyInPandas parallelizes. For unbounded single
-keys, pass ``horizon`` (csp's horizon param, stats.py:2918) to bound
-state.
+Scale: each key's full history lands in one partition. The 100 TB
+layout keys by symbol/entity (millions of keys × bounded history
+each), which is exactly the shape a key-partitioned pass
+parallelizes. For unbounded single keys, pass ``horizon`` (csp's
+horizon param, stats.py:2918) to bound state.
 """
 
 from __future__ import annotations
@@ -25,6 +28,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..core.align import align
+from ..core.noderun import _per_key_pandas
 from ..core.ticks import KEY, SEQ, TS, VALUE, TickStream
 
 _SCHEMA = f"{KEY} string, {TS} timestamp, {SEQ} long, {VALUE} double"
@@ -53,41 +57,23 @@ def _ewm_kwargs(
     return kw
 
 
-def _sorted_by_key(x: TickStream):
-    """One shuffle: co-locate each key's history in one partition,
-    time-sorted. Partition count follows spark.sql.shuffle.partitions —
-    many small keys per partition, so the Arrow transfer is one batch
-    stream per PARTITION, not one round-trip per KEY (with ~thousands
-    of keys, per-key applyInPandas spends ~10x the compute time on
-    per-group Arrow/pandas overhead; measured 8.5s -> 0.7s at sf0.1)."""
-    df = x.df.select(KEY, TS, SEQ, F.col(x.value_col).cast("double").alias(VALUE))
-    return df.repartition(KEY).sortWithinPartitions(KEY, TS, SEQ)
+def _run_keyed(df, fn) -> TickStream:
+    """Run ``fn(pdf, by_key)`` on the keyed pandas runner; the output
+    carries the canonical 4 columns with NULL read back as NaN (Arrow
+    maps pandas NaN → SQL NULL; csp float streams carry NaN)."""
+    out = _per_key_pandas(df, fn, _SCHEMA).withColumn(
+        VALUE, F.coalesce(F.col(VALUE), F.lit(float("nan")))
+    )
+    return TickStream(out)
 
 
 def _run_ewm(x: TickStream, fn) -> TickStream:
     """Generic path: ``fn`` maps one key's time-sorted pandas frame to
-    its output frame. Groups are looped in Python, but all inside one
-    partition-level mapInPandas — no per-group Arrow round-trips."""
-
-    def gen(batches):
-        chunks = list(batches)
-        if not chunks:
-            return  # empty partition: mapInPandas still invokes gen
-        pdf = pd.concat(chunks, ignore_index=True)
-        if pdf.empty:
-            return
-        outs = []
-        # rows are (KEY, TS, SEQ)-sorted by _sorted_by_key; groupby
-        # sort=False keeps that order within each group
-        for _, g in pdf.groupby(KEY, sort=False):
-            outs.append(fn(g.reset_index(drop=True)))
-        yield pd.concat(outs, ignore_index=True)
-
-    # Arrow maps pandas NaN → SQL NULL; csp float streams carry NaN
-    out = _sorted_by_key(x).mapInPandas(gen, _SCHEMA).withColumn(
-        VALUE, F.coalesce(F.col(VALUE), F.lit(float("nan")))
-    )
-    return TickStream(out)
+    its output frame; keys loop in Python inside each partition."""
+    df = x.df.select(KEY, TS, SEQ, F.col(x.value_col).cast("double").alias(VALUE))
+    return _run_keyed(df, lambda pdf, by_key: pd.concat(
+        [fn(g.reset_index(drop=True)) for _, g in by_key], ignore_index=True
+    ))
 
 
 def _alpha_of(kw: dict) -> float:
@@ -180,14 +166,8 @@ def _run_ewm_native(
             ),
         )
 
-    def gen(batches):
-        chunks = list(batches)
-        if not chunks:
-            return  # empty partition: mapInPandas still invokes gen
-        pdf = pd.concat(chunks, ignore_index=True)
-        if pdf.empty:
-            return
-        e = pdf.groupby(KEY, sort=False)[VALUE].ewm(**kw)
+    def fold(pdf, by_key):
+        e = by_key[VALUE].ewm(**kw)
         if stat == "mean":
             v = e.mean()
         elif stat == "var":
@@ -195,12 +175,10 @@ def _run_ewm_native(
         else:
             v = e.std(bias=bias)
         pdf[VALUE] = v.reset_index(level=0, drop=True)
-        yield pdf
+        return pdf
 
-    out = _sorted_by_key(x).mapInPandas(gen, _SCHEMA).withColumn(
-        VALUE, F.coalesce(F.col(VALUE), F.lit(float("nan")))
-    )
-    return TickStream(out)
+    df = x.df.select(KEY, TS, SEQ, F.col(x.value_col).cast("double").alias(VALUE))
+    return _run_keyed(df, fold)
 
 
 def ema(
@@ -421,26 +399,14 @@ def ema_cov(
         F.col("__x").isNotNull() & F.col("__y").isNotNull()
     ).select(KEY, TS, SEQ, "__x", "__y")
 
-    def gen(batches):
-        chunks = list(batches)
-        if not chunks:
-            return  # empty partition: mapInPandas still invokes gen
-        pdf = pd.concat(chunks, ignore_index=True)
-        if pdf.empty:
-            return
+    def fold(pdf, by_key):
         outs = []
-        for _, g in pdf.groupby(KEY, sort=False):
+        for _, g in by_key:
             g = g.reset_index(drop=True)
             v = g["__x"].ewm(**kw).cov(g["__y"], bias=bias)
             outs.append(
                 pd.DataFrame({KEY: g[KEY], TS: g[TS], SEQ: g[SEQ], VALUE: v})
             )
-        yield pd.concat(outs, ignore_index=True)
+        return pd.concat(outs, ignore_index=True)
 
-    out = (
-        df.repartition(KEY)
-        .sortWithinPartitions(KEY, TS, SEQ)
-        .mapInPandas(gen, _SCHEMA)
-        .withColumn(VALUE, F.coalesce(F.col(VALUE), F.lit(float("nan"))))
-    )
-    return TickStream(out)
+    return _run_keyed(df, fold)

@@ -831,18 +831,217 @@ def test_run_node_alarm_none_value_detectable(spark):
     assert got == [(START + TD(seconds=1), 42.0)]
 
 
-def test_run_node_null_key_preserved(spark):
-    """A NULL-key row is a real group — bucketed execution must not
-    drop it (review regression: pandas groupby defaults dropna=True)."""
-    from csp_spark import run_node
-
-    rows = [(None, START, 0, 1.0), ("a", START, 0, 2.0)]
-    x = TickStream(spark.createDataFrame(
+def _null_and_real_key(spark, vals, step=1):
+    """The same ticks under a NULL key and under key "a"."""
+    rows = [
+        (k, START + TD(seconds=step * i), i, float(v))
+        for k in (None, "a")
+        for i, v in enumerate(vals)
+    ]
+    return TickStream(spark.createDataFrame(
         rows, "key string, ts timestamp, seq long, value double"
     ))
-    got = sorted(
-        ((r["key"], r["value"])
-         for r in run_node(lambda c: c["x"] * 10, x).df.collect()),
-        key=lambda t: (t[0] is not None, t),
+
+
+def _nk_run_node(spark):
+    from csp_spark import run_node
+
+    def acc(c):
+        c.state["s"] += c["x"]
+        return c.state["s"] * 10
+
+    return run_node(acc, _null_and_real_key(spark, [1, 2, 4, 8]),
+                    state={"s": 0.0}).df.collect()
+
+
+def _nk_run_node_with_states(spark):
+    import pickle
+
+    from csp_spark.core.noderun import run_node_with_states
+
+    def acc(c):
+        c.state["s"] += c["x"]
+        return c.state["s"]
+
+    ticks, states = run_node_with_states(
+        acc, _null_and_real_key(spark, [1, 2, 4, 8]), state={"s": 0.0}
     )
-    assert got == [(None, 10.0), ("a", 20.0)]
+    return ticks.df.collect() + [
+        (r["key"], pickle.loads(r["state"])["s"]) for r in states.collect()
+    ]
+
+
+def _nk_dynamic_apply(spark):
+    from csp_spark.plans.runtime import attached, snap
+
+    def fn(pdf):
+        trig = pdf[pdf["__src"] == ""]
+        out = trig[[KEY, TS, SEQ]].copy()
+        out[VALUE] = (trig[VALUE].cumsum() + len(attached(pdf, "side"))
+                      + snap(pdf, "ref"))
+        return out
+
+    return dynamic_apply(
+        _null_and_real_key(spark, [1, 2, 4, 8], step=2), fn,
+        "key string, ts timestamp, seq long, value double",
+        attach={"side": _null_and_real_key(spark, [5, 6, 7])},
+        snap_streams={"ref": _null_and_real_key(spark, [10, 20])},
+    ).df.collect()
+
+
+def _nk_sync_dict_trigger(spark):
+    from csp_spark.operators.basketlib import sync_dict
+
+    return sync_dict(
+        {"p": _null_and_real_key(spark, [1, 2, 3, 4, 5, 6]),
+         "q": _null_and_real_key(spark, [7, 8, 9], step=2)},
+        TD(seconds=2),
+        trigger=_null_and_real_key(spark, [0, 0, 0, 0, 0]),
+    ).df.collect()
+
+
+def _nk_ema(**kw):
+    def run(spark):
+        from csp_spark import stats
+
+        return stats.ema(
+            _null_and_real_key(spark, [1, 2, 4, 8]), **kw
+        ).df.collect()
+
+    return run
+
+
+def _nk_ema_cov(spark):
+    from csp_spark import stats
+
+    return stats.ema_cov(
+        _null_and_real_key(spark, [1, 2, 4, 8]),
+        _null_and_real_key(spark, [3, 1, 4, 1, 5]),
+        alpha=0.5,
+    ).df.collect()
+
+
+def _nk_exprtk(spark):
+    from csp_spark.operators.exprtk import exprtk_ts
+
+    return exprtk_ts(
+        {"x": _null_and_real_key(spark, [1, 2, 4, 8])},
+        "s := 0.5*s + x; s", state_vars={"s": 0.0},
+    ).df.collect()
+
+
+def _nk_feedback_scan(spark):
+    from csp_spark.plans.runtime import feedback_scan
+
+    return feedback_scan(
+        _null_and_real_key(spark, [1, 2, 4, 8]),
+        lambda v, prev: 0.5 * prev + v,
+    ).df.collect()
+
+
+@pytest.mark.parametrize("caller", [
+    pytest.param(_nk_run_node, id="run_node"),
+    pytest.param(_nk_run_node_with_states, id="run_node_with_states"),
+    pytest.param(_nk_dynamic_apply, id="dynamic_apply"),
+    pytest.param(_nk_sync_dict_trigger, id="sync_dict_trigger"),
+    pytest.param(_nk_ema(alpha=0.5), id="ema_alpha"),
+    pytest.param(_nk_ema(alpha=0.5, horizon=2), id="ema_alpha_horizon"),
+    pytest.param(_nk_ema(halflife=TD(seconds=2), adjust=False),
+                 id="ema_halflife_unadjusted"),
+    pytest.param(_nk_ema_cov, id="ema_cov"),
+    pytest.param(_nk_exprtk, id="exprtk_state_var"),
+    pytest.param(_nk_feedback_scan, id="feedback_scan"),
+])
+def test_null_key_is_a_real_group(spark, caller):
+    """Every per-key Python fold treats a NULL key as a real group:
+    its output equals the output for the same ticks under a real key
+    (pandas groupby drops NaN keys unless told not to)."""
+
+    def norm(v):
+        return "nan" if isinstance(v, float) and v != v else v
+
+    by_key = {None: [], "a": []}
+    for r in caller(spark):
+        by_key[r[0]].append(tuple(norm(v) for v in r[1:]))
+    assert by_key["a"], "the real key produced no output"
+    assert sorted(by_key[None], key=repr) == sorted(by_key["a"], key=repr)
+
+
+def _pin_run_node(spark):
+    from csp_spark import run_node
+
+    x = _null_and_real_key(spark, [1, 2])
+    y = _null_and_real_key(spark, [3, 4])
+    return run_node(lambda c: c["x"], {"x": x, "y": y}).df
+
+
+def _pin_run_node_with_states(spark):
+    from csp_spark.core.noderun import run_node_with_states
+
+    ticks, _ = run_node_with_states(
+        lambda c: c["x"], _null_and_real_key(spark, [1, 2])
+    )
+    return ticks.df
+
+
+def _pin_dynamic_apply(spark):
+    return dynamic_apply(
+        _null_and_real_key(spark, [1, 2]), lambda pdf: pdf,
+        "key string, ts timestamp, seq long, value double",
+        attach={"side": _null_and_real_key(spark, [5])},
+        snap_streams={"ref": _null_and_real_key(spark, [10])},
+    ).df
+
+
+def _pin_ema(spark):
+    from csp_spark import stats
+
+    return stats.ema(_null_and_real_key(spark, [1, 2]), alpha=0.5).df
+
+
+@pytest.mark.parametrize("build", [
+    pytest.param(_pin_run_node, id="run_node_two_inputs"),
+    pytest.param(_pin_run_node_with_states, id="run_node_with_states"),
+    pytest.param(_pin_dynamic_apply, id="dynamic_apply_attach_snap"),
+    pytest.param(_pin_ema, id="ema_alpha"),
+])
+def test_keyed_runner_one_exchange(spark, monkeypatch, build):
+    """The keyed pandas runner shares its caller's key exchange: one
+    hash shuffle per plan (align's windows, the snap windows and the
+    runner's repartition all use it)."""
+    from csp_spark.pipeline.storage import exchanges_in_plan
+
+    # the node runners checkpoint their output lazily, which hides the
+    # plan behind a scan: keep the plan visible
+    monkeypatch.setattr(
+        type(spark.range(1)), "localCheckpoint",
+        lambda self, eager=True: self,
+    )
+    assert exchanges_in_plan(build(spark)) == 1
+
+
+def test_dynamic_snap_of_unorderable_type(spark):
+    """A snap stream whose value has no ordering (a map) still snaps
+    the last value at or before the key's first trigger tick."""
+    from csp_spark.plans.runtime import snap
+
+    sch = "key string, ts timestamp, seq long, value double"
+    x = TickStream(spark.createDataFrame(
+        [("a", START + TD(seconds=2), 0, 1.0),
+         ("b", START + TD(seconds=1), 0, 2.0)], sch))
+    m = TickStream(spark.createDataFrame(
+        [("a", START, 0, {"u": 1.0}),
+         ("a", START + TD(seconds=1), 0, {"u": 2.0}),
+         ("a", START + TD(seconds=3), 0, {"u": 3.0}),
+         ("b", START + TD(seconds=5), 0, {"u": 4.0})],
+        "key string, ts timestamp, seq long, value map<string,double>"))
+
+    def fn(pdf):
+        out = pdf[[KEY, TS, SEQ]].copy()
+        got = snap(pdf, "m")
+        out[VALUE] = -1.0 if got is None else dict(got)["u"]
+        return out
+
+    got = dynamic_apply(x, fn, sch, snap_streams={"m": m}).collect_all()
+    assert got["a"] == [(START + TD(seconds=2), 2.0)]
+    assert got["b"] == [(START + TD(seconds=1), -1.0)]

@@ -1080,7 +1080,6 @@ def test_incremental_dedup_batch_retry_idempotent(spark, tmp_path):
     assert raised
 
 
-@pytest.mark.slow
 def test_run_node_stream_matches_batch(spark, tmp_path):
     """Streaming imperative nodes equal batch run_node on the same
     ticks: a two-input stateful spread-watcher (cumulative count of
@@ -1266,7 +1265,6 @@ def test_run_node_stream_alarms_match_batch(spark, tmp_path):
     assert s_fired == 13 and [h for h in s_heap if h[2]["alive"]]
 
 
-@pytest.mark.slow
 def test_hybrid_node_equals_pure_batch(spark, tmp_path):
     """Replay->live for imperative nodes: a stateful counter/EW node
     replays history, its terminal state dicts seed the streaming
