@@ -44,9 +44,6 @@ after the switch boundary.
 from __future__ import annotations
 
 import datetime as _dt
-import os as _os
-import tempfile as _tempfile
-import uuid as _uuid
 from typing import Mapping
 
 from pyspark.sql import DataFrame, SparkSession
@@ -56,7 +53,7 @@ from ..core.align import align
 from ..core.ticks import KEY, SEQ, TS, VALUE, TickStream
 from ..stats.ema import ema
 from .ops import align_stream, ema_stream
-from .sources import file_ticks
+from .sources import _write_once_source
 
 #: seq tag for state-seed ticks: sorts before every real tick of the
 #: same boundary timestamp, and identifies seed echoes for filtering.
@@ -83,26 +80,14 @@ def seed_ticks(
 ) -> DataFrame:
     """Materialize ``(key, value)`` seed state as a one-file streaming
     source of ticks at the switch boundary with ``seq = SEED_SEQ``.
-    The file is written once, atomically (write-then-rename), before
-    the stream starts — it is always part of the first microbatch."""
-    d = directory or _tempfile.mkdtemp(prefix="csp_seed_")
-    _os.makedirs(d, exist_ok=True)
-    rows = seeds.select(
-        F.col(KEY),
+    The file is written once, atomically, before the stream starts —
+    it is always part of the first microbatch."""
+    return _write_once_source(spark, seeds.select(
+        F.col(KEY).cast("string").alias(KEY),
         F.lit(boundary).cast("timestamp").alias(TS),
         F.lit(SEED_SEQ).cast("long").alias(SEQ),
         F.col(VALUE),
-    )
-    tmp = _os.path.join(d, f".tmp-{_uuid.uuid4().hex}")
-    rows.coalesce(1).write.mode("overwrite").parquet(tmp)
-    final = _os.path.join(d, "seed.parquet")
-    _os.rename(tmp, final)
-    vtype = dict(rows.dtypes)[VALUE]
-    schema = f"{KEY} string, {TS} timestamp, {SEQ} long, {VALUE} {vtype}"
-    return file_ticks(
-        spark, final, schema, ts_col=TS, value_col=VALUE,
-        key_col=KEY, seq_col=SEQ,
-    )
+    ), directory)
 
 
 def spliced(seed_stream: DataFrame, live: DataFrame) -> DataFrame:
@@ -166,18 +151,7 @@ def seed_history_tail(
             VALUE,
         )
     )
-    d = directory or _tempfile.mkdtemp(prefix="csp_seed_")
-    _os.makedirs(d, exist_ok=True)
-    tmp = _os.path.join(d, f".tmp-{_uuid.uuid4().hex}")
-    tail.coalesce(1).write.mode("overwrite").parquet(tmp)
-    final = _os.path.join(d, "seed.parquet")
-    _os.rename(tmp, final)
-    vtype = dict(tail.dtypes)[VALUE]
-    schema = f"{KEY} string, {TS} timestamp, {SEQ} long, {VALUE} {vtype}"
-    return file_ticks(
-        spark, final, schema, ts_col=TS, value_col=VALUE,
-        key_col=KEY, seq_col=SEQ,
-    )
+    return _write_once_source(spark, tail, directory)
 
 
 def run_hybrid_rolling(
@@ -231,9 +205,12 @@ def run_hybrid_ema(
 
     The batch EMA's terminal value per key seeds the live stream: a
     single seed tick with value = terminal EMA reconstructs the
-    recursion state exactly, because for n >= 1 the update rule
-    ``y = (1-a)*y_prev + a*x`` depends only on ``y_prev`` — the
-    spliced stream continues the replay's values bit-for-bit."""
+    recursion state ``(y, w=1)``, and after an observation the update
+    ``y = (w(1-a)*y_prev + a*x) / (w(1-a) + a)`` depends only on
+    ``y_prev`` — the spliced stream continues the replay's values
+    bit-for-bit when each key's last history tick is an observation.
+    Trailing NULL/NaN history ticks decay ``w`` below 1 in the replay,
+    and that decay does not cross the seed."""
     replay = ema(TickStream(history), alpha=alpha, adjust=False).df
     seeds = terminal_last_values(replay)
     spark = live.sparkSession

@@ -1,4 +1,5 @@
-"""Streaming operators: PushModes, windowed stats, stateful EMA.
+"""Streaming operators: PushModes, watermarked window stats, per-tick
+stateful folds.
 
 Reference semantics being mapped (SURVEY.md §2.8):
 
@@ -13,20 +14,25 @@ Reference semantics being mapped (SURVEY.md §2.8):
   explicit ``watermark`` (documented semantic delta).
 - csp.stats in realtime = same rolling semantics driven by wall clock;
   here: watermarked sliding windows (groupBy window()) for time-bucket
-  stats, and applyInPandasWithState for per-tick recursive state (EMA —
-  statsimpl.h:1473).
+  stats.
+- Per-tick state — the trailing-tick ring, align's last values, the
+  EMA recursion (statsimpl.h:1473) and imperative nodes with alarms —
+  lives in the state store. Every such fold runs on ONE keyed runner,
+  ``_stateful_by_key`` (applyInPandasWithState), and equals its batch
+  twin on the same ticks, NULL and NaN ticks included.
 """
 
 from __future__ import annotations
 
 import copy as _copy
 import datetime as _dt
-from typing import Iterator
+from functools import reduce
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupStateTimeout
 
 from ..core.ticks import KEY, SEQ, TS, VALUE
 
@@ -139,6 +145,117 @@ def rolling_time_stats_stream(
     )
 
 
+# ----------------------------------------------------------------------
+# per-tick stateful folds — one keyed state-store runner
+# ----------------------------------------------------------------------
+
+def _stateful_by_key(u, step, out_schema, state_schema, event_timeout=False):
+    """The one keyed state-store runner behind every per-tick streaming
+    fold (rolling ticks, align, EMA, imperative nodes). It states four
+    rules once:
+
+    - chunk order: applyInPandasWithState splits a group's microbatch
+      into Arrow chunks (arrow.maxRecordsPerBatch) with no cross-chunk
+      ordering guarantee, so ALL chunks are concatenated and sorted
+      once by (ts, seq[, __src]) — sorting per chunk would fold rows
+      out of engine order and corrupt the state;
+    - output mode: append (a fold emits each row once, at its cycle);
+    - timeout: none, or event time (``event_timeout``) for a fold the
+      watermark must wake (alarms);
+    - output frame: ``step`` returns rows in ``out_schema`` order; a
+      double column leaves as a masked Float64 array, so a None cell
+      is NULL and a NaN cell stays NaN (a plain float64 column turns
+      both into NULL at the Arrow boundary).
+
+    ``step(key, pdf, state)`` gets the key tuple, the sorted frame
+    (empty on a timeout wake) and the GroupState; it updates the state
+    and returns the rows to emit."""
+    from pyspark.sql.types import DoubleType, _parse_datatype_string
+
+    fields = _parse_datatype_string(out_schema).fields
+    order = [TS, SEQ] + (["__src"] if "__src" in u.columns else [])
+    empty = pd.DataFrame(columns=u.columns)
+
+    def fold(key, pdfs, state):
+        parts = list(pdfs)
+        pdf = empty
+        if parts:
+            pdf = pd.concat(parts, ignore_index=True)
+            # np.lexsort sorts by its LAST key first, and is stable
+            pdf = pdf.take(np.lexsort([pdf[c].to_numpy() for c in order[::-1]]))
+        rows = step(key, pdf, state)
+        cols = {}
+        for i, f in enumerate(fields):
+            vals = [r[i] for r in rows]
+            cols[f.name] = (
+                _masked(vals) if isinstance(f.dataType, DoubleType) else vals
+            )
+        yield pd.DataFrame(cols)
+
+    return u.groupBy(KEY).applyInPandasWithState(
+        fold,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode="append",
+        timeoutConf=(
+            GroupStateTimeout.EventTimeTimeout if event_timeout
+            else GroupStateTimeout.NoTimeout
+        ),
+    )
+
+
+def _masked(vals: list) -> "pd.arrays.FloatingArray":
+    """Doubles with None as the NULL mask and NaN kept as a value."""
+    mask = np.fromiter((v is None for v in vals), bool, len(vals))
+    return pd.arrays.FloatingArray(np.array(vals, dtype=float), mask)
+
+
+def _tagged_union(named: "dict[str, DataFrame]") -> DataFrame:
+    """The inputs of a multi-stream fold as ONE frame: each row tagged
+    with its source index ``__src`` (the engine's tie order within one
+    (ts, seq)), its value cast to double, and ``__null`` = value IS
+    NULL — Arrow hands NULL and NaN to pandas alike as NaN, so the flag
+    is the only way the fold can tell them apart."""
+    parts = []
+    for i, s in enumerate(named.values()):
+        v = F.col(VALUE).cast("double")
+        parts.append(s.select(
+            F.col(KEY), F.col(TS), F.col(SEQ), F.lit(i).alias("__src"),
+            v.alias(VALUE), v.isNull().alias("__null"),
+        ))
+    return reduce(DataFrame.unionByName, parts)
+
+
+def _collapse_cycles(pdf: pd.DataFrame) -> list:
+    """A key's sorted tagged-union rows → engine cycles in (ts, seq)
+    order, coincident multi-stream ticks collapsed to ONE cycle (batch
+    align's rule) — the one implementation align_stream and
+    run_node_stream share.
+
+    NULL rule (batch align's ``last(ignorenulls=True)``): a NULL tick
+    marks its source ticked and leaves the source's last value
+    unchanged; a NaN tick is a value like any other.
+
+    Returns ``[(ts, seq, ticked, updates), ...]``: ``ticked`` lists the
+    sources that ticked in the cycle, ``updates`` their new
+    ``(src, value)`` pairs (NULL ticks left out)."""
+    cycles: "list[tuple]" = []
+    cur = None
+    for ts, seq, src, v, null in zip(
+        pdf[TS], pdf[SEQ], pdf["__src"], pdf[VALUE], pdf["__null"]
+    ):
+        if src < 0:
+            # a group-materialization seed (alarm handover), not a tick
+            continue
+        if cur is None or (ts, seq) != (cur[0], cur[1]):
+            cur = (ts, int(seq), [], [])
+            cycles.append(cur)
+        cur[2].append(int(src))
+        if not null:
+            cur[3].append((int(src), float(v)))
+    return cycles
+
+
 def rolling_tick_stats_stream(
     x: DataFrame, window: int, quantiles: "dict[str, float] | None" = None
 ) -> DataFrame:
@@ -153,7 +270,7 @@ def rolling_tick_stats_stream(
     Same in-order contract as ema_stream: rows arrive time-ordered per
     key across microbatches; within a batch the fold sorts by
     (ts, seq). Equality-tested against the batch stats.Rolling tick
-    window.
+    window, NULL values and NULL keys included.
 
     ``quantiles``: extra per-tick exact quantile columns, e.g.
     ``{"roll_p50": 0.5}`` — csp.stats.quantile's realtime form. The
@@ -182,51 +299,31 @@ def rolling_tick_stats_stream(
             return sorted_vals[lo]
         return sorted_vals[lo] * (hi - pos) + sorted_vals[int(hi)] * (pos - lo)
 
-    def fold(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
+    def step(key, pdf, state):
         ring: list = list(state.get[0]) if state.exists else []
         out = []
-        parts = list(pdfs)
-        if parts:
-            pdf = pd.concat(parts, ignore_index=True).sort_values([TS, SEQ])
-            for ts, seq, v in zip(pdf[TS], pdf[SEQ], pdf[VALUE]):
-                fv = float(v)
-                ring.append(fv)
-                if len(ring) > window:
-                    ring.pop(0)
-                vals = [r for r in ring if r == r]  # NaN-skipping stats
-                n = len(vals)
-                s = sum(vals) if n else None
-                row = [
-                    key[0], ts, seq, n, s,
-                    (s / n) if n else None,
-                    min(vals) if n else None,
-                    max(vals) if n else None,
-                ]
-                if qcols:
-                    sv = sorted(vals)
-                    row += [_pct(sv, q) for q in qcols.values()]
-                out.append(tuple(row))
+        for ts, seq, v in zip(pdf[TS], pdf[SEQ], pdf[VALUE]):
+            ring.append(float(v))
+            if len(ring) > window:
+                ring.pop(0)
+            vals = [r for r in ring if r == r]  # NaN-skipping stats
+            n = len(vals)
+            s = sum(vals) if n else None
+            row = [
+                key[0], ts, seq, n, s,
+                (s / n) if n else None,
+                min(vals) if n else None,
+                max(vals) if n else None,
+            ]
+            if qcols:
+                sv = sorted(vals)
+                row += [_pct(sv, q) for q in qcols.values()]
+            out.append(row)
         state.update((ring,))
-        yield pd.DataFrame(
-            out,
-            columns=[KEY, TS, SEQ, "roll_count", "roll_sum", "roll_mean",
-                     "roll_min", "roll_max", *qcols],
-        )
+        return out
 
-    return x.groupBy(KEY).applyInPandasWithState(
-        fold,
-        outputStructType=out_schema,
-        stateStructType="ring array<double>",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _stateful_by_key(x, step, out_schema, "ring array<double>")
 
-
-# ----------------------------------------------------------------------
-# stateful per-tick EMA — applyInPandasWithState
-# ----------------------------------------------------------------------
 
 def align_stream(streams: "dict[str, DataFrame]") -> DataFrame:
     """The align kernel in REALTIME mode: union the named tick streams
@@ -241,121 +338,72 @@ def align_stream(streams: "dict[str, DataFrame]") -> DataFrame:
     engine): rows arrive time-ordered per key across microbatches;
     within a batch rows fold in (ts, seq, source-tag) order. Same
     (ts, seq) across streams = one engine cycle → one output row with
-    both ticked flags true (batch align's cycle-collapse rule).
+    both ticked flags true (batch align's cycle-collapse rule). A NULL
+    tick sets its ticked flag and keeps the stream's last value; a NaN
+    tick carries NaN (``_collapse_cycles``).
     """
     names = list(streams)
-    parts = []
-    for i, (name, s) in enumerate(streams.items()):
-        parts.append(
-            s.select(
-                F.col(KEY), F.col(TS), F.col(SEQ),
-                F.lit(i).alias("__src"),
-                F.col(VALUE).cast("double").alias(VALUE),
-            )
-        )
-    u = parts[0]
-    for p in parts[1:]:
-        u = u.unionByName(p)
-
+    n_src = len(names)
     out_schema = (
         f"{KEY} string, {TS} timestamp, {SEQ} long, "
         + ", ".join(f"{n} double, {n}__ticked boolean" for n in names)
     )
-    state_schema = ", ".join(f"s{i} double" for i in range(len(names)))
-    n_src = len(names)
+    state_schema = ", ".join(f"s{i} double" for i in range(n_src))
 
-    def fold(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
+    def step(key, pdf, state):
         last = list(state.get) if state.exists else [None] * n_src
-        rows: dict[tuple, list] = {}
-        # Concatenate ALL of the group's Arrow chunks before sorting:
-        # applyInPandasWithState splits a group's microbatch into
-        # multiple chunks (arrow.maxRecordsPerBatch) with no cross-chunk
-        # ordering guarantee — sorting per chunk would fold rows out of
-        # (ts, seq) order and corrupt last-value state.
-        parts = list(pdfs)
-        if parts:
-            pdf = pd.concat(parts, ignore_index=True).sort_values(
-                [TS, SEQ, "__src"]
-            )
-            for ts, seq, src, v in zip(
-                pdf[TS], pdf[SEQ], pdf["__src"], pdf[VALUE]
-            ):
-                last[int(src)] = float(v)
-                cycle = (ts, seq)
-                row = rows.get(cycle)
-                if row is None:
-                    row = [key[0], ts, seq] + [None, False] * n_src
-                    rows[cycle] = row
-                # refresh EVERY stream's last value on this cycle row
-                for j in range(n_src):
-                    row[3 + 2 * j] = last[j]
-                row[3 + 2 * int(src) + 1] = True
+        out = []
+        for ts, seq, ticked, updates in _collapse_cycles(pdf):
+            for j, v in updates:
+                last[j] = v
+            row = [key[0], ts, seq]
+            for j in range(n_src):
+                row += (last[j], j in ticked)
+            out.append(row)
         state.update(tuple(last))
-        cols = [KEY, TS, SEQ] + [
-            c for n in names for c in (n, f"{n}__ticked")
-        ]
-        yield pd.DataFrame(list(rows.values()), columns=cols)
+        return out
 
-    return u.groupBy(KEY).applyInPandasWithState(
-        fold,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _stateful_by_key(
+        _tagged_union(streams), step, out_schema, state_schema
     )
 
 
-_EMA_OUT_SCHEMA = (
-    f"{KEY} string, {TS} timestamp, {SEQ} long, value double"
-)
-_EMA_STATE_SCHEMA = "ema double, n long"
-
-
 def ema_stream(x: DataFrame, alpha: float) -> DataFrame:
-    """Per-tick recursive EMA over the stream, exact parity with
-    csp.stats.ema(adjust=False) (stats.py:2910-3006; EMA kernel
-    statsimpl.h:1473): state (ema, n) lives in the state store per key
-    and survives across microbatches; each batch folds its rows in
-    (ts, seq) order.
+    """Per-tick recursive EMA over the stream, equal to batch
+    ``stats.ema(alpha, adjust=False)`` — pandas' adjust=False,
+    ignore_na=False recursion (csp.stats.ema, stats.py:2910-3006; EMA
+    kernel statsimpl.h:1473): a NULL or NaN tick emits the held value
+    and decays the old value's weight, so the next observation weighs
+    in more. State ``(ema, w)`` — the value and its decayed weight,
+    ``ema`` NaN until the first observation — lives in the state store
+    per key and survives across microbatches.
 
     Ordering contract: rows must arrive time-ordered per key ACROSS
     microbatches (Kafka partition ordering / chronological file drops)
     — the same in-order delivery the reference assumes of its adapters
     (SURVEY.md §2.8 'csp assumes adapters deliver in order')."""
+    keep = 1.0 - alpha
 
-    def fold(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            ema, n = state.get
-        else:
-            ema, n = 0.0, 0
+    def step(key, pdf, state):
+        ema, w = state.get if state.exists else (float("nan"), 1.0)
         out = []
-        # Same cross-chunk rule as align_stream's fold: concat every
-        # chunk first, sort once — per-chunk sorting breaks (ts, seq)
-        # order when a group's batch spans Arrow chunks.
-        parts = list(pdfs)
-        if parts:
-            pdf = pd.concat(parts, ignore_index=True).sort_values([TS, SEQ])
-            for ts, seq, v in zip(pdf[TS], pdf[SEQ], pdf[VALUE]):
-                fv = float(v)
-                if fv != fv:  # NaN: ignore_na=True semantics
-                    out.append((key[0], ts, seq, ema if n else float("nan")))
-                    continue
-                ema = fv if n == 0 else (1.0 - alpha) * ema + alpha * fv
-                n += 1
-                out.append((key[0], ts, seq, ema))
-        state.update((ema, n))
-        yield pd.DataFrame(out, columns=[KEY, TS, SEQ, VALUE])
+        for ts, seq, v in zip(pdf[TS], pdf[SEQ], pdf[VALUE]):
+            v = float(v)
+            if ema == ema:
+                w *= keep
+                if v == v:
+                    if ema != v:  # pandas' guard: a constant series stays exact
+                        ema = (w * ema + alpha * v) / (w + alpha)
+                    w = 1.0
+            elif v == v:
+                ema = v
+            out.append((key[0], ts, seq, ema))
+        state.update((ema, w))
+        return out
 
-    return x.groupBy(KEY).applyInPandasWithState(
-        fold,
-        outputStructType=_EMA_OUT_SCHEMA,
-        stateStructType=_EMA_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _stateful_by_key(
+        x, step, f"{KEY} string, {TS} timestamp, {SEQ} long, {VALUE} double",
+        "ema double, w double",
     )
 
 
@@ -543,10 +591,16 @@ def run_node_stream(
     csp.run(realtime=True)).
 
     One stateful stage does both jobs: the tagged union folds to
-    engine cycles with last-value carry (align_stream's kernel), and
-    the user's ``fn(cycle)`` runs once per cycle with its state dict
-    pickled into the store between microbatches (arbitrary Python
-    state, same bytes the batch runner keeps in-process).
+    engine cycles with last-value carry (``_collapse_cycles``, align's
+    kernel — a NULL tick keeps the last value, as batch run_node's
+    align does), and the user's ``fn(cycle)`` runs once per cycle. The
+    state row holds each input's last value plus ONE pickle of
+    ``(ustate, heap, order, fired)``: the user's state dict (arbitrary
+    Python state, the same bytes the batch runner keeps in-process)
+    and the pending-alarm heap, entries ``(pd.Timestamp, order,
+    handle)`` exactly as the batch runner's. Pickling the two together
+    keeps handle identity across the state store, so a handle a node
+    stored in ``cycle.state`` still cancels the heap's entry.
 
     **Alarms** (``alarms=True``): ``cycle.schedule_alarm`` /
     ``cancel_alarm`` work in a live streaming query with the
@@ -555,37 +609,51 @@ def run_node_stream(
     in (ts, seq) order with input cycles when input is flowing, and
     woken by an event-time state timeout when the key is idle (the
     watermark advancing past the alarm time is the streaming analog of
-    the engine clock reaching it). The pending-alarm heap is pickled
-    WITH the user state dict in one blob, so a handle a node stored in
-    ``cycle.state`` still cancels the heap's entry after a state-store
-    round trip (pickle preserves object identity within one blob).
-    Spark 4's ``transformWithStateInPandas`` timers are the
-    one-timer-per-alarm native API, but its Python worker needs the
-    ``google.protobuf`` package (absent in this environment), so the
-    timer is emulated on ``applyInPandasWithState`` with ONE re-armed
-    event-time timeout = the earliest pending alarm — semantically
-    identical (timers only WAKE the key; firing order is owned by the
-    heap either way). With ``alarms=False`` (default)
-    ``schedule_alarm`` raises, keeping the no-alarm fast path's state
-    row free of the heap blob.
+    the engine clock reaching it). Spark 4's
+    ``transformWithStateInPandas`` timers are the one-timer-per-alarm
+    native API, but its Python worker needs the ``google.protobuf``
+    package (absent in this environment), so the timer is emulated on
+    ``applyInPandasWithState`` with ONE re-armed event-time timeout =
+    the earliest pending alarm — semantically identical (timers only
+    WAKE the key; firing order is owned by the heap either way).
+    ``fired`` persists only to keep alarm-cycle seqs unique and
+    batch-matching; the _MAX_ALARM_CYCLES runaway guard applies PER
+    WAKE, as in one batch replay. With ``alarms=False`` (default)
+    ``schedule_alarm`` raises, the heap stays empty, and the stage has
+    no timeout and no watermark unless ``watermark`` is given: late
+    rows are folded, not dropped.
+
+    Handover: seed ``initial_states`` from ``run_node_with_states(
+    keep_alarms=True)`` (with ``alarms=True``) and pending alarms
+    CROSS the replay→live boundary — each seed is the engine's own
+    (state, heap, order, fired) blob, so handles stored in the state
+    dict still cancel, and alarm-cycle seqs continue where the replay
+    stopped — including for keys that never receive a live input (a
+    synthetic seed row materializes each alarm-carrying key's state in
+    trigger 1, so the watermark alone fires them). A plain-dict seed
+    (the default run_node_with_states shape) carries NO heap.
 
     Ordering contract: rows arrive time-ordered per key across
     microbatches; within a batch cycles fold in (ts, seq) order with
     coincident multi-stream ticks collapsed to ONE cycle (batch
     align's rule); an alarm coincident with an input tick fires after
     that timestamp's input cycles (batch _keyed_runner's rule).
-    Equality-tested against batch run_node, alarms included.
+    Equality-tested against batch run_node, alarms, NULL and NaN ticks
+    and a checkpoint restart included.
     """
+    import heapq
     import pickle
 
-    from ..core.noderun import NO_OUTPUT, NodeCycle
+    from ..core.noderun import (
+        _ALARM_SEQ_BASE, _MAX_ALARM_CYCLES, NO_OUTPUT, NodeCycle,
+        _state_factory,
+    )
 
     named = {"x": streams} if isinstance(streams, DataFrame) else dict(streams)
     names = list(named)
     n_src = len(names)
     _NUMERIC = {"tinyint", "smallint", "int", "bigint", "float", "double"}
-    parts = []
-    for i, (name, s) in enumerate(named.items()):
+    for name, s in named.items():
         # the state-store row holds doubles — reject non-numeric inputs
         # LOUDLY (batch run_node passes values through untyped; a cast
         # here would silently NULL strings/decimals and the node would
@@ -598,17 +666,7 @@ def run_node_stream(
                 "numerics explicitly, or run non-numeric nodes in batch "
                 "mode (run_node)"
             )
-        parts.append(
-            s.select(
-                F.col(KEY), F.col(TS), F.col(SEQ),
-                F.lit(i).alias("__src"),
-                F.col(VALUE).cast("double").alias(VALUE),
-            )
-        )
-    u = parts[0]
-    for p in parts[1:]:
-        u = u.unionByName(p)
-
+    u = _tagged_union(named)
     out_schema = f"{KEY} string, {TS} timestamp, {SEQ} long, {VALUE} {output_type}"
     state_schema = (
         ", ".join(f"s{i} double" for i in range(n_src)) + ", ustate binary"
@@ -616,22 +674,39 @@ def run_node_stream(
     # batch run_node parity: state may be a zero-arg factory (fresh
     # per key) or a dict prototype (deep-copied per key) — the ONE
     # implementation of that rule lives in core.noderun
-    from ..core.noderun import _state_factory
-
     mk_state = _state_factory(state)
-    if alarms:
-        return _run_node_stream_alarms(
-            fn, u, names, n_src, out_schema, state_schema, mk_state,
-            initial_states, watermark,
-        )
     seed_states = _seed_initial_states(initial_states)
-    bad = [k for k, v in seed_states.items() if _is_alarm_seed(v)]
-    if bad:
-        raise ValueError(
-            "initial_states carry pending-alarm blobs (run_node_with_"
-            "states(keep_alarms=True)) — resume them with alarms=True; "
-            f"the no-alarm runner would silently drop them (keys {bad[:3]})"
+    if not alarms:
+        bad = [k for k, v in seed_states.items() if _is_alarm_seed(v)]
+        if bad:
+            raise ValueError(
+                "initial_states carry pending-alarm blobs (run_node_with_"
+                "states(keep_alarms=True)) — resume them with alarms=True; "
+                f"the no-alarm runner would silently drop them (keys {bad[:3]})"
+            )
+
+    # a seeded key with PENDING alarms but no live input would never
+    # materialize in the state store (applyInPandasWithState has no
+    # initialState) — its alarms would sit unfired forever. Inject ONE
+    # synthetic row per such key through a write-once side source:
+    # _collapse_cycles drops it (__src < 0) but the wake creates the
+    # state row and arms the timeout. The row carries an ancient fixed
+    # timestamp — it arrives in trigger 1 while the watermark is still
+    # 0 (so it is not dropped as late) and can never ADVANCE the
+    # watermark past legitimate live data.
+    pending = [
+        k for k, v in seed_states.items()
+        if _is_alarm_seed(v) and any(e[2]["alive"] for e in v.heap)
+    ]
+    if pending:
+        from .sources import _write_once_source
+
+        ancient = _dt.datetime(1970, 1, 1, 0, 0, 1)
+        spark = u.sparkSession
+        seeds = spark.createDataFrame(
+            [(k, ancient, 0, -1, None, True) for k in pending], u.schema
         )
+        u = u.unionByName(_write_once_source(spark, seeds))
 
     def _no_alarms(*_a, **_k):
         raise NotImplementedError(
@@ -640,46 +715,114 @@ def run_node_stream(
             "or run_node over history then hand over via streaming.hybrid"
         )
 
-    def fold(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
+    def _initial(k):
+        """(last, ustate, heap, order, fired) of a key's first wake."""
+        seed = seed_states.get(k)
+        if _is_alarm_seed(seed):
+            # replay handover with pending alarms: ONE deepcopy keeps
+            # handle identity between the copied state dict and the
+            # copied heap; the replay's last input values cross too
+            # (alarm cycles read inputs)
+            s2 = _copy.deepcopy(seed)
+            last = [(s2.last or {}).get(n) for n in names]
+            return last, s2.state, s2.heap, s2.order, s2.fired
+        ustate = _copy.deepcopy(seed) if k in seed_states else mk_state()
+        return [None] * n_src, ustate, [], 0, 0
+
+    def step(key, pdf, state):
         if state.exists:
             stored = state.get
             last = list(stored[:n_src])
-            ustate = pickle.loads(bytes(stored[n_src]))
-        elif key[0] in seed_states:
-            last = [None] * n_src
-            ustate = _copy.deepcopy(seed_states[key[0]])
+            ustate, heap, order0, fired0 = pickle.loads(bytes(stored[n_src]))
         else:
-            last = [None] * n_src
-            ustate = mk_state()
+            last, ustate, heap, order0, fired0 = _initial(key[0])
+        order = [order0]
+        fired = [fired0]   # cumulative: alarm-cycle seq numbering
+        fired_now = [0]    # this wake only: the runaway guard's scope
         out = []
-        chunks = list(pdfs)
-        if chunks:
-            for (ts, seq), updates in _collapse_cycles(chunks):
-                ticked = {}
-                for src, v in updates:
-                    last[src] = v
-                    ticked[names[src]] = True
-                vals = {n: last[i] for i, n in enumerate(names)}
-                cyc = NodeCycle(ts, int(seq), ustate, vals, ticked, _no_alarms)
-                r = fn(cyc)
-                if r is not NO_OUTPUT and r is not None:
-                    out.append((key[0], ts, int(seq), r))
-        state.update(tuple(last) + (pickle.dumps(ustate),))
-        yield pd.DataFrame(out, columns=[KEY, TS, SEQ, VALUE])
 
-    # the caller's watermark applies here too (late-data tolerance for
-    # the state operator); the 0 default stays a no-op so the historic
-    # no-watermark behavior of this path is unchanged
-    if watermark:
+        def _schedule(ats, value):
+            handle = {"alive": True, "value": value, "ts": ats}
+            order[0] += 1
+            heapq.heappush(heap, (pd.Timestamp(ats), order[0], handle))
+            return handle
+
+        def _emit(cyc, r):
+            if r is NO_OUTPUT or r is None:
+                return
+            # batch run_node's plain float64 frame turns a NaN return
+            # into NULL; the runner's masked frame would keep it
+            if isinstance(r, float) and r != r:
+                r = None
+            out.append((key[0], cyc.now, cyc.seq, r))
+
+        def _fire(limit_ts, inclusive):
+            """Fire due alarms: ats < limit (input-cycle interleave —
+            the batch runner's _fire_alarms rule, so a coincident
+            alarm lands AFTER that timestamp's input cycles) or
+            ats <= limit (watermark drain — the engine clock reached
+            the alarm time)."""
+            while heap and fired_now[0] < _MAX_ALARM_CYCLES:
+                ats, _, handle = heap[0]
+                if not handle["alive"]:
+                    heapq.heappop(heap)
+                    continue
+                if ats > limit_ts if inclusive else ats >= limit_ts:
+                    break
+                heapq.heappop(heap)
+                fired[0] += 1
+                fired_now[0] += 1
+                cyc = NodeCycle(
+                    ats, _ALARM_SEQ_BASE + fired[0], ustate,
+                    {n: last[i] for i, n in enumerate(names)}, {},
+                    _schedule, alarm=handle["value"],
+                )
+                _emit(cyc, fn(cyc))
+
+        rt = _schedule if alarms else _no_alarms
+        for ts, seq, ticked, updates in _collapse_cycles(pdf):
+            _fire(ts, inclusive=False)
+            for j, v in updates:
+                last[j] = v
+            cyc = NodeCycle(
+                ts, seq, ustate, {n: last[i] for i, n in enumerate(names)},
+                {names[j]: True for j in ticked}, rt,
+            )
+            _emit(cyc, fn(cyc))
+        # drain alarms the engine clock (= the watermark) has reached —
+        # on a timeout wake this is the whole reason we're here; after
+        # input it catches alarms between the last row and the
+        # watermark. Read only with a pending heap: it raises when the
+        # stage has no watermark (alarms=False, the default)
+        wm_ms = state.getCurrentWatermarkMs() if heap else 0
+        if wm_ms > 0:
+            _fire(pd.Timestamp(wm_ms, unit="ms"), inclusive=True)
+        while heap and not heap[0][2]["alive"]:
+            heapq.heappop(heap)
+        state.update(
+            tuple(last)
+            + (pickle.dumps((ustate, heap, order[0], fired[0])),)
+        )
+        if heap:
+            # re-arm ONE event-time timeout at the earliest live alarm,
+            # 1 ms EARLY: Spark fires an event-time timeout only when
+            # the watermark advances strictly BEYOND it, so a timeout
+            # set AT the alarm time would miss a watermark that lands
+            # exactly on it (batch `end` is inclusive — an alarm at
+            # exactly the final watermark must fire). The early wake at
+            # worst drains nothing and re-arms. It must also sit
+            # strictly past the current watermark.
+            next_ms = heap[0][0].value // 1_000_000
+            state.setTimeoutTimestamp(max(next_ms - 1, wm_ms + 1))
+        return out
+
+    # alarms read the watermark as the engine clock (0 by default);
+    # without alarms a watermark only when asked for — late-data
+    # tolerance for the state operator, no-op by default
+    if alarms or watermark:
         u = with_watermark(u, watermark)
-    return u.groupBy(KEY).applyInPandasWithState(
-        fold,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _stateful_by_key(
+        u, step, out_schema, state_schema, event_timeout=alarms
     )
 
 
@@ -706,216 +849,3 @@ def _is_alarm_seed(v):
     from ..core.noderun import AlarmHandoff
 
     return isinstance(v, AlarmHandoff)
-
-
-def _collapse_cycles(chunks):
-    """A key's microbatch chunks → engine cycles in (ts, seq) order,
-    coincident multi-stream ticks collapsed to ONE cycle (batch
-    align's rule) — the one implementation both streaming folds share.
-    Returns [((ts, seq), [(src, value), ...]), ...]."""
-    pdf = pd.concat(chunks, ignore_index=True).sort_values(
-        [TS, SEQ, "__src"]
-    )
-    # __src < 0 rows are group-materialization seeds (alarm handover),
-    # not input ticks
-    pdf = pdf[pdf["__src"] >= 0]
-    cycles: "list[tuple]" = []
-    cur = None
-    for ts, seq, src, v in zip(pdf[TS], pdf[SEQ], pdf["__src"], pdf[VALUE]):
-        if cur is None or (ts, seq) != cur[0]:
-            cur = ((ts, seq), [])
-            cycles.append(cur)
-        cur[1].append((int(src), float(v)))
-    return cycles
-
-
-def _run_node_stream_alarms(
-    fn, u, names, n_src, out_schema, state_schema, mk_state,
-    initial_states, watermark,
-):
-    """The alarms=True engine behind :func:`run_node_stream` (see its
-    docstring for the semantics and the transformWithStateInPandas
-    note). State row: n_src last-value doubles + ONE pickle of
-    ``(ustate, heap, order, fired)`` — heap entries are
-    ``(pd.Timestamp, order, handle)`` exactly as the batch runner's
-    (core/noderun.py:223); pickling user state and heap together keeps
-    handle identity across the state store, so cancel_alarm on a
-    stored handle still kills the heap entry. ``fired`` persists only
-    to keep alarm-cycle seqs unique and batch-matching; the
-    _MAX_ALARM_CYCLES runaway guard applies PER WAKE, as in one batch
-    replay — a long-lived query never exhausts a lifetime budget.
-
-    Handover: seed ``initial_states`` from ``run_node_with_states(
-    keep_alarms=True)`` and pending alarms CROSS the replay→live
-    boundary — each seed is the engine's own (state, heap, order,
-    fired) blob, so handles stored in the state dict still cancel, and
-    alarm-cycle seqs continue where the replay stopped — including for
-    keys that never receive a live input (a synthetic seed row
-    materializes each alarm-carrying key's state in trigger 1, so the
-    watermark alone fires them). A plain-dict seed (the
-    default run_node_with_states shape) carries NO heap — alarms
-    scheduled past the replay end were dropped there, and a guard like
-    ``if 'rep' not in cycle.state`` over a stored handle will skip
-    re-arming."""
-    import heapq
-    import pickle
-
-    from ..core.noderun import (
-        _ALARM_SEQ_BASE, _MAX_ALARM_CYCLES, NO_OUTPUT, NodeCycle,
-    )
-
-    seed_states = _seed_initial_states(initial_states)
-
-    # a seeded key with PENDING alarms but no live input would never
-    # materialize in the state store (applyInPandasWithState has no
-    # initialState) — its alarms would sit unfired forever. Inject ONE
-    # synthetic row per such key through a side file-stream union: the
-    # fold drops it from cycle collapse (__src < 0) but the wake
-    # creates the state row and arms the timeout. The row carries an
-    # ancient fixed timestamp — it arrives in trigger 1 while the
-    # watermark is still 0 (so it is not dropped as late) and can
-    # never ADVANCE the watermark past legitimate live data.
-    pending = [
-        k for k, v in seed_states.items()
-        if _is_alarm_seed(v) and any(e[2]["alive"] for e in v.heap)
-    ]
-    if pending:
-        # (hybrid.seed_ticks is the same write-once-file-source trick,
-        # but it seeds through the VALUE channel with SEED_SEQ rows;
-        # these rows ride the node union's __src tag instead, so the
-        # shapes don't share code. The temp dir lives as long as the
-        # streaming query — same lifetime as seed_ticks' directory.)
-        import tempfile
-
-        spark = u.sparkSession
-        seed_dir = tempfile.mkdtemp(prefix="csp_alarm_seed_")
-        ancient = _dt.datetime(1970, 1, 1, 0, 0, 1)
-        seed_rows = [(k, ancient, 0, -1, None) for k in pending]
-        schema = (
-            f"{KEY} string, {TS} timestamp, {SEQ} long, "
-            f"__src int, {VALUE} double"
-        )
-        spark.createDataFrame(seed_rows, schema).coalesce(1).write.mode(
-            "overwrite").parquet(seed_dir)
-        u = u.unionByName(
-            spark.readStream.format("parquet").schema(u.schema)
-            .load(seed_dir)
-        )
-
-    def fold(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        timed_out = state.hasTimedOut
-        if state.exists:
-            stored = state.get
-            last = list(stored[:n_src])
-            ustate, heap, order0, fired0 = pickle.loads(bytes(stored[n_src]))
-        elif key[0] in seed_states:
-            seed = seed_states[key[0]]
-            if _is_alarm_seed(seed):
-                # replay handover with pending alarms
-                # (run_node_with_states(keep_alarms=True)): ONE
-                # deepcopy keeps handle identity between the copied
-                # state dict and the copied heap; the replay's last
-                # input values cross too (alarm cycles read inputs)
-                s2 = _copy.deepcopy(seed)
-                ustate, heap, order0, fired0 = (
-                    s2.state, s2.heap, s2.order, s2.fired,
-                )
-                last = [(s2.last or {}).get(n) for n in names]
-            else:
-                last = [None] * n_src
-                ustate, heap, order0, fired0 = (
-                    _copy.deepcopy(seed), [], 0, 0,
-                )
-        else:
-            last = [None] * n_src
-            ustate, heap, order0, fired0 = (
-                mk_state(), [], 0, 0,
-            )
-        order = [order0]
-        fired = [fired0]   # cumulative: alarm-cycle seq numbering
-        fired_now = [0]    # this wake only: the runaway guard's scope
-        out = []
-
-        def _schedule(ats, value):
-            handle = {"alive": True, "value": value, "ts": ats}
-            order[0] += 1
-            heapq.heappush(heap, (pd.Timestamp(ats), order[0], handle))
-            return handle
-
-        def _emit(cyc, r):
-            if r is not NO_OUTPUT and r is not None:
-                out.append((key[0], cyc.now, cyc.seq, r))
-
-        def _fire(limit_ts, inclusive):
-            """Fire due alarms: ats < limit (input-cycle interleave —
-            the batch runner's _fire_alarms rule, so a coincident
-            alarm lands AFTER that timestamp's input cycles) or
-            ats <= limit (watermark drain — the engine clock reached
-            the alarm time)."""
-            while heap and fired_now[0] < _MAX_ALARM_CYCLES:
-                ats, _, handle = heap[0]
-                if not handle["alive"]:
-                    heapq.heappop(heap)
-                    continue
-                if limit_ts is not None and (
-                    ats > limit_ts if inclusive else ats >= limit_ts
-                ):
-                    break
-                heapq.heappop(heap)
-                fired[0] += 1
-                fired_now[0] += 1
-                cyc = NodeCycle(
-                    ats, _ALARM_SEQ_BASE + fired[0], ustate,
-                    {n: last[i] for i, n in enumerate(names)}, {},
-                    _schedule, alarm=handle["value"],
-                )
-                _emit(cyc, fn(cyc))
-
-        if not timed_out:
-            chunks = list(pdfs)
-            if chunks:
-                for (ts, seq), updates in _collapse_cycles(chunks):
-                    _fire(ts, inclusive=False)
-                    ticked = {}
-                    for src, v in updates:
-                        last[src] = v
-                        ticked[names[src]] = True
-                    vals = {n: last[i] for i, n in enumerate(names)}
-                    cyc = NodeCycle(
-                        ts, int(seq), ustate, vals, ticked, _schedule
-                    )
-                    _emit(cyc, fn(cyc))
-        # drain alarms the engine clock (= the watermark) has reached —
-        # on a timeout wake this is the whole reason we're here; after
-        # input it catches alarms between the last row and the watermark
-        wm_ms = state.getCurrentWatermarkMs()
-        if wm_ms > 0:
-            _fire(pd.Timestamp(wm_ms, unit="ms"), inclusive=True)
-        # re-arm: ONE event-time timeout at the earliest live alarm
-        # (must sit strictly past the current watermark)
-        while heap and not heap[0][2]["alive"]:
-            heapq.heappop(heap)
-        state.update(
-            tuple(last)
-            + (pickle.dumps((ustate, heap, order[0], fired[0])),)
-        )
-        if heap:
-            # wake 1 ms EARLY: Spark fires an event-time timeout only
-            # when the watermark advances strictly BEYOND it, so a
-            # timeout set AT the alarm time would miss a watermark that
-            # lands exactly on it (batch `end` is inclusive — an alarm
-            # at exactly the final watermark must fire). The early wake
-            # at worst drains nothing and re-arms.
-            next_ms = heap[0][0].value // 1_000_000
-            state.setTimeoutTimestamp(max(next_ms - 1, wm_ms + 1))
-        yield pd.DataFrame(out, columns=[KEY, TS, SEQ, VALUE])
-
-    return with_watermark(u, watermark).groupBy(KEY).applyInPandasWithState(
-        fold,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )

@@ -91,6 +91,32 @@ def file_ticks(
     )
 
 
+def _publish(directory: str, name: str, write) -> str:
+    """Atomic drop: ``write(tmp)`` fills a dot-named temp path (file
+    sources skip hidden names), then ONE rename publishes it as
+    ``directory/name`` — a file stream never lists a half-written
+    drop. Returns the published path."""
+    tmp = os.path.join(directory, f".tmp-{uuid.uuid4().hex}")
+    write(tmp)
+    final = os.path.join(directory, name)
+    os.rename(tmp, final)
+    return final
+
+
+def _write_once_source(
+    spark: SparkSession, df: DataFrame, directory: str | None = None
+) -> DataFrame:
+    """``df`` written ONCE as one parquet drop (atomically, before any
+    stream starts) and read back as a streaming source with ``df``'s
+    schema — always part of the first microbatch. The state seeds of
+    the hybrid splices and the alarm handover ride on it; the
+    directory lives as long as the streaming query reading it."""
+    d = directory or tempfile.mkdtemp(prefix="csp_seed_")
+    os.makedirs(d, exist_ok=True)
+    path = _publish(d, "seed.parquet", df.coalesce(1).write.parquet)
+    return spark.readStream.format("parquet").schema(df.schema).load(path)
+
+
 def kafka_ticks(
     spark: SparkSession,
     bootstrap_servers: str,
@@ -283,9 +309,8 @@ class PushAdapter:
                 VALUE: pa.array([r[3] for r in rows]),
             }
         )
-        tmp = os.path.join(self._dir, f".tmp-{uuid.uuid4().hex}.parquet")
-        pq.write_table(table, tmp)
-        os.rename(tmp, os.path.join(self._dir, f"push-{uuid.uuid4().hex}.parquet"))
+        _publish(self._dir, f"push-{uuid.uuid4().hex}.parquet",
+                 lambda p: pq.write_table(table, p))
         return len(rows)
 
     def stop(self):
@@ -329,9 +354,8 @@ class PushPullAdapter(PushAdapter):
             import pyarrow.parquet as pq
 
             tbl = history.select(KEY, TS, SEQ, VALUE).toArrow()
-            tmp = os.path.join(self._dir, f".tmp-{uuid.uuid4().hex}.parquet")
-            pq.write_table(tbl, tmp)
-            os.rename(tmp, os.path.join(self._dir, "00-replay.parquet"))
+            _publish(self._dir, "00-replay.parquet",
+                     lambda p: pq.write_table(tbl, p))
             if tbl.num_rows:
                 import pyarrow.compute as pc
 
@@ -439,9 +463,8 @@ class PushGroup:
                 [r[4] if r[3] == m else None for r in rows]
             )
         table = pa.table(cols)
-        tmp = os.path.join(self._dir, f".tmp-{uuid.uuid4().hex}.parquet")
-        pq.write_table(table, tmp)
-        os.rename(tmp, os.path.join(self._dir, f"group-{uuid.uuid4().hex}.parquet"))
+        _publish(self._dir, f"group-{uuid.uuid4().hex}.parquet",
+                 lambda p: pq.write_table(table, p))
         return len(rows)
 
     def combined(self) -> DataFrame:

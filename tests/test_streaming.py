@@ -337,7 +337,6 @@ def test_dedup_stream(spark, tmp_path):
     assert sorted(r["ts"] for r in got) == [START + dt.timedelta(seconds=i) for i in range(3)]
 
 
-@pytest.mark.slow
 def test_align_stream_matches_batch(spark, tmp_path):
     """Streaming align over microbatch drops equals batch core.align
     on the same ticks — same wide frame, same valid/ticked semantics,
@@ -692,7 +691,6 @@ def test_pushpull_adapter_replay_then_live(spark):
     pp.stop()
 
 
-@pytest.mark.slow
 def test_rolling_tick_stats_stream_matches_batch(spark, landing):
     """PER-TICK trailing-N-tick stats over the stream — csp.stats
     realtime semantics (emit every tick, not per slide) — equals the
@@ -1877,9 +1875,10 @@ def test_streaming_state_stays_bounded(spark, tmp_path):
         )
         assert len(state) == KEYS
         raw = [bytes(r.value.groupState[-1]) for r in state]
-        # engine state: one float slot + one pickled {mx: float}
+        # engine state: one float slot + one pickled (ustate, heap,
+        # order, fired) with ustate = {mx: float} and an empty heap
         assert all(len(p) < 256 for p in raw)
-        assert all(len(pickle.loads(p)) == 1 for p in raw)
+        assert all(len(pickle.loads(p)[0]) == 1 for p in raw)
         sizes[tag] = max(len(p) for p in raw)
     assert sizes["node_long"] <= sizes["node_short"] + 8
 
@@ -2336,3 +2335,150 @@ def test_run_node_stream_alarms_survive_checkpoint_restart(spark,
     fired_ts = [ts for _, ts, _, v in got if v == 700.0]
     assert any(ts <= START + dt.timedelta(seconds=10) for ts in fired_ts)
     assert any(ts > START + dt.timedelta(seconds=21) for ts in fired_ts)
+
+
+@pytest.mark.slow
+def test_run_node_stream_survives_checkpoint_restart(spark, tmp_path):
+    """alarms=False: a query stopped after some microbatches and
+    restarted from its checkpoint (new query instance, fresh fold
+    closures, state reloaded from the store) continues exactly — the
+    two availableNow runs together equal one batch run_node."""
+    from csp_spark import TickStream, run_node
+    from csp_spark.plans.runtime import _run_info_stack
+    from csp_spark.streaming import file_ticks, run_node_stream
+
+    def node(cycle):
+        st = cycle.state
+        st["n"] = st.get("n", 0) + 1
+        if cycle.valid("x") and cycle.valid("y"):
+            return st["n"] * (cycle["y"] - cycle["x"])
+        return None
+
+    def rows(src, lo, hi):
+        return [(k, START + dt.timedelta(seconds=2 * i + (src == "y")), i,
+                 float(i * (3 if src == "y" else 1)) + (k == "b"))
+                for i in range(lo, hi) for k in ("a", "b")]
+
+    ckpt, sink = str(tmp_path / "ckpt"), str(tmp_path / "out")
+
+    def drop(src, i, chunk):
+        spark.createDataFrame(chunk, SCHEMA).coalesce(1).write.parquet(
+            str(tmp_path / src / f"b{i}"))
+
+    def run_once():
+        streams = {
+            src: file_ticks(spark, str(tmp_path / src / "*"), SCHEMA,
+                            ts_col="ts", value_col="value", key_col="key",
+                            seq_col="seq", max_files_per_trigger=1)
+            for src in ("x", "y")
+        }
+        out = run_node_stream(node, streams)
+        _run_info_stack.append({"start": None, "end": None, "realtime": True})
+        try:
+            q = (out.writeStream.format("parquet").option("path", sink)
+                 .option("checkpointLocation", ckpt)
+                 .outputMode("append").trigger(availableNow=True).start())
+            q.awaitTermination()
+        finally:
+            _run_info_stack.pop()
+
+    for src in ("x", "y"):
+        drop(src, 0, rows(src, 0, 3))
+    run_once()
+    assert spark.read.parquet(sink).count() > 0
+    for src in ("x", "y"):
+        drop(src, 1, rows(src, 3, 6))
+    run_once()
+    got = sorted(tuple(r) for r in spark.read.parquet(sink).select(
+        KEY, TS, SEQ, VALUE).collect())
+    ref = sorted(tuple(r) for r in run_node(node, {
+        src: TickStream(spark.createDataFrame(rows(src, 0, 6), SCHEMA))
+        for src in ("x", "y")
+    }).df.select(KEY, TS, SEQ, VALUE).collect())
+    assert got == ref and len(got) == 22
+
+
+def _canon(rows):
+    """Collected rows as sortable tuples: NaN made equal to itself,
+    floats rounded past the last-bit noise of two recursions."""
+    def c(v):
+        if isinstance(v, float):
+            return "NaN" if v != v else round(v, 9)
+        return v
+    return sorted((tuple(c(v) for v in r) for r in rows), key=repr)
+
+
+#: degenerate tick kinds -> (key, value of the key's second x tick)
+_DEGENERATE = {"null_value": ("s1", None), "nan_value": ("s2", float("nan")),
+               "null_key": (None, 2.0)}
+
+
+@pytest.mark.parametrize(
+    "op", ["align", "node", "node_alarms", "ema", "rolling"])
+def test_degenerate_ticks_stream_equals_batch(spark, tmp_path, op):
+    """A NULL value, a NaN value and a NULL key give the same output in
+    every per-tick stateful fold as in its batch twin: align_stream vs
+    core.align, run_node_stream (both engines) vs run_node, ema_stream
+    vs ema(adjust=False), rolling_tick_stats_stream vs the Spark tick
+    window (its NaN rule is not settled; NULL value and NULL key only).
+    One key per kind; two drops with the degenerate tick in the first,
+    so its effect must survive the state-store round trip."""
+    from pyspark.sql import Window
+
+    from csp_spark import align, run_node
+    from csp_spark.streaming import (
+        align_stream, rolling_tick_stats_stream, run_node_stream,
+    )
+
+    cases = {c: kv for c, kv in _DEGENERATE.items()
+             if (op, c) != ("rolling", "nan_value")}
+    data = {
+        "x": [(key, START + dt.timedelta(seconds=2 * i), i, v)
+              for key, deg in cases.values()
+              for i, v in enumerate([1.0, deg, 3.0, 4.0])],
+        "y": [(key, START + dt.timedelta(seconds=2 * i + 1), i, 10.0 + i)
+              for key, _ in cases.values() for i in range(4)],
+    }
+    for src, rows in data.items():
+        _write_drops(spark, tmp_path / src, rows)
+    live = {src: file_ticks(spark, str(tmp_path / src), SCHEMA, ts_col="ts",
+                            value_col="value", key_col="key", seq_col="seq",
+                            max_files_per_trigger=1)
+            for src in data}
+    hist = {src: TickStream(spark.createDataFrame(rows, SCHEMA))
+            for src, rows in data.items()}
+
+    def node(cycle):
+        cycle.state["n"] = cycle.state.get("n", 0) + 1
+        return cycle["x"] if cycle.ticked("x") else float(cycle.state["n"])
+
+    if op == "align":
+        cols = [KEY, TS, SEQ, "x", "x__ticked", "y", "y__ticked"]
+        got, ref = align_stream(live), align(hist)
+    elif op.startswith("node"):
+        cols = [KEY, TS, SEQ, VALUE]
+        got = run_node_stream(node, live, alarms=op == "node_alarms")
+        ref = run_node(node, hist).df
+    elif op == "ema":
+        cols = [KEY, TS, SEQ, VALUE]
+        got = ema_stream(live["x"], alpha=0.5)
+        ref = ema(hist["x"], alpha=0.5, adjust=False).df
+    else:
+        cols = [KEY, TS, SEQ, "roll_count", "roll_sum", "roll_mean",
+                "roll_min", "roll_max"]
+        got = rolling_tick_stats_stream(live["x"], 3)
+        w = Window.partitionBy(KEY).orderBy(TS, SEQ).rowsBetween(-2, 0)
+        ref = hist["x"].df.select(
+            KEY, TS, SEQ,
+            *(f(VALUE).over(w).alias(f"roll_{n}") for n, f in (
+                ("count", F.count), ("sum", F.sum), ("mean", F.avg),
+                ("min", F.min), ("max", F.max))),
+        )
+    got = collect_stream(got).select(*cols).collect()
+    ref = ref.select(*cols).collect()
+    differ = {c: (_canon(r for r in got if r[KEY] == key),
+                  _canon(r for r in ref if r[KEY] == key))
+              for c, (key, _) in cases.items()}
+    differ = {c: gr for c, gr in differ.items() if gr[0] != gr[1]}
+    assert not differ, (sorted(differ), differ)
+    assert len(got) == len(ref) >= 4 * len(cases)
