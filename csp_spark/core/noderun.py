@@ -28,19 +28,27 @@ from __future__ import annotations
 import copy as _copy
 import datetime as _dt
 import heapq
+import pickle
 from collections.abc import Mapping
+from itertools import chain
 from typing import Any, Callable
 
+import numpy as np
 import pandas as pd
 
 from .align import _ticked as _ticked_col
 from .align import align
+from .record import Struct
 from .ticks import KEY, SEQ, TS, VALUE, TickStream
 
-#: return this from a node function to emit nothing this cycle
-#: (returning None does the same — reference nodes tick only on
-#: ``return``/``csp.output``)
-NO_OUTPUT = object()
+
+class NO_OUTPUT:  # noqa: N801 — a sentinel, named like a constant
+    """Return this from a node function to emit nothing this cycle
+    (returning None does the same — reference nodes tick only on
+    ``return``/``csp.output``). A class, so it pickles by name: a node
+    shipped to a Python worker returns the very object the engine
+    there tests against."""
+
 
 #: internal marker distinguishing "not an alarm cycle" from an alarm
 #: whose scheduled VALUE is None (a legal payload)
@@ -50,9 +58,10 @@ _NO_ALARM = object()
 #: coincident input cycle at the same timestamp
 _ALARM_SEQ_BASE = 1 << 40
 
-#: per-key cap on alarm cycles (guards a node that reschedules itself
-#: forever against an unbounded loop; reference runs are bounded by
-#: endtime the same way)
+#: cap on alarm cycles per engine run — one batch replay of a key, or
+#: one streaming wake (guards a node that reschedules itself forever
+#: against an unbounded loop; reference runs are bounded by endtime
+#: the same way)
 _MAX_ALARM_CYCLES = 1_000_000
 
 #: seq marker for the per-key terminal-state row emitted by
@@ -106,7 +115,9 @@ class NodeCycle:
     Note: inputs arrive as pandas scalars; a float input that is not
     yet valid reads as NaN AND valid()==False — a stream that ticks
     literal NaN values is indistinguishable from invalid here (use
-    drop_nans upstream if that matters).
+    drop_nans upstream if that matters). Outputs keep the two apart: a
+    returned NaN ticks NaN, and a None value in a multi-output dict
+    ticks NULL (the keyed runners' output rule, see _per_key_pandas).
     """
 
     __slots__ = ("now", "seq", "state", "_alarm", "_vals", "_ticked", "_rt")
@@ -118,7 +129,7 @@ class NodeCycle:
         self._alarm = alarm
         self._vals = vals
         self._ticked = ticked
-        self._rt = rt  # runtime: the per-key alarm heap closure
+        self._rt = rt  # the scheduler: the key engine's, or a raising stub
 
     @property
     def alarm(self):
@@ -151,10 +162,132 @@ class NodeCycle:
         handle["alive"] = False
 
 
+def _conv(v):
+    # Struct outputs cross the Arrow boundary as dicts
+    return v.to_dict() if isinstance(v, Struct) else v
+
+
+class _NodeEngine:
+    """One key's node-cycle engine — the one implementation behind
+    batch run_node (``_keyed_runner``) and run_node_stream: the alarm
+    heap, ``schedule``, ``fire``, the NodeCycle build and the output
+    rows ``(key, ts, seq, value)`` in ``out``.
+
+    One instance is one RUN: a batch replay of the key, or one
+    streaming wake. ``cap`` bounds the alarm cycles of one run;
+    ``fired`` is cumulative (it numbers alarm-cycle seqs, so a stream
+    carries it across wakes and a handover carries it from the
+    replay). Heap entries are ``(pd.Timestamp, order, handle)``; a
+    handle is the dict ``cancel_alarm`` marks dead, so a state dict
+    pickled together with the heap keeps handle identity. ``rt`` is
+    the scheduler input cycles see (default ``schedule``)."""
+
+    def __init__(self, fn, key, state, last, cap, heap=None, order=0,
+                 fired=0, rt=None):
+        self.fn = fn
+        self.key = key
+        self.state = state
+        self.last = last  # input name -> last value (alarm cycles read it)
+        self.cap = cap
+        self.heap = [] if heap is None else heap
+        self.order = order
+        self.fired = fired
+        self.out: list = []
+        self._rt = rt or self.schedule
+        self._run_fired = 0
+
+    def schedule(self, ats, value):
+        handle = {"alive": True, "value": value, "ts": ats}
+        self.order += 1
+        heapq.heappush(self.heap, (pd.Timestamp(ats), self.order, handle))
+        return handle
+
+    def fire(self, limit=None, inclusive=False):
+        """Fire due alarms, each as its own cycle: ``ats < limit`` (an
+        input cycle's interleave — a coincident alarm fires after that
+        timestamp's input cycles), ``ats <= limit`` when ``inclusive``
+        (the engine clock reached ``limit``), every alarm when
+        ``limit`` is None."""
+        heap = self.heap
+        while heap and self._run_fired < self.cap:
+            ats, _, handle = heap[0]
+            if not handle["alive"]:
+                heapq.heappop(heap)
+                continue
+            if limit is not None and (ats > limit if inclusive else ats >= limit):
+                break
+            heapq.heappop(heap)
+            self.fired += 1
+            self._run_fired += 1
+            self.emit(NodeCycle(
+                ats, _ALARM_SEQ_BASE + self.fired, self.state,
+                dict(self.last), {}, self.schedule, alarm=handle["value"],
+            ))
+
+    def cycle(self, ts, seq, vals, ticked):
+        """One input cycle; ``vals`` become the last values."""
+        self.last = vals
+        self.emit(NodeCycle(ts, seq, self.state, vals, ticked, self._rt))
+
+    def hook(self, f, now, seq):
+        """Run ``f`` on a csp.start()/csp.stop() cycle: it reads state
+        and last values, may schedule, and emits nothing."""
+        f(NodeCycle(now, seq, self.state, dict(self.last), {}, self._rt))
+
+    def emit(self, cyc):
+        r = self.fn(cyc)
+        if r is not NO_OUTPUT and r is not None:
+            self.out.append((self.key, cyc.now, cyc.seq, _conv(r)))
+
+    def pending(self) -> list:
+        """The heap as a state row or handoff stores it: dead handles
+        at the head dropped."""
+        heap = self.heap
+        while heap and not heap[0][2]["alive"]:
+            heapq.heappop(heap)
+        return heap
+
+
+def _output_frame(schema):
+    """The output builder of both keyed runners (batch
+    ``_per_key_pandas``, stream ``streaming.ops._stateful_by_key``):
+    ``build(out)`` turns a fold's output — rows in ``schema`` order, or
+    a frame with the schema's columns — into the frame that crosses
+    the Arrow boundary, by the rule stated at ``_per_key_pandas``.
+    Every double column leaves as a masked Float64 array: Arrow reads
+    each NaN of a plain float64 column as NULL."""
+    from pyspark.sql.types import DoubleType, StructType, _parse_datatype_string
+
+    if not isinstance(schema, StructType):
+        schema = _parse_datatype_string(schema)
+    names = schema.fieldNames()
+    dbl = [isinstance(f.dataType, DoubleType) for f in schema.fields]
+
+    def masked(c) -> "pd.arrays.FloatingArray":
+        if isinstance(c, pd.arrays.FloatingArray):
+            return c
+        if isinstance(c, list) or c.dtype.kind == "O":
+            mask = np.fromiter((v is None for v in c), bool, len(c))
+        else:  # a numpy number column marks nothing missing
+            mask = np.zeros(len(c), bool)
+        return pd.arrays.FloatingArray(np.array(c, dtype=float), mask)
+
+    def build(out) -> pd.DataFrame:
+        if isinstance(out, pd.DataFrame):
+            cols = [out[n].array for n in names]
+        else:
+            cols = [[r[i] for r in out] for i in range(len(names))]
+        return pd.DataFrame({
+            n: masked(c) if d else c for n, c, d in zip(names, cols, dbl)
+        })
+
+    return build
+
+
 def _per_key_pandas(df, fn, schema):
     """The one keyed pandas runner behind every per-key Python fold
     (node runners, dynamic_apply, feedback_scan, exprtk state vars,
-    the EMA family, basket trigger selection). It states three rules
+    the EMA family, basket trigger selection). It states four rules
     once:
 
     - engine order: each partition arrives sorted by (KEY, TS, SEQ),
@@ -166,11 +299,17 @@ def _per_key_pandas(df, fn, schema):
       ``repartition(KEY)`` exchange, so the number of calls follows
       the post-AQE shuffle partition count, not a per-key or bucket
       constant. A frame already hash-partitioned by KEY (align's
-      windows) reuses that exchange.
+      windows) reuses that exchange;
+    - output values (``_output_frame``, shared with the streaming
+      runner ``streaming.ops._stateful_by_key``): a NULL is what the
+      fold marks missing — None in a row or an object column, pd.NA
+      in a masked column — and a NaN is a value, so a fold's NaN
+      leaves as NaN in every double column.
 
     ``fn(pdf, by_key)`` gets the partition frame and its
-    ``groupby(KEY)`` and returns the output frame (or None for no
-    rows) matching ``schema``."""
+    ``groupby(KEY)`` and returns the output rows in ``schema`` order,
+    or a frame with the schema's columns (None for no rows)."""
+    build = _output_frame(schema)
 
     def run(batches):
         # an empty partition still invokes run, with no batches
@@ -180,7 +319,7 @@ def _per_key_pandas(df, fn, schema):
         pdf = pd.concat(chunks, ignore_index=True)
         out = fn(pdf, pdf.groupby(KEY, sort=False, dropna=False))
         if out is not None and len(out):
-            yield out
+            yield build(out)
 
     return (
         df.repartition(KEY)
@@ -202,14 +341,16 @@ def _state_factory(state):
 def _keyed_runner(fn, names, mk_state, multi, end, emit_state,
                   on_start=None, start_ts=None, has_seed=False,
                   on_stop=None, keep_alarms=False):
-    """The per-key cycle engine shared by run_node and
-    run_node_with_states: input cycles in (ts, seq) order, alarm heap
-    merged in, optional terminal-state row (pickled) appended. Runs
-    under _per_key_pandas: each key's cycles run sequentially inside
-    the partition loop."""
-    import pickle
+    """The batch caller of the node-cycle engine (run_node and
+    run_node_with_states), run under _per_key_pandas: each key's input
+    cycles run through one ``_NodeEngine`` in (ts, seq) order. What
+    only batch has stays here, around the engine: the on_start/on_stop
+    hooks, the ``end`` trim (alarms past ``end`` never fire; with
+    ``keep_alarms`` they cross the handover), the multi-output row
+    layout and the terminal-state row (pickled) appended per key."""
+    end_ts = None if end is None else pd.Timestamp(end)
 
-    def _run(pdf: pd.DataFrame, by_key) -> pd.DataFrame:
+    def _run(pdf: pd.DataFrame, by_key) -> list:
         out = []
         # columns extracted ONCE per partition, sliced per key by the
         # groupby's positional indices: building 5+ pandas column
@@ -225,24 +366,15 @@ def _keyed_runner(fn, names, mk_state, multi, end, emit_state,
         # .indices yields each key's positional array, increasing
         # within the key — engine order
         for idx in by_key.indices.values():
-            _one_key(
+            out.extend(_one_key(
                 keys_all[idx[0]],
                 tss_all[idx], seqs_all[idx],
                 {n: a[idx] for n, a in tcols_all.items()},
                 {n: a[idx] for n, a in vcols_all.items()},
-                out,
-            )
-        if multi:
-            cols = [KEY, TS, SEQ]
-            for n in multi:
-                cols.extend((n, f"{n}__t"))
-            return pd.DataFrame(out, columns=cols)
-        if emit_state:
-            return pd.DataFrame(out, columns=[KEY, TS, SEQ, VALUE, "__state"])
-        return pd.DataFrame(out, columns=[KEY, TS, SEQ, VALUE])
+            ))
+        return out
 
-    def _one_key(key, tss, seqs, tcols, vcols, out: list) -> None:
-        st = mk_state()
+    def _one_key(key, tss, seqs, tcols, vcols) -> list:
         if has_seed:
             # drop group-seed rows (they only exist to materialize an
             # otherwise-empty group for a start-alarm-driven node)
@@ -252,124 +384,70 @@ def _keyed_runner(fn, names, mk_state, multi, end, emit_state,
                 tcols = {n: a[live] for n, a in tcols.items()}
                 vcols = {n: a[live] for n, a in vcols.items()}
         n_rows = len(seqs)
-
-        heap: list = []  # (alarm_ts, order, handle)
-        order = [0]
-
-        def _schedule(ats, value):
-            handle = {"alive": True, "value": value, "ts": ats}
-            order[0] += 1
-            heapq.heappush(heap, (pd.Timestamp(ats), order[0], handle))
-            return handle
-
-        state_pad = (None,) if emit_state else ()
-        from .record import Struct as _Struct
-
-        def _conv(v):
-            # Struct outputs cross the Arrow boundary as dicts
-            return v.to_dict() if isinstance(v, _Struct) else v
-
-        def _emit(cyc, r):
-            if r is NO_OUTPUT or r is None:
-                return
-            if multi:
-                row = [key, cyc.now, cyc.seq]
-                for n in multi:
-                    row.extend((_conv(r.get(n)), n in r))
-                out.append(tuple(row))
-            else:
-                out.append((key, cyc.now, cyc.seq, _conv(r)) + state_pad)
-
-        last_vals = {n: None for n in names}
-        fired = [0]
+        eng = _NodeEngine(fn, key, mk_state(), dict.fromkeys(names),
+                          _MAX_ALARM_CYCLES)
 
         if on_start is not None and (n_rows or start_ts is not None):
             # csp.start() analog: one synthetic cycle BEFORE any input,
             # at the engine start time when given (else the key's first
             # tick) — alarms it schedules enter the heap ahead of
             # cycle 1, so a start+0 alarm fires before the first input
-            cyc0 = NodeCycle(
-                pd.Timestamp(start_ts) if start_ts is not None else tss[0],
-                -1, st, dict(last_vals), {}, _schedule,
-            )
-            on_start(cyc0)
-
-        def _fire_alarms(limit_ts):
-            """Fire due alarms strictly before limit_ts (None = all)."""
-            while heap and fired[0] < _MAX_ALARM_CYCLES:
-                ats, _, handle = heap[0]
-                if not handle["alive"]:
-                    heapq.heappop(heap)
-                    continue
-                if limit_ts is not None and ats >= limit_ts:
-                    break
-                if end is not None and ats > pd.Timestamp(end):
-                    if keep_alarms:
-                        # handover mode: alarms scheduled past the
-                        # engine end stay pending (ats order => the
-                        # whole remaining heap is past end)
-                        break
-                    heapq.heappop(heap)
-                    continue
-                heapq.heappop(heap)
-                fired[0] += 1
-                cyc = NodeCycle(
-                    ats, _ALARM_SEQ_BASE + fired[0], st,
-                    dict(last_vals), {}, _schedule, alarm=handle["value"],
-                )
-                _emit(cyc, fn(cyc))
+            t0 = pd.Timestamp(start_ts) if start_ts is not None else tss[0]
+            eng.hook(on_start, t0, -1)
 
         for i in range(n_rows):
             ts_i = tss[i]
-            _fire_alarms(ts_i)
+            # past end, the interleave stops at end: later alarms never fire
+            if end_ts is None or ts_i <= end_ts:
+                eng.fire(ts_i)
+            else:
+                eng.fire(end_ts, inclusive=True)
             vals = {}
             for n in names:
                 v = vcols[n][i]
                 vals[n] = None if v is pd.NaT else v
-            last_vals = vals
-            cyc = NodeCycle(
-                ts_i, int(seqs[i]), st, vals,
-                {n: tcols[n][i] for n in names}, _schedule,
-            )
-            _emit(cyc, fn(cyc))
-        _fire_alarms(None)  # trailing alarms (bounded by end/cap)
+            eng.cycle(ts_i, int(seqs[i]), vals,
+                      {n: tcols[n][i] for n in names})
+        eng.fire(end_ts, inclusive=True)  # trailing alarms (bounded by end/cap)
         if on_stop is not None:
             # csp.stop() analog: one finalizer cycle per key after
             # everything fired — side effects + state reads only
             stop_ts = (
-                pd.Timestamp(end) if end is not None
+                end_ts if end_ts is not None
                 else (tss[n_rows - 1] if n_rows else
                       pd.Timestamp(start_ts) if start_ts is not None
                       else None)
             )
-            on_stop(NodeCycle(
-                stop_ts, _ALARM_SEQ_BASE + fired[0] + 1, st,
-                dict(last_vals), {}, _schedule,
+            eng.hook(on_stop, stop_ts, _ALARM_SEQ_BASE + eng.fired + 1)
+
+        if multi:
+            return [
+                (k, t, s, *chain.from_iterable(
+                    (_conv(r.get(n)), n in r) for n in multi))
+                for k, t, s, r in eng.out
+            ]
+        if not emit_state:
+            return eng.out
+        if keep_alarms:
+            # ONE pickle of the typed handoff record so handle
+            # identity crosses the handover. Last input values cross
+            # too (alarm cycles read inputs) — coerced to the
+            # streaming runner's double channel.
+            def _dbl(v):
+                try:
+                    return None if v is None else float(v)
+                except (TypeError, ValueError):
+                    return None
+
+            payload = pickle.dumps(AlarmHandoff(
+                eng.state, eng.pending(), eng.order, eng.fired,
+                {n: _dbl(v) for n, v in eng.last.items()},
             ))
-        if emit_state:
-            final_ts = tss[n_rows - 1] if n_rows else None
-            if keep_alarms:
-                # ONE pickle of the typed handoff record so handle
-                # identity crosses the handover; dead handles at the
-                # head are dropped here, not at the consumer. Last
-                # input values cross too (alarm cycles read inputs) —
-                # coerced to the streaming runner's double channel.
-                while heap and not heap[0][2]["alive"]:
-                    heapq.heappop(heap)
-
-                def _dbl(v):
-                    try:
-                        return None if v is None else float(v)
-                    except (TypeError, ValueError):
-                        return None
-
-                payload = pickle.dumps(AlarmHandoff(
-                    st, heap, order[0], fired[0],
-                    {n: _dbl(v) for n, v in last_vals.items()},
-                ))
-            else:
-                payload = pickle.dumps(st)
-            out.append((key, final_ts, STATE_SEQ, None, payload))
+        else:
+            payload = pickle.dumps(eng.state)
+        final_ts = tss[n_rows - 1] if n_rows else None
+        return [r + (None,) for r in eng.out] + [
+            (key, final_ts, STATE_SEQ, None, payload)]
 
     return _run
 

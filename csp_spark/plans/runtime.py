@@ -371,25 +371,19 @@ def feedback_scan(
     For multi-round fixed-point graphs (label propagation) use
     :func:`feedback_iterate`; for cycle-delayed *wiring* of an already
     computed stream use ``baselib.wrap_feedback``."""
-    import pandas as pd
-
     from ..core.noderun import _per_key_pandas
 
     base = x.df.select(KEY, TS, SEQ, F.col(x.value_col).alias("__v"))
     schema = f"{KEY} string, {TS} timestamp, {SEQ} long, {VALUE} {result_type}"
 
     def fold(pdf, by_key):
-        outs = []
+        rows = []
         for _, g in by_key:
             prev = init
-            vals = []
-            for v in g["__v"]:
+            for k, t, s, v in zip(g[KEY], g[TS], g[SEQ], g["__v"]):
                 prev = fn(v, prev)
-                vals.append(prev)
-            out = g[[KEY, TS, SEQ]].copy()
-            out[VALUE] = vals
-            outs.append(out)
-        return pd.concat(outs, ignore_index=True)
+                rows.append((k, t, s, prev))
+        return rows
 
     return TickStream(_per_key_pandas(base, fold, schema))
 
@@ -587,7 +581,9 @@ def dynamic_apply(
     graph is a per-key pandas call on the keyed runner
     (core.noderun._per_key_pandas) — ``fn(pdf)`` receives one key's
     ticks in engine order and returns that key's output table (must
-    include key/ts/seq columns per ``output_schema``).
+    include key/ts/seq columns per ``output_schema``). In a double
+    column NaN is a value; None in an object column, or pd.NA in a
+    Float64 column, is NULL (the runner's output rule).
 
     Dynamic-argument parity:
     - ``attach={name: stream}`` (csp.attach): each attachment's per-key

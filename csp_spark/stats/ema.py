@@ -57,23 +57,13 @@ def _ewm_kwargs(
     return kw
 
 
-def _run_keyed(df, fn) -> TickStream:
-    """Run ``fn(pdf, by_key)`` on the keyed pandas runner; the output
-    carries the canonical 4 columns with NULL read back as NaN (Arrow
-    maps pandas NaN → SQL NULL; csp float streams carry NaN)."""
-    out = _per_key_pandas(df, fn, _SCHEMA).withColumn(
-        VALUE, F.coalesce(F.col(VALUE), F.lit(float("nan")))
-    )
-    return TickStream(out)
-
-
 def _run_ewm(x: TickStream, fn) -> TickStream:
     """Generic path: ``fn`` maps one key's time-sorted pandas frame to
     its output frame; keys loop in Python inside each partition."""
     df = x.df.select(KEY, TS, SEQ, F.col(x.value_col).cast("double").alias(VALUE))
-    return _run_keyed(df, lambda pdf, by_key: pd.concat(
+    return TickStream(_per_key_pandas(df, lambda pdf, by_key: pd.concat(
         [fn(g.reset_index(drop=True)) for _, g in by_key], ignore_index=True
-    ))
+    ), _SCHEMA))
 
 
 def _alpha_of(kw: dict) -> float:
@@ -178,7 +168,7 @@ def _run_ewm_native(
         return pdf
 
     df = x.df.select(KEY, TS, SEQ, F.col(x.value_col).cast("double").alias(VALUE))
-    return _run_keyed(df, fold)
+    return TickStream(_per_key_pandas(df, fold, _SCHEMA))
 
 
 def ema(
@@ -409,4 +399,4 @@ def ema_cov(
             )
         return pd.concat(outs, ignore_index=True)
 
-    return _run_keyed(df, fold)
+    return TickStream(_per_key_pandas(df, fold, _SCHEMA))

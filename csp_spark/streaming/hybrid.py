@@ -17,7 +17,8 @@ run is therefore a state splice:
    optimized, arbitrarily large (this is where 100 TB of backlog is
    processed, massively parallel, not row-by-row through a stream);
 2. extract each stateful kernel's TERMINAL per-key state from the
-   batch result (last values for align; the final EMA value for ema);
+   batch result (last values for align; the final EMA and its decayed
+   weight for ema; the last window-1 rows for rolling);
 3. SEED the live stream with one synthetic tick per (key, source)
    carrying that state at the switch boundary, tagged
    ``seq = SEED_SEQ`` (< 0): the stateful fold sorts each batch by
@@ -58,6 +59,10 @@ from .sources import _write_once_source
 #: seq tag for state-seed ticks: sorts before every real tick of the
 #: same boundary timestamp, and identifies seed echoes for filtering.
 SEED_SEQ = -1
+
+#: seq shift for seeds that replay history rows: keeps their relative
+#: order and puts every one below seq 0, where live output filters
+_TAIL_SHIFT = 1_000_000_000_000
 
 
 def terminal_last_values(history: DataFrame, value_col: str = VALUE) -> DataFrame:
@@ -147,7 +152,7 @@ def seed_history_tail(
         .drop("__rn")
         .select(
             KEY, TS,
-            (F.col(SEQ) - F.lit(1_000_000_000_000)).alias(SEQ),
+            (F.col(SEQ) - _TAIL_SHIFT).alias(SEQ),
             VALUE,
         )
     )
@@ -179,13 +184,15 @@ def run_hybrid_rolling(
         .orderBy(TS, SEQ)
         .rowsBetween(-(window - 1), 0)
     )
+    # NaN-skipping, as the live ring is
+    v = F.nanvl(F.col(VALUE), F.lit(None).cast("double"))
     replay = history.select(
         KEY, TS, SEQ,
-        F.count(VALUE).over(w).alias("roll_count"),
-        F.sum(VALUE).over(w).alias("roll_sum"),
-        F.avg(VALUE).over(w).alias("roll_mean"),
-        F.min(VALUE).over(w).alias("roll_min"),
-        F.max(VALUE).over(w).alias("roll_max"),
+        F.count(v).over(w).alias("roll_count"),
+        F.sum(v).over(w).alias("roll_sum"),
+        F.avg(v).over(w).alias("roll_mean"),
+        F.min(v).over(w).alias("roll_min"),
+        F.max(v).over(w).alias("roll_max"),
     )
     spark = live.sparkSession
     seeds = seed_history_tail(spark, history, window - 1)
@@ -203,19 +210,37 @@ def run_hybrid_ema(
 ) -> tuple[DataFrame, DataFrame]:
     """Replay→live for the recursive EMA kernel (adjust=False).
 
-    The batch EMA's terminal value per key seeds the live stream: a
-    single seed tick with value = terminal EMA reconstructs the
-    recursion state ``(y, w=1)``, and after an observation the update
-    ``y = (w(1-a)*y_prev + a*x) / (w(1-a) + a)`` depends only on
-    ``y_prev`` — the spliced stream continues the replay's values
-    bit-for-bit when each key's last history tick is an observation.
-    Trailing NULL/NaN history ticks decay ``w`` below 1 in the replay,
-    and that decay does not cross the seed."""
+    The live fold's state after the replay is ``(ema, w)``: the
+    terminal EMA and its weight, 1 at a key's last observation and
+    decayed by ``1 - alpha`` at each NULL/NaN tick after it. The seed
+    stream rebuilds both by folding them: each key's history from its
+    last observation on, that first row carrying the terminal EMA, seqs
+    shifted below 0 as in :func:`seed_history_tail`. ``boundary``
+    clips history to ts < boundary, as in :func:`run_hybrid_rolling`.
+    The live output equals one batch ``ema(adjust=False)`` over
+    history ∪ live."""
+    from pyspark.sql import Window
+
+    history = history.filter(F.col(TS) < F.lit(boundary))
     replay = ema(TickStream(history), alpha=alpha, adjust=False).df
-    seeds = terminal_last_values(replay)
+    at = F.struct(TS, SEQ)
+    seen = F.col(VALUE).isNotNull() & ~F.isnan(VALUE)
+    last_seen = F.max(F.when(seen, at)).over(Window.partitionBy(KEY))
+    terminal = terminal_last_values(replay).select(
+        F.col(KEY).alias("__k"), F.col(VALUE).alias("__ema"))
+    tail = (
+        history.withColumn("__o", last_seen)
+        .filter(at >= F.col("__o"))
+        .join(terminal, F.col(KEY).eqNullSafe(F.col("__k")))
+        .select(
+            F.col(KEY).cast("string").alias(KEY), TS,
+            (F.col(SEQ) - _TAIL_SHIFT).alias(SEQ),
+            F.when(at == F.col("__o"), F.col("__ema")).alias(VALUE),
+        )
+    )
     spark = live.sparkSession
-    out = ema_stream(spliced(seed_ticks(spark, seeds, boundary), live), alpha)
-    return replay, out.filter(F.col(SEQ) != SEED_SEQ)
+    out = ema_stream(spliced(_write_once_source(spark, tail), live), alpha)
+    return replay, out.filter(F.col(SEQ) >= 0)
 
 
 def run_hybrid_node(

@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import copy as _copy
 import datetime as _dt
+import pickle
 from functools import reduce
 
 import numpy as np
@@ -162,17 +163,17 @@ def _stateful_by_key(u, step, out_schema, state_schema, event_timeout=False):
     - output mode: append (a fold emits each row once, at its cycle);
     - timeout: none, or event time (``event_timeout``) for a fold the
       watermark must wake (alarms);
-    - output frame: ``step`` returns rows in ``out_schema`` order; a
-      double column leaves as a masked Float64 array, so a None cell
-      is NULL and a NaN cell stays NaN (a plain float64 column turns
-      both into NULL at the Arrow boundary).
+    - output values: ``step`` returns rows in ``out_schema`` order,
+      built by the batch runner's ``core.noderun._output_frame`` (the
+      rule is stated at ``_per_key_pandas``: None is NULL, NaN stays
+      NaN).
 
     ``step(key, pdf, state)`` gets the key tuple, the sorted frame
     (empty on a timeout wake) and the GroupState; it updates the state
     and returns the rows to emit."""
-    from pyspark.sql.types import DoubleType, _parse_datatype_string
+    from ..core.noderun import _output_frame
 
-    fields = _parse_datatype_string(out_schema).fields
+    build = _output_frame(out_schema)
     order = [TS, SEQ] + (["__src"] if "__src" in u.columns else [])
     empty = pd.DataFrame(columns=u.columns)
 
@@ -183,14 +184,7 @@ def _stateful_by_key(u, step, out_schema, state_schema, event_timeout=False):
             pdf = pd.concat(parts, ignore_index=True)
             # np.lexsort sorts by its LAST key first, and is stable
             pdf = pdf.take(np.lexsort([pdf[c].to_numpy() for c in order[::-1]]))
-        rows = step(key, pdf, state)
-        cols = {}
-        for i, f in enumerate(fields):
-            vals = [r[i] for r in rows]
-            cols[f.name] = (
-                _masked(vals) if isinstance(f.dataType, DoubleType) else vals
-            )
-        yield pd.DataFrame(cols)
+        yield build(step(key, pdf, state))
 
     return u.groupBy(KEY).applyInPandasWithState(
         fold,
@@ -202,12 +196,6 @@ def _stateful_by_key(u, step, out_schema, state_schema, event_timeout=False):
             else GroupStateTimeout.NoTimeout
         ),
     )
-
-
-def _masked(vals: list) -> "pd.arrays.FloatingArray":
-    """Doubles with None as the NULL mask and NaN kept as a value."""
-    mask = np.fromiter((v is None for v in vals), bool, len(vals))
-    return pd.arrays.FloatingArray(np.array(vals, dtype=float), mask)
 
 
 def _tagged_union(named: "dict[str, DataFrame]") -> DataFrame:
@@ -593,14 +581,14 @@ def run_node_stream(
     One stateful stage does both jobs: the tagged union folds to
     engine cycles with last-value carry (``_collapse_cycles``, align's
     kernel — a NULL tick keeps the last value, as batch run_node's
-    align does), and the user's ``fn(cycle)`` runs once per cycle. The
-    state row holds each input's last value plus ONE pickle of
-    ``(ustate, heap, order, fired)``: the user's state dict (arbitrary
-    Python state, the same bytes the batch runner keeps in-process)
-    and the pending-alarm heap, entries ``(pd.Timestamp, order,
-    handle)`` exactly as the batch runner's. Pickling the two together
-    keeps handle identity across the state store, so a handle a node
-    stored in ``cycle.state`` still cancels the heap's entry.
+    align does), and each wake runs its cycles through batch
+    run_node's own node-cycle engine (``core.noderun._NodeEngine``:
+    alarm heap, firing, cycle build, output rows). The state row holds
+    each input's last value plus ONE pickle of ``(ustate, heap, order,
+    fired)``: the user's state dict and the engine's pending-alarm
+    heap. Pickling the two together keeps handle identity across the
+    state store, so a handle a node stored in ``cycle.state`` still
+    cancels the heap's entry.
 
     **Alarms** (``alarms=True``): ``cycle.schedule_alarm`` /
     ``cancel_alarm`` work in a live streaming query with the
@@ -617,8 +605,9 @@ def run_node_stream(
     the earliest pending alarm — semantically identical (timers only
     WAKE the key; firing order is owned by the heap either way).
     ``fired`` persists only to keep alarm-cycle seqs unique and
-    batch-matching; the _MAX_ALARM_CYCLES runaway guard applies PER
-    WAKE, as in one batch replay. With ``alarms=False`` (default)
+    batch-matching; the engine's runaway guard (_MAX_ALARM_CYCLES)
+    counts per engine run, and one wake is one run, as one batch
+    replay is. With ``alarms=False`` (default)
     ``schedule_alarm`` raises, the heap stays empty, and the stage has
     no timeout and no watermark unless ``watermark`` is given: late
     rows are folded, not dropped.
@@ -637,16 +626,12 @@ def run_node_stream(
     microbatches; within a batch cycles fold in (ts, seq) order with
     coincident multi-stream ticks collapsed to ONE cycle (batch
     align's rule); an alarm coincident with an input tick fires after
-    that timestamp's input cycles (batch _keyed_runner's rule).
+    that timestamp's input cycles (the engine's ``fire`` rule).
     Equality-tested against batch run_node, alarms, NULL and NaN ticks
     and a checkpoint restart included.
     """
-    import heapq
-    import pickle
-
     from ..core.noderun import (
-        _ALARM_SEQ_BASE, _MAX_ALARM_CYCLES, NO_OUTPUT, NodeCycle,
-        _state_factory,
+        _MAX_ALARM_CYCLES as cap, AlarmHandoff, _NodeEngine, _state_factory,
     )
 
     named = {"x": streams} if isinstance(streams, DataFrame) else dict(streams)
@@ -677,7 +662,7 @@ def run_node_stream(
     mk_state = _state_factory(state)
     seed_states = _seed_initial_states(initial_states)
     if not alarms:
-        bad = [k for k, v in seed_states.items() if _is_alarm_seed(v)]
+        bad = [k for k, v in seed_states.items() if isinstance(v, AlarmHandoff)]
         if bad:
             raise ValueError(
                 "initial_states carry pending-alarm blobs (run_node_with_"
@@ -696,7 +681,7 @@ def run_node_stream(
     # watermark past legitimate live data.
     pending = [
         k for k, v in seed_states.items()
-        if _is_alarm_seed(v) and any(e[2]["alive"] for e in v.heap)
+        if isinstance(v, AlarmHandoff) and any(e[2]["alive"] for e in v.heap)
     ]
     if pending:
         from .sources import _write_once_source
@@ -718,90 +703,44 @@ def run_node_stream(
     def _initial(k):
         """(last, ustate, heap, order, fired) of a key's first wake."""
         seed = seed_states.get(k)
-        if _is_alarm_seed(seed):
+        if isinstance(seed, AlarmHandoff):
             # replay handover with pending alarms: ONE deepcopy keeps
             # handle identity between the copied state dict and the
             # copied heap; the replay's last input values cross too
             # (alarm cycles read inputs)
             s2 = _copy.deepcopy(seed)
-            last = [(s2.last or {}).get(n) for n in names]
+            last = {n: (s2.last or {}).get(n) for n in names}
             return last, s2.state, s2.heap, s2.order, s2.fired
         ustate = _copy.deepcopy(seed) if k in seed_states else mk_state()
-        return [None] * n_src, ustate, [], 0, 0
+        return dict.fromkeys(names), ustate, None, 0, 0
 
     def step(key, pdf, state):
         if state.exists:
             stored = state.get
-            last = list(stored[:n_src])
-            ustate, heap, order0, fired0 = pickle.loads(bytes(stored[n_src]))
+            last = dict(zip(names, stored[:n_src]))
+            ustate, heap, order, fired = pickle.loads(bytes(stored[n_src]))
         else:
-            last, ustate, heap, order0, fired0 = _initial(key[0])
-        order = [order0]
-        fired = [fired0]   # cumulative: alarm-cycle seq numbering
-        fired_now = [0]    # this wake only: the runaway guard's scope
-        out = []
-
-        def _schedule(ats, value):
-            handle = {"alive": True, "value": value, "ts": ats}
-            order[0] += 1
-            heapq.heappush(heap, (pd.Timestamp(ats), order[0], handle))
-            return handle
-
-        def _emit(cyc, r):
-            if r is NO_OUTPUT or r is None:
-                return
-            # batch run_node's plain float64 frame turns a NaN return
-            # into NULL; the runner's masked frame would keep it
-            if isinstance(r, float) and r != r:
-                r = None
-            out.append((key[0], cyc.now, cyc.seq, r))
-
-        def _fire(limit_ts, inclusive):
-            """Fire due alarms: ats < limit (input-cycle interleave —
-            the batch runner's _fire_alarms rule, so a coincident
-            alarm lands AFTER that timestamp's input cycles) or
-            ats <= limit (watermark drain — the engine clock reached
-            the alarm time)."""
-            while heap and fired_now[0] < _MAX_ALARM_CYCLES:
-                ats, _, handle = heap[0]
-                if not handle["alive"]:
-                    heapq.heappop(heap)
-                    continue
-                if ats > limit_ts if inclusive else ats >= limit_ts:
-                    break
-                heapq.heappop(heap)
-                fired[0] += 1
-                fired_now[0] += 1
-                cyc = NodeCycle(
-                    ats, _ALARM_SEQ_BASE + fired[0], ustate,
-                    {n: last[i] for i, n in enumerate(names)}, {},
-                    _schedule, alarm=handle["value"],
-                )
-                _emit(cyc, fn(cyc))
-
-        rt = _schedule if alarms else _no_alarms
+            last, ustate, heap, order, fired = _initial(key[0])
+        eng = _NodeEngine(fn, key[0], ustate, last, cap, heap, order, fired,
+                          rt=None if alarms else _no_alarms)
         for ts, seq, ticked, updates in _collapse_cycles(pdf):
-            _fire(ts, inclusive=False)
+            eng.fire(ts)
+            vals = dict(eng.last)
             for j, v in updates:
-                last[j] = v
-            cyc = NodeCycle(
-                ts, seq, ustate, {n: last[i] for i, n in enumerate(names)},
-                {names[j]: True for j in ticked}, rt,
-            )
-            _emit(cyc, fn(cyc))
+                vals[names[j]] = v
+            eng.cycle(ts, seq, vals, {names[j]: True for j in ticked})
         # drain alarms the engine clock (= the watermark) has reached —
         # on a timeout wake this is the whole reason we're here; after
         # input it catches alarms between the last row and the
         # watermark. Read only with a pending heap: it raises when the
         # stage has no watermark (alarms=False, the default)
-        wm_ms = state.getCurrentWatermarkMs() if heap else 0
+        wm_ms = state.getCurrentWatermarkMs() if eng.heap else 0
         if wm_ms > 0:
-            _fire(pd.Timestamp(wm_ms, unit="ms"), inclusive=True)
-        while heap and not heap[0][2]["alive"]:
-            heapq.heappop(heap)
+            eng.fire(pd.Timestamp(wm_ms, unit="ms"), inclusive=True)
+        heap = eng.pending()
         state.update(
-            tuple(last)
-            + (pickle.dumps((ustate, heap, order[0], fired[0])),)
+            tuple(eng.last[n] for n in names)
+            + (pickle.dumps((eng.state, heap, eng.order, eng.fired)),)
         )
         if heap:
             # re-arm ONE event-time timeout at the earliest live alarm,
@@ -814,7 +753,7 @@ def run_node_stream(
             # strictly past the current watermark.
             next_ms = heap[0][0].value // 1_000_000
             state.setTimeoutTimestamp(max(next_ms - 1, wm_ms + 1))
-        return out
+        return eng.out
 
     # alarms read the watermark as the engine clock (0 by default);
     # without alarms a watermark only when asked for — late-data
@@ -833,19 +772,8 @@ def _seed_initial_states(initial_states):
     HERE — a visible driver action, sized one pickled dict per key
     (bounded key sets; unbounded cardinality should resume from the
     streaming checkpoint instead)."""
-    import pickle
-
     if initial_states is not None and not isinstance(initial_states, dict):
         initial_states = {
             r[0]: pickle.loads(bytes(r[1])) for r in initial_states.collect()
         }
     return initial_states or {}
-
-
-def _is_alarm_seed(v):
-    """run_node_with_states(keep_alarms=True) emits typed AlarmHandoff
-    records — an isinstance check, so an arbitrary user state dict or
-    tuple can never be misread as a handoff blob."""
-    from ..core.noderun import AlarmHandoff
-
-    return isinstance(v, AlarmHandoff)

@@ -1020,6 +1020,58 @@ def test_keyed_runner_one_exchange(spark, monkeypatch, build):
     assert exchanges_in_plan(build(spark)) == 1
 
 
+def _nan_run_node(x, f):
+    from csp_spark import run_node
+
+    return run_node(lambda c: f(c["x"]), x)
+
+
+def _nan_run_node_outputs(x, f):
+    from csp_spark import run_node
+
+    return run_node(lambda c: {VALUE: f(c["x"])}, x,
+                    outputs={VALUE: "double"})[VALUE]
+
+
+def _nan_feedback_scan(x, f):
+    from csp_spark.plans.runtime import feedback_scan
+
+    return feedback_scan(x, lambda v, prev: f(v))
+
+
+def _nan_dynamic_apply(x, f):
+    def fn(pdf):
+        out = pdf[[KEY, TS, SEQ]].copy()
+        out[VALUE] = pd.Series([f(v) for v in pdf[VALUE]],
+                               index=out.index, dtype=object)
+        return out
+
+    return dynamic_apply(x, fn, "key string, ts timestamp, seq long, value double")
+
+
+@pytest.mark.parametrize("build, want", [
+    # a single-output node's None is no tick at all
+    pytest.param(_nan_run_node, [1.0, "nan"], id="run_node"),
+    pytest.param(_nan_run_node_outputs, [1.0, "nan", None],
+                 id="run_node_outputs"),
+    pytest.param(_nan_feedback_scan, [1.0, "nan", None], id="feedback_scan"),
+    pytest.param(_nan_dynamic_apply, [1.0, "nan", None], id="dynamic_apply"),
+])
+def test_keyed_runner_keeps_nan_and_null_apart(spark, build, want):
+    """A fold's NaN leaves the keyed pandas runner as NaN, and its None
+    as NULL (a plain float64 frame would turn both into NULL)."""
+    x = TickStream(spark.createDataFrame(
+        [("k", START + TD(seconds=i), i, v)
+         for i, v in enumerate([1.0, float("nan"), 3.0])],
+        "key string, ts timestamp, seq long, value double"))
+
+    def f(v):  # NaN passes through; the 3.0 tick's output is missing
+        return None if v == 3.0 else v
+
+    got = [r[VALUE] for r in build(x, f).ordered().collect()]
+    assert ["nan" if v != v else v for v in got] == want
+
+
 def test_dynamic_snap_of_unorderable_type(spark):
     """A snap stream whose value has no ordering (a map) still snaps
     the last value at or before the key's first trigger tick."""

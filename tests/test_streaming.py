@@ -450,9 +450,11 @@ def test_hybrid_align_equals_pure_batch(spark, tmp_path):
 
 @pytest.mark.slow
 def test_hybrid_ema_equals_pure_batch(spark, tmp_path):
-    """Replay->live EMA: the recursion state (terminal EMA per key)
-    seeds the streaming kernel; live values must continue the batch
-    run bit-for-bit (rel 1e-12) vs one batch EMA over history ∪ live."""
+    """Replay->live EMA: the recursion state (terminal EMA and weight
+    per key) seeds the streaming kernel; live values must continue the
+    batch run bit-for-bit (rel 1e-12) vs one batch EMA over history ∪
+    live. Key "c"'s history ends in a NaN tick, whose weight decay must
+    cross the handover."""
     from csp_spark import TickStream
     from csp_spark.stats import ema
     from csp_spark.streaming import file_ticks, run_hybrid_ema
@@ -465,6 +467,10 @@ def test_hybrid_ema_equals_pure_batch(spark, tmp_path):
                          float(j) + 10 * i))
             live.append((k, boundary + dt.timedelta(seconds=3 * j + i + 1), 0,
                          float(9 - j) + 10 * i))
+    hist += [("c", START + dt.timedelta(seconds=j), 0, v)
+             for j, v in enumerate([1.0, 2.0, float("nan")])]
+    live += [("c", boundary + dt.timedelta(seconds=j + 1), 0, v)
+             for j, v in enumerate([5.0, 6.0])]
     d = tmp_path / "live"
     _write_drops(spark, d, live, n_drops=3)
     live_s = file_ticks(spark, str(d), SCHEMA, ts_col="ts",
@@ -2420,7 +2426,7 @@ def test_degenerate_ticks_stream_equals_batch(spark, tmp_path, op):
     every per-tick stateful fold as in its batch twin: align_stream vs
     core.align, run_node_stream (both engines) vs run_node, ema_stream
     vs ema(adjust=False), rolling_tick_stats_stream vs the Spark tick
-    window (its NaN rule is not settled; NULL value and NULL key only).
+    window over the NaN-skipped value (csp's ignore_na=True default).
     One key per kind; two drops with the degenerate tick in the first,
     so its effect must survive the state-store round trip."""
     from pyspark.sql import Window
@@ -2430,8 +2436,7 @@ def test_degenerate_ticks_stream_equals_batch(spark, tmp_path, op):
         align_stream, rolling_tick_stats_stream, run_node_stream,
     )
 
-    cases = {c: kv for c, kv in _DEGENERATE.items()
-             if (op, c) != ("rolling", "nan_value")}
+    cases = _DEGENERATE
     data = {
         "x": [(key, START + dt.timedelta(seconds=2 * i), i, v)
               for key, deg in cases.values()
@@ -2468,9 +2473,10 @@ def test_degenerate_ticks_stream_equals_batch(spark, tmp_path, op):
                 "roll_min", "roll_max"]
         got = rolling_tick_stats_stream(live["x"], 3)
         w = Window.partitionBy(KEY).orderBy(TS, SEQ).rowsBetween(-2, 0)
+        v = F.nanvl(F.col(VALUE), F.lit(None).cast("double"))
         ref = hist["x"].df.select(
             KEY, TS, SEQ,
-            *(f(VALUE).over(w).alias(f"roll_{n}") for n, f in (
+            *(f(v).over(w).alias(f"roll_{n}") for n, f in (
                 ("count", F.count), ("sum", F.sum), ("mean", F.avg),
                 ("min", F.min), ("max", F.max))),
         )
