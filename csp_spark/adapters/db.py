@@ -41,10 +41,13 @@ table replays (unbounded historical read).
 from __future__ import annotations
 
 import datetime as _dt
+import logging
 from abc import ABC, abstractmethod
 from typing import Any, Mapping
 
 from ..sources.other import read_jdbc
+
+logger = logging.getLogger("csp_spark")
 
 __all__ = [
     "DBReader",
@@ -615,9 +618,7 @@ class DBReader:
         if order:
             sql += " ORDER BY " + ", ".join(order)
         if self._log_query:
-            import logging
-
-            logging.getLogger(__name__).info("DBReader query: %s", sql)
+            logger.info("DBReader query: %s", sql)
         return sql, params
 
     def _load_df(self, symbol):
@@ -898,9 +899,7 @@ class DBReaderImpl(PendingRowManagerImpl):
         finally:
             _run_info_stack.pop()
         if rep._log_query:
-            import logging
-
-            logging.getLogger(__name__).info("DBReaderImpl query: %s", sql)
+            logger.info("DBReaderImpl query: %s", sql)
         params = [
             p.isoformat(sep=" ") if isinstance(p, _dt.datetime)
             else p.isoformat() if isinstance(p, (_dt.date, _dt.time))

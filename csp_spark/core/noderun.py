@@ -39,6 +39,7 @@ import pandas as pd
 from .align import _ticked as _ticked_col
 from .align import align
 from .record import Struct
+from .session import _materialize
 from .ticks import KEY, SEQ, TS, VALUE, TickStream
 
 
@@ -112,12 +113,12 @@ class NodeCycle:
     ``ticked(name)`` / ``valid(name)``, and the alarm surface
     (csp.alarms: ``schedule_alarm``/``cancel_alarm``/``alarm``).
 
-    Note: inputs arrive as pandas scalars; a float input that is not
-    yet valid reads as NaN AND valid()==False — a stream that ticks
-    literal NaN values is indistinguishable from invalid here (use
-    drop_nans upstream if that matters). Outputs keep the two apart: a
-    returned NaN ticks NaN, and a None value in a multi-output dict
-    ticks NULL (the keyed runners' output rule, see _per_key_pandas).
+    Note: an input that is not yet valid reads None, in batch and in
+    the stream alike; a float input whose last tick was a literal NaN
+    reads NaN, and valid() is False for both (use drop_nans upstream
+    if that matters). Outputs keep the two apart: a returned NaN ticks
+    NaN, and a None value in a multi-output dict ticks NULL (the keyed
+    runners' output rule, see _per_key_pandas).
     """
 
     __slots__ = ("now", "seq", "state", "_alarm", "_vals", "_ticked", "_rt")
@@ -338,6 +339,23 @@ def _state_factory(state):
     return lambda: _copy.deepcopy(proto)
 
 
+def _flag_nulls(wide, names):
+    """``wide`` with a ``<name>__null`` flag per input. Arrow hands
+    pandas a NULL number as NaN, so the flag is how the batch runner
+    reads a not-yet-valid input as None and a NaN tick as NaN, as the
+    stream's ``__null`` flag does for ``_collapse_cycles``."""
+    from pyspark.sql import functions as F
+
+    return wide.withColumns({f"{n}__null": F.col(n).isNull() for n in names})
+
+
+def _values(pdf, name):
+    """One input's values for the engine, a flagged NULL as None."""
+    a = np.asarray(pdf[name].array, dtype=object)
+    a[pdf[f"{name}__null"].to_numpy()] = None
+    return a
+
+
 def _keyed_runner(fn, names, mk_state, multi, end, emit_state,
                   on_start=None, start_ts=None, has_seed=False,
                   on_stop=None, keep_alarms=False):
@@ -355,14 +373,12 @@ def _keyed_runner(fn, names, mk_state, multi, end, emit_state,
         # columns extracted ONCE per partition, sliced per key by the
         # groupby's positional indices: building 5+ pandas column
         # objects per KEY (frame __getitem__ + block _chop) was most
-        # of runner time at 1.5k keys per pandas call. Positional
-        # .array / fancy-indexed ExtensionArrays keep pandas value
-        # semantics (pd.NaT, np.float64) without Series indexing.
+        # of runner time at 1.5k keys per pandas call.
         keys_all = pdf[KEY].array
         tss_all = pdf[TS].array
         seqs_all = pdf[SEQ].to_numpy()
         tcols_all = {n: pdf[_ticked_col(n)].to_numpy() for n in names}
-        vcols_all = {n: pdf[n].array for n in names}
+        vcols_all = {n: _values(pdf, n) for n in names}
         # .indices yields each key's positional array, increasing
         # within the key — engine order
         for idx in by_key.indices.values():
@@ -402,11 +418,7 @@ def _keyed_runner(fn, names, mk_state, multi, end, emit_state,
                 eng.fire(ts_i)
             else:
                 eng.fire(end_ts, inclusive=True)
-            vals = {}
-            for n in names:
-                v = vcols[n][i]
-                vals[n] = None if v is pd.NaT else v
-            eng.cycle(ts_i, int(seqs[i]), vals,
+            eng.cycle(ts_i, int(seqs[i]), {n: vcols[n][i] for n in names},
                       {n: tcols[n][i] for n in names})
         eng.fire(end_ts, inclusive=True)  # trailing alarms (bounded by end/cap)
         if on_stop is not None:
@@ -533,7 +545,7 @@ def run_node(
         on_start=on_start, start_ts=start, has_seed=has_seed,
         on_stop=on_stop,
     )
-    res = _per_key_pandas(wide, runner, schema)
+    res = _per_key_pandas(_flag_nulls(wide, names), runner, schema)
     if multi:
         from pyspark.sql import functions as F
 
@@ -541,7 +553,7 @@ def run_node(
         # without it each returned TickStream would re-execute the
         # whole pandas node run on action (N full executions of
         # the user's fn), mirroring run_node_with_states below.
-        res = res.localCheckpoint(eager=False)
+        res = _materialize(res, "run_node: multi-output run")
         return {
             n: TickStream(
                 res.filter(F.col(f"{n}__t")).select(
@@ -554,9 +566,9 @@ def run_node(
     # output twice (nand(x, x)-style graphs) would otherwise DOUBLE the
     # upstream logical plan at every level — exponential Catalyst
     # analysis at depth. The LogicalRDD leaf keeps deep node chains
-    # linear (one cached job per node at first action, nothing runs if
-    # the output is never used).
-    return TickStream(res.localCheckpoint(eager=False))
+    # linear (computed once at the first action, nothing runs if the
+    # output is never used).
+    return TickStream(_materialize(res, "run_node: single-output run"))
 
 
 def run_node_with_states(
@@ -613,8 +625,8 @@ def run_node_with_states(
 
     from pyspark.sql import functions as F
 
-    combined = _per_key_pandas(wide, runner, schema)
-    combined = combined.localCheckpoint(eager=False)
+    combined = _per_key_pandas(_flag_nulls(wide, names), runner, schema)
+    combined = _materialize(combined, "run_node_with_states: ticks and states")
     ticks = TickStream(
         combined.filter(F.col(SEQ) != STATE_SEQ).select(KEY, TS, SEQ, VALUE)
     )

@@ -9,9 +9,12 @@ UTC — csp/impl/wiring/runtime.py:27-33).
 
 from __future__ import annotations
 
+import logging
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+logger = logging.getLogger("csp_spark")
 
 _DEFAULTS = {
     # The reference engine is strictly ordered in naive-UTC nanoseconds;
@@ -69,3 +72,18 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def _materialize(df: DataFrame, reason: str) -> DataFrame:
+    """The package's one materialization, a lazy ``localCheckpoint``
+    logged with ``reason`` at DEBUG; no other module persists, caches
+    or checkpoints. It truncates lineage, never enters Spark's
+    CacheManager (no later query is served from it) and is freed when
+    the frame is garbage-collected, so no caller manages a lifetime.
+    Lazy, because every caller reads the frame soon after and the first
+    read stores it: an eager ``count()`` would only add a job (under
+    AQE, building it still runs the plan's shuffle stages). The trade:
+    the stored blocks have no replicas, so losing an executor fails a
+    job that reads a finished checkpoint instead of recomputing it."""
+    logger.debug("materialize: %s", reason)
+    return df.localCheckpoint(eager=False)

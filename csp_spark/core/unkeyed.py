@@ -8,9 +8,7 @@ single-task bottleneck at 100 TB. For ASSOCIATIVE running aggregates
 two-pass prefix pattern (parallel prefix-sum / MapReduce "scan"):
 
 1. range-partition the stream by engine order ``(ts, seq)`` and pin
-   each row's partition id (localCheckpoint — a recompute could
-   reassign ids, so the id column is materialized exactly once, and
-   the checkpoint is released when the plan is garbage-collected);
+   each row's partition id (``_range_base``);
 2. one per-partition partial aggregate → a #partitions-row frame; its
    exclusive prefix combine (a window over ≤ thousands of rows — the
    only intentionally-single-partition step, and it is tiny) gives
@@ -35,21 +33,31 @@ import datetime as _dt
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from .session import _materialize
 from .ticks import KEY, SEQ, TS, TickStream
 
 _DEC = "decimal(28,10)"
 
 
-def _parallelism(spark, num_partitions: "int | None") -> int:
-    """Partition count for the range repartition: explicit argument,
-    else the cluster's default parallelism, else (Spark Connect — no
-    sparkContext) the session's shuffle-partitions setting."""
-    if num_partitions:
-        return num_partitions
-    try:
-        return spark.sparkContext.defaultParallelism
-    except Exception:  # Spark Connect
-        return int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+def _range_base(x: TickStream, num_partitions: "int | None"):
+    """``(key, ts, seq, __v, __pid)``: the stream range-partitioned by
+    engine order ``(ts, seq)`` into ``num_partitions`` (else the default
+    parallelism, else under Spark Connect the shuffle-partitions
+    setting), sorted within each partition, with the partition id
+    pinned — checkpointed, as a recompute could reassign ids."""
+    spark, n = x.df.sparkSession, num_partitions
+    if not n:
+        try:
+            n = spark.sparkContext.defaultParallelism
+        except Exception:  # Spark Connect: no sparkContext
+            n = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    return _materialize(
+        x.df.select(KEY, TS, SEQ, F.col(x.value_col).alias("__v"))
+        .repartitionByRange(n, TS, SEQ)
+        .sortWithinPartitions(TS, SEQ)
+        .withColumn("__pid", F.spark_partition_id()),
+        "unkeyed: range-partitioned base",
+    )
 
 
 _AGGS = ("sum", "count", "min", "max", "last")
@@ -69,19 +77,7 @@ def running_unkeyed(
     """
     if agg not in _AGGS:
         raise ValueError(f"agg must be one of {_AGGS}")
-    spark = x.df.sparkSession
-    n = _parallelism(spark, num_partitions)
-    v = F.col(x.value_col)
-
-    base = (
-        x.df.select(KEY, TS, SEQ, v.alias("__v"))
-        .repartitionByRange(n, TS, SEQ)
-        .sortWithinPartitions(TS, SEQ)
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )  # pin the pid assignment; localCheckpoint (not persist) so the
-    #    materialized copy is released when the plan is GC'd — repeated
-    #    calls in one session don't accumulate executor storage
+    base = _range_base(x, num_partitions)
 
     if agg == "sum":
         part = F.sum(F.col("__v").cast(_DEC))
@@ -293,17 +289,9 @@ def _windowed_unkeyed_time(
     if us < 1:
         raise ValueError("time window must be positive")
     spark = x.df.sparkSession
-    n = _parallelism(spark, num_partitions)
-    v = F.col(x.value_col)
-
-    base = (
-        x.df.select(KEY, TS, SEQ, v.alias("__v"))
-        .repartitionByRange(n, TS, SEQ)
-        .sortWithinPartitions(TS, SEQ)
-        .withColumn("__pid", F.spark_partition_id())
-        .withColumn("__tsu", F.unix_micros(F.col(TS)))
-        .localCheckpoint(eager=True)
-    )  # pinned + GC-released (see running_unkeyed)
+    base = _range_base(x, num_partitions).withColumn(
+        "__tsu", F.unix_micros(F.col(TS))
+    )
 
     bounds = {
         r["__pid"]: (r["mn"], r["mx"])
@@ -417,19 +405,11 @@ def windowed_unkeyed(
     if window < 1:
         raise ValueError("window must be >= 1 tick")
     spark = x.df.sparkSession
-    n = _parallelism(spark, num_partitions)
-    v = F.col(x.value_col)
 
     def _cols(frame):
         return _win_cols(aggs, frame)
 
-    base = (
-        x.df.select(KEY, TS, SEQ, v.alias("__v"))
-        .repartitionByRange(n, TS, SEQ)
-        .sortWithinPartitions(TS, SEQ)
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )  # pinned + GC-released (see running_unkeyed)
+    base = _range_base(x, num_partitions)
 
     sizes = {
         r["__pid"]: r["n"]
@@ -641,17 +621,8 @@ def ema_unkeyed(
         raise ValueError("alpha must be in (0, 1]")
     import pandas as pd
 
-    spark = x.df.sparkSession
-    n = _parallelism(spark, num_partitions)
     a1 = 1.0 - alpha
-
-    base = (
-        x.df.select(KEY, TS, SEQ, F.col(x.value_col).alias("__v"))
-        .repartitionByRange(n, TS, SEQ)
-        .sortWithinPartitions(TS, SEQ)
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )  # pinned + GC-released (see running_unkeyed)
+    base = _range_base(x, num_partitions)
 
     def _zero_init(vals: "pd.Series") -> "pd.Series":
         # l_i = (1-a) l_{i-1} + a x_i with l_{-1} = 0: inject a leading

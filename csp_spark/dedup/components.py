@@ -39,6 +39,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..core.session import _materialize
+
 
 def connected_components(
     pairs: DataFrame,
@@ -71,10 +73,7 @@ def connected_components(
         .distinct()
     )
     # ONE job decides the path AND feeds the local solver: collect up
-    # to threshold+1 edges (<= ~32 MB of id pairs). The former shape —
-    # eager localCheckpoint, then count, then toLocalIterator (one
-    # sequential job per partition) — cost 2 + n_partitions driver
-    # round-trips before any union-find work even on a 50-edge graph.
+    # to threshold+1 edges (<= ~32 MB of id pairs)
     head = sym_plan.limit(local_threshold + 1).collect()
     if len(head) <= local_threshold:
         return _local_components(
@@ -84,7 +83,7 @@ def connected_components(
     # materialize ONCE: the pair source is often an expensive
     # pipeline (minhash LSH); without this every job in round 1
     # (neighbor-min, convergence probe, relabel) re-executes it
-    sym = sym_plan.localCheckpoint(eager=True)
+    sym = _materialize(sym_plan, "connected_components: symmetric edges")
     # labels over ORIGINAL nodes; cedges over current component labels.
     labels = sym.select(F.col("u").alias("id")).distinct().withColumn(
         "component", F.col("id")
@@ -131,8 +130,8 @@ def connected_components(
         )
         # materialize the (shrinking) frontier so each round's lineage
         # stays flat — without this the plan doubles every iteration
-        cedges = cedges.localCheckpoint(eager=True)
-        labels = labels.localCheckpoint(eager=True)
+        cedges = _materialize(cedges, "connected_components: round edges")
+        labels = _materialize(labels, "connected_components: round labels")
     else:
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds"

@@ -23,6 +23,7 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..core.session import _materialize
 from ..text.analysis import spread as _spread
 from ..text.analysis import tokens
 
@@ -261,6 +262,9 @@ def minhash_lsh_pairs(
     volume — r=2 has ~99% recall at 0.5 but on template-heavy corpora
     (baseline inter-doc J ~0.2) floods verification with ~250x the
     candidate pairs.
+
+    The result is checkpointed (``localCheckpoint``), not cached:
+    nothing stays in Spark's cache, and callers do nothing to release it.
     """
     rows_per_band = num_hashes // bands
     docs = _spread(docs)
@@ -327,8 +331,7 @@ def minhash_lsh_pairs(
     # |docs| x num_hashes longs — tiny. Without this, the band join
     # (self-join) and every downstream stage re-runs the full shingle
     # scan + 64-min aggregate (the most expensive stage) once per use.
-    sig = sig.persist()
-    sig.count()
+    sig = _materialize(sig, "minhash_lsh_pairs: signatures")
 
     # Stage 3 — band buckets: candidate generation shuffles only
     # (id, band, bucket) — 24 bytes/row. Band hash = multi-arg xxhash64
@@ -355,10 +358,9 @@ def minhash_lsh_pairs(
         banded, ["band", "bucket"], bucket_cap, "minhash_lsh_pairs"
     ).dropDuplicates(["id_a", "id_b"])
     # The pair list feeds two different broadcasts below; without a
-    # persist each broadcast would recompute the whole signature +
+    # checkpoint each broadcast would recompute the whole signature +
     # band-join pipeline. It is at most a few MB by construction.
-    cand = cand.persist()
-    cand.count()
+    cand = _materialize(cand, "minhash_lsh_pairs: candidate pairs")
 
     # Stage 4 — exact-Jaccard verification restricted to candidates:
     # semi-join the SOURCE DOCS down to the candidate id set first
@@ -401,14 +403,7 @@ def minhash_lsh_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
-    # Materialize the (small) verified pair set, then drop the two
-    # intermediate caches so repeated invocations in one session don't
-    # accumulate executor memory; only the result stays cached.
-    out = out.persist()
-    out.count()
-    sig.unpersist()
-    cand.unpersist()
-    return out
+    return _materialize(out, "minhash_lsh_pairs: verified pairs")
 
 
 def ngram_jaccard_pairs(

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame as SparkDataFrame
 from pyspark.sql import functions as F
 
 from .core.align import _ticked, align
+from .core.session import _materialize
 from .core.ticks import GLOBAL_KEY, KEY, SEQ, TS, TickStream
 
 __all__ = ["TsFrame"]
@@ -241,11 +242,11 @@ class TsFrame:
                 self.columns,
                 F.lit(True),
             )
-            thr = (
+            thr = _materialize(
                 align(self._data, keep_ticked=False)
                 .filter(all_valid)
                 .groupBy(KEY)
-                .agg(F.min(F.struct(TS, SEQ)).alias("__thr"))
+                .agg(F.min(F.struct(TS, SEQ)).alias("__thr")),
                 # the threshold is consumed by the trigger gate AND by
                 # every column's buffer gate (1 + n_columns subtrees);
                 # without materialization Catalyst re-plans the whole
@@ -257,14 +258,14 @@ class TsFrame:
                 # AQE-final executed plan still carried 4 SortMergeJoins
                 # plus 20 InMemoryTableScans of cache overhead — worse.
                 # Rejected on measurement.
-                .localCheckpoint(eager=False)
+                "to_spark_ts: per-key all-valid threshold",
             )
             trig = trig.join(thr, KEY).filter(
                 F.struct(F.col("trig_ts"), F.col("trig_seq")) >= F.col("__thr")
             ).drop("__thr")
             # gated triggers feed every column's rank union; the rows
             # are trigger-tick-sized by construction
-            trig = trig.localCheckpoint(eager=False)
+            trig = _materialize(trig, "to_spark_ts: gated triggers")
 
         from pyspark.sql import Window as W
 

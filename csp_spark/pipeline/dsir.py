@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..core.session import _materialize
 from ..text.analysis import tokens
 
 
@@ -102,12 +103,11 @@ def dsir_weights(
         .groupBy("g").agg(F.count(F.lit(1)).alias("c_tgt"))
     )
     # union vocabulary + totals: a handful of 1-row aggregates
-    model = raw_model.join(tgt_model, "g", "full").select(
+    model = _materialize(raw_model.join(tgt_model, "g", "full").select(
         "g",
         F.coalesce("c_raw", F.lit(0)).alias("c_raw"),
         F.coalesce("c_tgt", F.lit(0)).alias("c_tgt"),
-    )
-    model = model.persist()
+    ), "dsir_weights: model, read by the totals and the weights")
     tot = model.agg(
         F.sum("c_raw").alias("n_raw"),
         F.sum("c_tgt").alias("n_tgt"),
@@ -138,7 +138,6 @@ def dsir_weights(
             F.coalesce("log_w", F.lit(0.0)).alias("log_w"),
         )
     )
-    model.unpersist()
     return out
 
 
@@ -160,12 +159,16 @@ def dsir_select(
     Scale shape: the selection boundary comes from a distributed
     ``orderBy(...).limit(k)`` (TakeOrderedAndProject — per-partition
     top-k then a k-row merge, never a single-task global sort of the
-    corpus); the flag is then a plan-literal comparison on every row."""
+    corpus); the flag is then a plan-literal comparison on every row.
+
+    The weights are checkpointed (``localCheckpoint``), not cached:
+    nothing stays in Spark's cache, and callers do nothing to release
+    it."""
     w = dsir_weights(
         raw_docs, target_docs, text_col=text_col, id_col=id_col,
         n_buckets=n_buckets, smoothing=smoothing,
     ).withColumn("log_w", F.round("log_w", 6))
-    w = w.persist()
+    w = _materialize(w, "dsir_select: weights, read by the boundary and the flag")
     kth = (
         w.orderBy(F.desc("log_w"), F.col(id_col))
         .limit(k)

@@ -18,6 +18,7 @@ from typing import Any, Callable, Mapping
 
 from pyspark.sql import functions as F
 
+from ..core.session import _materialize
 from ..core.ticks import KEY, SEQ, TS, VALUE, TickStream
 
 #: cap on csp.run's feedback fixed-point passes — each pass replays
@@ -171,14 +172,14 @@ def run(
                 b = fb._bound
                 # stay distributed across passes (engine Feedback.h is
                 # per-cycle, never whole-stream): each pass pins the
-                # bound ticks with an eager localCheckpoint and
-                # convergence compares a 1-row (count, xxhash64-sum)
-                # signature — the same detector feedback_iterate uses
-                # — instead of collecting the stream to the driver
-                bdf = b.df.select(
+                # bound ticks and convergence compares a 1-row (count,
+                # xxhash64-sum) signature — the same detector
+                # feedback_iterate uses — instead of collecting the
+                # stream to the driver
+                bdf = _materialize(b.df.select(
                     "key", "ts", "seq",
                     F.col(b.value_col).alias("value"),
-                ).localCheckpoint(eager=True)
+                ), "graph feedback: bound ticks of one pass")
                 agg = bdf.select(
                     F.count(F.lit(1)).alias("n"),
                     F.sum(
@@ -316,12 +317,12 @@ def feedback_iterate(
     loop. Spark has no cyclic dataflow, so we iterate the whole batch
     plan to a fixed point on the driver: step() is applied until its
     output stops changing (checksum compare), materializing each
-    round (localCheckpoint) so lineage doesn't grow unboundedly.
+    round so lineage doesn't grow unboundedly.
 
     Suits iterative-refinement graphs (label propagation, clamped
     accumulators). Per-cycle realtime feedback is out of scope and
     documented as a semantic delta."""
-    cur = TickStream(init.df.localCheckpoint(eager=True), init.value_col)
+    cur = TickStream(_materialize(init.df, "feedback_iterate"), init.value_col)
 
     def _sig(s: TickStream) -> tuple:
         agg = s.df.select(
@@ -333,7 +334,7 @@ def feedback_iterate(
     last = _sig(cur)
     for _ in range(max_iters):
         nxt = step(cur)
-        nxt = TickStream(nxt.df.localCheckpoint(eager=True), nxt.value_col)
+        nxt = TickStream(_materialize(nxt.df, "feedback_iterate"), nxt.value_col)
         sig = _sig(nxt)
         if sig == last:
             return nxt

@@ -24,6 +24,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..core.session import _materialize
+
 logger = logging.getLogger("csp_spark")
 
 #: Similarity cells per BLAS slab in :func:`_margin_select` (~32 MB of
@@ -961,8 +963,11 @@ def embedding_near_dups(
     semi-join, so shuffled bytes are independent of bits × vector
     size. Same pattern as minhash_lsh_pairs' Jaccard verification.
 
-    ``dim`` is required (see :func:`infer_dim`) — building the plan
-    runs no hidden driver action."""
+    ``dim`` is required (see :func:`infer_dim`) — no hidden driver
+    action infers it.
+
+    The result is checkpointed (``localCheckpoint``), not cached:
+    nothing stays in Spark's cache, and callers do nothing to release it."""
     if dim is None:
         raise ValueError(
             "embedding_near_dups requires dim (vector length); call "
@@ -990,10 +995,9 @@ def embedding_near_dups(
         .dropDuplicates(["id_a", "id_b"])
     )
     # The pair list feeds the id-set broadcast AND the verify joins;
-    # persist so the bucket self-join isn't recomputed per use. A few
-    # MB by construction (pairs, no payload).
-    cand = cand.persist()
-    cand.count()
+    # checkpoint it so the bucket self-join isn't recomputed per use. A
+    # few MB by construction (pairs, no payload).
+    cand = _materialize(cand, "embedding_near_dups: candidate pairs")
     cand_ids = cand.select(F.explode(F.array("id_a", "id_b")).alias("id")).distinct()
     vecs = base.join(F.broadcast(cand_ids), "id", "left_semi")
     out = (
@@ -1003,13 +1007,7 @@ def embedding_near_dups(
         .filter(F.col("cos_sim") >= threshold)
         .select("id_a", "id_b", "cos_sim")
     )
-    # Materialize the (small) verified pair set, then release the
-    # intermediate cache so repeated calls don't accumulate executor
-    # memory; only the result itself stays cached.
-    out = out.persist()
-    out.count()
-    cand.unpersist()
-    return out
+    return _materialize(out, "embedding_near_dups: verified pairs")
 
 
 def cosine_pairs_above(

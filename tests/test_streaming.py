@@ -2414,16 +2414,19 @@ def _canon(rows):
     return sorted((tuple(c(v) for v in r) for r in rows), key=repr)
 
 
-#: degenerate tick kinds -> (key, value of the key's second x tick)
-_DEGENERATE = {"null_value": ("s1", None), "nan_value": ("s2", float("nan")),
-               "null_key": (None, 2.0)}
+#: degenerate tick kinds -> (key, the key's four x values)
+_DEGENERATE = {"null_value": ("s1", [1.0, None, 3.0, 4.0]),
+               "nan_value": ("s2", [1.0, float("nan"), 3.0, 4.0]),
+               "null_key": (None, [1.0, 2.0, 3.0, 4.0]),
+               "null_first": ("s3", [None, 2.0, 3.0, 4.0])}
 
 
 @pytest.mark.parametrize(
     "op", ["align", "node", "node_alarms", "ema", "rolling"])
 def test_degenerate_ticks_stream_equals_batch(spark, tmp_path, op):
-    """A NULL value, a NaN value and a NULL key give the same output in
-    every per-tick stateful fold as in its batch twin: align_stream vs
+    """A NULL value, a NaN value, a NULL key and a key whose first tick
+    is NULL (its input not yet valid) give the same output in every
+    per-tick stateful fold as in its batch twin: align_stream vs
     core.align, run_node_stream (both engines) vs run_node, ema_stream
     vs ema(adjust=False), rolling_tick_stats_stream vs the Spark tick
     window over the NaN-skipped value (csp's ignore_na=True default).
@@ -2439,8 +2442,7 @@ def test_degenerate_ticks_stream_equals_batch(spark, tmp_path, op):
     cases = _DEGENERATE
     data = {
         "x": [(key, START + dt.timedelta(seconds=2 * i), i, v)
-              for key, deg in cases.values()
-              for i, v in enumerate([1.0, deg, 3.0, 4.0])],
+              for key, xs in cases.values() for i, v in enumerate(xs)],
         "y": [(key, START + dt.timedelta(seconds=2 * i + 1), i, 10.0 + i)
               for key, _ in cases.values() for i in range(4)],
     }
