@@ -343,10 +343,20 @@ def _flag_nulls(wide, names):
     """``wide`` with a ``<name>__null`` flag per input. Arrow hands
     pandas a NULL number as NaN, so the flag is how the batch runner
     reads a not-yet-valid input as None and a NaN tick as NaN, as the
-    stream's ``__null`` flag does for ``_collapse_cycles``."""
+    stream's ``__null`` flag does for ``_collapse_cycles``. An integral
+    input crosses with its NULLs as 0 (the flag still marks them): one
+    NULL would turn the whole partition's column float64, so a node
+    would read an int or a float depending on which keys share its
+    partition."""
     from pyspark.sql import functions as F
+    from pyspark.sql.types import IntegralType
 
-    return wide.withColumns({f"{n}__null": F.col(n).isNull() for n in names})
+    types = {f.name: f.dataType for f in wide.schema.fields}
+    return wide.withColumns({
+        **{f"{n}__null": F.col(n).isNull() for n in names},
+        **{n: F.coalesce(F.col(n), F.lit(0).cast(types[n]))
+           for n in names if isinstance(types[n], IntegralType)},
+    })
 
 
 def _values(pdf, name):

@@ -5,6 +5,9 @@ ship on a 1000-executor cluster: AQE on (runtime re-plan, skew-join
 splitting, partition coalescing), Arrow for the few pandas exchanges,
 UTC session timezone (the reference normalizes all timestamps to naive
 UTC — csp/impl/wiring/runtime.py:27-33).
+
+Shuffle partition counts follow the session's cores, not a constant;
+``get_spark`` states the rule.
 """
 
 from __future__ import annotations
@@ -47,31 +50,43 @@ _DEFAULTS = {
 }
 
 
+_SHUFFLE = "spark.sql.shuffle.partitions"
+_INITIAL = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
+
+
 def get_spark(
     app_name: str = "csp_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     **extra: str,
 ) -> SparkSession:
     """Build (or fetch) the SparkSession used by the engine.
 
-    ``SPARK_GRAFT_CPUS`` selects local parallelism (driver contract);
-    ``shuffle_partitions`` defaults to 32 locally — on a cluster you set
-    it near total cores (or rely on AQE coalescing from a higher value).
+    ``SPARK_GRAFT_CPUS`` selects local parallelism (driver contract).
+    Both partition counts come from the session's cores ``n =
+    sparkContext.defaultParallelism`` (4 at ``local[4]``):
+    ``spark.sql.shuffle.partitions = n``, which is every streaming
+    stateful operator's state-partition count (streaming has no AQE),
+    and ``spark.sql.adaptive.coalescePartitions.initialPartitionNum =
+    8 * n``, where every batch exchange starts before AQE coalesces it.
+    Either key passed in ``extra`` wins over its derived value. A
+    streaming checkpoint keeps the count it was created with: Spark
+    restores it from the offset log.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("CSP_SPARK_SHUFFLE_PARTITIONS", "32"))
 
     builder = SparkSession.builder.appName(app_name).master(master)
     conf = dict(_DEFAULTS)
-    conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     conf.update(extra)
     for k, v in conf.items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    n = spark.sparkContext.defaultParallelism
+    for key, derived in ((_SHUFFLE, n), (_INITIAL, 8 * n)):
+        if key not in extra:
+            spark.conf.set(key, str(derived))
+    return spark
 
 
 def _materialize(df: DataFrame, reason: str) -> DataFrame:

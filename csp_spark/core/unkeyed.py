@@ -50,7 +50,7 @@ def _range_base(x: TickStream, num_partitions: "int | None"):
         try:
             n = spark.sparkContext.defaultParallelism
         except Exception:  # Spark Connect: no sparkContext
-            n = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+            n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     return _materialize(
         x.df.select(KEY, TS, SEQ, F.col(x.value_col).alias("__v"))
         .repartitionByRange(n, TS, SEQ)

@@ -628,7 +628,9 @@ def run_node_stream(
     align's rule); an alarm coincident with an input tick fires after
     that timestamp's input cycles (the engine's ``fire`` rule).
     Equality-tested against batch run_node, alarms, NULL and NaN ticks
-    and a checkpoint restart included.
+    and a checkpoint restart included. One difference stays: every
+    input is cast to double, so an integral input reaches the node as
+    a float here and as an int in batch run_node.
     """
     from ..core.noderun import (
         _MAX_ALARM_CYCLES as cap, AlarmHandoff, _NodeEngine, _state_factory,

@@ -11,7 +11,7 @@ TD = dt.timedelta
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="csp_spark_tests", shuffle_partitions=8)
+    s = get_spark(app_name="csp_spark_tests")
     s.sparkContext.setLogLevel("ERROR")
     yield s
 

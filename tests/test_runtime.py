@@ -1072,6 +1072,34 @@ def test_keyed_runner_keeps_nan_and_null_apart(spark, build, want):
     assert ["nan" if v != v else v for v in got] == want
 
 
+def test_run_node_integral_input_type_ignores_partition(spark):
+    """A node reads a non-NULL ``long`` input as an int even when a
+    NULL of that input shares its pandas partition (Arrow would hand
+    the whole column over as float64)."""
+    from csp_spark import run_node
+
+    x = TickStream(spark.createDataFrame(
+        [(k, START + TD(seconds=i), i, v)
+         for k, vs in (("a", [None, 2]), ("b", [1, 2]))
+         for i, v in enumerate(vs)],
+        "key string, ts timestamp, seq long, value long"))
+    keys = ("spark.sql.shuffle.partitions",
+            "spark.sql.adaptive.coalescePartitions.initialPartitionNum")
+    old = {k: spark.conf.get(k) for k in keys}
+    try:
+        for k in keys:  # both keys in one pandas partition
+            spark.conf.set(k, "1")
+        got = run_node(lambda c: f"{type(c['x']).__name__}:{c['x']!r}", x,
+                       output_type="string").collect_all()
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+    assert got == {
+        "a": [(START, "NoneType:None"), (START + TD(seconds=1), "int:2")],
+        "b": [(START, "int:1"), (START + TD(seconds=1), "int:2")],
+    }
+
+
 def test_dynamic_snap_of_unorderable_type(spark):
     """A snap stream whose value has no ordering (a map) still snaps
     the last value at or before the key's first trigger tick."""

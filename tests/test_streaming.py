@@ -359,7 +359,14 @@ def test_align_stream_matches_batch(spark, tmp_path):
                        value_col="value", key_col="key")
     ask_s = file_ticks(spark, str(d2), SCHEMA, ts_col="ts",
                        value_col="value", key_col="key")
-    got = collect_stream(align_stream({"bid": bid_s, "ask": ask_s}))
+    q = (align_stream({"bid": bid_s, "ask": ask_s}).writeStream
+         .format("memory").queryName("align_stream_matches_batch")
+         .trigger(availableNow=True).start())
+    q.awaitTermination()
+    # a new stateful stream holds one state partition per core
+    assert (q.lastProgress["stateOperators"][0]["numShufflePartitions"]
+            == spark.sparkContext.defaultParallelism)
+    got = spark.table("align_stream_matches_batch")
     grows = sorted(
         (r["ts"], r["seq"], r["bid"], r["ask"], r["bid__ticked"],
          r["ask__ticked"]) for r in got.collect()
@@ -2402,6 +2409,50 @@ def test_run_node_stream_survives_checkpoint_restart(spark, tmp_path):
         for src in ("x", "y")
     }).df.select(KEY, TS, SEQ, VALUE).collect())
     assert got == ref and len(got) == 22
+
+
+@pytest.mark.slow
+def test_checkpoint_keeps_its_state_partitions(spark, tmp_path):
+    """A checkpoint created under 32 shuffle partitions restarts under
+    the session's default (one per core) with its 32 state partitions,
+    which Spark restores from the offset log, and the two runs together
+    equal batch align."""
+    from csp_spark import align
+    from csp_spark.streaming import align_stream
+
+    rows = {src: [(k, START + dt.timedelta(seconds=2 * i + (src == "y")), i,
+                   float(i) + (k == "b"))
+                  for i in range(4) for k in ("a", "b")]
+            for src in ("x", "y")}
+    ckpt, sink = str(tmp_path / "ckpt"), str(tmp_path / "out")
+    cols = [KEY, TS, SEQ, "x", "x__ticked", "y", "y__ticked"]
+
+    def run_once(lo, hi):
+        for src, rs in rows.items():
+            spark.createDataFrame(rs[lo:hi], SCHEMA).coalesce(1).write.parquet(
+                str(tmp_path / src / f"b{lo}"))
+        live = {src: file_ticks(spark, str(tmp_path / src / "*"), SCHEMA,
+                                ts_col="ts", value_col="value",
+                                key_col="key", seq_col="seq")
+                for src in rows}
+        q = (align_stream(live).select(*cols).writeStream.format("parquet")
+             .option("path", sink).option("checkpointLocation", ckpt)
+             .outputMode("append").trigger(availableNow=True).start())
+        q.awaitTermination()
+        return q.lastProgress["stateOperators"][0]["numShufflePartitions"]
+
+    default = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", "32")
+        assert run_once(0, 4) == 32
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", default)
+    assert int(default) == spark.sparkContext.defaultParallelism != 32
+    assert run_once(4, 8) == 32
+    got = spark.read.parquet(sink).select(*cols).collect()
+    ref = align({src: TickStream(spark.createDataFrame(rs, SCHEMA))
+                 for src, rs in rows.items()}).select(*cols).collect()
+    assert _canon(got) == _canon(ref) and len(got) == 16
 
 
 def _canon(rows):
