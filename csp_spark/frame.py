@@ -15,21 +15,33 @@ one aligned Catalyst plan), and evaluation surfaces are:
 - ``to_pandas()``  — csp.DataFrame.to_pandas parity: each column holds
   values only at its OWN tick times (NaN elsewhere), union time index,
   one Spark job for the whole frame.
+- ``to_spark_ts()`` — csp.DataFrame.to_pandas_ts at scale: per trigger
+  tick, every column's windowed buffer as long rows. One tagged union
+  of the columns and the trigger, one key shuffle; the all-valid gate
+  and a count window are windows on that partitioning (no join, no
+  checkpoint), a time window is one band join on it.
+- ``to_pandas_ts()`` — the pandas Series of DataFrames, from one Spark
+  job over the same rows.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
+from functools import reduce
 from typing import Iterator, Mapping
 
 from pyspark.sql import DataFrame as SparkDataFrame
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from .core.align import _ticked, align
-from .core.session import _materialize
 from .core.ticks import GLOBAL_KEY, KEY, SEQ, TS, TickStream
 
 __all__ = ["TsFrame"]
+
+TRIG_TS, TRIG_SEQ = "trig_ts", "trig_seq"
+#: to_spark_ts' union tag: which column (or the trigger) a row came from
+_TAG = "__tag"
 
 
 class TsFrame:
@@ -195,7 +207,7 @@ class TsFrame:
         as ONE Spark DataFrame ``(key, trig_ts, trig_seq, ts, seq,
         <columns...>)``, one row per (trigger tick, buffer time); a
         column is NULL on rows where it did not tick (the reference's
-        union-index NaN fill).
+        union-index NaN fill). A NULL key is a key like any other.
 
         ``window``: int n = last n ticks PER COLUMN as of the trigger
         (like set_buffering_policy(tick_count=n) + items_at(-(n-1),
@@ -205,173 +217,141 @@ class TsFrame:
         buffers until every column has ticked once (make_pandas wires
         csp.filter(all_valid, ...) on trigger and every column).
 
-        Plan: timedelta windows use one (ts,seq)-band-bounded join
-        trigger×ticks; count windows rank each column's ticks once,
-        as-of attach the trigger's rank via a running count, and
-        EQUI-join on (key, rank) over the trigger's exploded rank band
-        — the intermediate is |trigger|×window, never trigger × full
-        history. Then a full-outer merge on the buffer cycle — all
-        keyed on the stream key, so frames for different keys build in
-        parallel. Output size is inherently |trigger| × window rows
-        per column: frame materialization is the one operator whose
-        OUTPUT, not its shuffle, is the cost."""
+        Plan: one tagged union of every column's ticks and the trigger
+        (a trigger sorts after a tick of its own cycle), shuffled by
+        key ONCE; everything after runs on that partitioning. The
+        all-valid threshold is each key's largest first-valid (ts, seq)
+        over the columns, an unbounded per-key window applied as a
+        filter. A count window collects each column's last ``window``
+        ticks as an array at every tick of that column (a sliding rows
+        frame per (key, column)); a trigger carries the latest array of
+        each column forward with a running per-key ``last``, explodes
+        them and merges ticks of one cycle with a group-by on the
+        trigger's buffer rows. Cost: O(column ticks × window) array
+        work plus O(triggers × window) output rows — linear in the
+        data for a fixed window, and never trigger × full history. A
+        time window collapses each key's cycles and band-joins them
+        with the gated triggers on (key, ts); its output is the
+        triggers × ticks in the band. Output size is inherently
+        |trigger| × window rows: frame materialization is the one
+        operator whose OUTPUT, not its shuffle, is the cost."""
+        return self._buffer_rows(trigger, window, tindex, wait_all_valid,
+                                 keep_empty=False)
+
+    def _buffer_rows(self, trigger, window, tindex, wait_all_valid,
+                     keep_empty: bool) -> SparkDataFrame:
+        """to_spark_ts' long frame; ``keep_empty`` adds one row with a
+        NULL ts for each (gated) trigger whose buffers are all empty."""
         if not self._data:
             raise ValueError("empty frame")
-        trigger = self._resolve(trigger)
+        timed = isinstance(window, _dt.timedelta)
+        if not timed and not (isinstance(window, int) and window > 0):
+            raise ValueError(f"invalid window {window!r}")
+        names = self.columns
+        n = len(names)
+        raw = list(self._data.values())
+        bufs = raw
         if tindex is not None:
-            tindex = self._resolve(tindex)
+            from .core.align import sample
 
-        from .core.align import sample
+            bufs = [sample(self._resolve(tindex), x) for x in raw]
+        # tags: 0..n-1 buffer ticks of each column, n the trigger, and
+        # with tindex n+1.. the raw columns the threshold reads
+        # (make_pandas gates on the data basket, not the sampled one)
+        parts = [(i, s, i) for i, s in enumerate(bufs)]
+        parts.append((n, self._resolve(trigger), None))
+        if wait_all_valid and tindex is not None:
+            parts += [(n + 1 + i, s, i) for i, s in enumerate(raw)]
+        dtypes = [dict(s.df.dtypes)[s.value_col] for s in raw]
 
-        streams = {
-            c: (sample(tindex, x) if tindex is not None else x)
-            for c, x in self._data.items()
-        }
+        def tagged(tag, s, slot):
+            vals = [
+                (F.col(s.value_col) if j == slot else F.lit(None))
+                .cast(dtypes[j]).alias(c)
+                for j, c in enumerate(names)
+            ]
+            return s.df.select(KEY, TS, SEQ, F.lit(tag).alias(_TAG), *vals)
 
-        trig = trigger.df.select(
-            KEY, F.col(TS).alias("trig_ts"), F.col(SEQ).alias("trig_seq")
-        )
+        u = reduce(
+            SparkDataFrame.unionByName, [tagged(*p) for p in parts]
+        ).repartition(KEY)
+        tag = F.col(_TAG)
         if wait_all_valid:
-            # threshold = the first engine cycle where every RAW column
-            # is valid (make_pandas gates on the data basket, not the
-            # sampled streams)
-            from functools import reduce as _reduce
-
-            all_valid = _reduce(
-                lambda a, c: a & F.col(c).isNotNull(),
-                self.columns,
-                F.lit(True),
-            )
-            thr = _materialize(
-                align(self._data, keep_ticked=False)
-                .filter(all_valid)
-                .groupBy(KEY)
-                .agg(F.min(F.struct(TS, SEQ)).alias("__thr")),
-                # the threshold is consumed by the trigger gate AND by
-                # every column's buffer gate (1 + n_columns subtrees);
-                # without materialization Catalyst re-plans the whole
-                # align + aggregate per consumer — with it the
-                # key-sized rows compute once (frame_pandas_ts:
-                # 18 source scans → 8, guide §3.3/§5). r13 re-examined
-                # this materialization (VERDICT r12 item 6): persist()
-                # instead of localCheckpoint keeps lineage/stats but the
-                # AQE-final executed plan still carried 4 SortMergeJoins
-                # plus 20 InMemoryTableScans of cache overhead — worse.
-                # Rejected on measurement.
-                "to_spark_ts: per-key all-valid threshold",
-            )
-            trig = trig.join(thr, KEY).filter(
-                F.struct(F.col("trig_ts"), F.col("trig_seq")) >= F.col("__thr")
-            ).drop("__thr")
-            # gated triggers feed every column's rank union; the rows
-            # are trigger-tick-sized by construction
-            trig = _materialize(trig, "to_spark_ts: gated triggers")
-
-        from pyspark.sql import Window as W
-
-        merged = None
-        for c, s in streams.items():
-            obs = s.df.select(KEY, TS, SEQ, F.col(s.value_col).alias(c))
-            if wait_all_valid:
-                obs = obs.join(thr, KEY).filter(
-                    F.struct(F.col(TS), F.col(SEQ)) >= F.col("__thr")
-                ).drop("__thr")
-            if isinstance(window, _dt.timedelta):
-                cond = [
-                    obs[KEY] == trig[KEY],
-                    F.struct(obs[TS], obs[SEQ])
-                    <= F.struct(trig["trig_ts"], trig["trig_seq"]),
-                    obs[TS] >= trig["trig_ts"] - F.lit(window),
-                ]
-                j = obs.join(trig, cond).select(
-                    obs[KEY], "trig_ts", "trig_seq", obs[TS], obs[SEQ], c
-                )
-            elif isinstance(window, int) and window > 0:
-                # BOUNDED count-window plan: rank each column's ticks
-                # once per key, compute the trigger's as-of rank with a
-                # running count over a tagged union (one keyed window,
-                # linear), then explode each trigger into its ≤window
-                # target ranks and EQUI-join on (key, rank). The
-                # intermediate is exactly |trigger|×window — never
-                # trigger × full history (reference make_pandas buffers
-                # are O(window) per trigger by construction; this
-                # matches that bound).
-                wobs = W.partitionBy(KEY).orderBy(TS, SEQ)
-                obs_r = obs.withColumn(
-                    "__r", F.row_number().over(wobs).cast("long")
-                )
-                u = obs.select(
-                    KEY,
-                    F.col(TS).alias("__uts"),
-                    F.col(SEQ).alias("__useq"),
-                    F.lit(0).alias("__tag"),
-                ).unionByName(
-                    trig.select(
-                        KEY,
-                        F.col("trig_ts").alias("__uts"),
-                        F.col("trig_seq").alias("__useq"),
-                        F.lit(1).alias("__tag"),
-                    )
-                )
-                # obs sorts before a coincident trigger (same ts,seq):
-                # a tick on the trigger's own cycle is inside the window
-                wu = (
-                    W.partitionBy(KEY)
-                    .orderBy("__uts", "__useq", "__tag")
-                    .rowsBetween(W.unboundedPreceding, W.currentRow)
-                )
-                tr = (
-                    u.withColumn(
-                        "__tr",
-                        F.sum(F.lit(1) - F.col("__tag")).over(wu),
-                    )
-                    .filter(F.col("__tag") == 1)
-                    .select(
-                        KEY,
-                        F.col("__uts").alias("trig_ts"),
-                        F.col("__useq").alias("trig_seq"),
-                        F.col("__tr"),
-                    )
-                )
-                # triggers with no prior ticks emit no buffer rows
-                # (sequence() is only built when __tr >= 1; explode of
-                # NULL drops the row, same as the old join producing
-                # nothing for that trigger)
-                tr = tr.withColumn(
-                    "__rs",
+            # a column is valid from its first non-NULL tick (align's
+            # last-value rule; NaN is a value); a key where some column
+            # never ticks has a NULL threshold and drops out
+            per_key = W.partitionBy(KEY)
+            first_valid = [
+                F.min(
                     F.when(
-                        F.col("__tr") >= 1,
-                        F.sequence(
-                            F.greatest(
-                                F.col("__tr") - F.lit(window) + 1,
-                                F.lit(1).cast("long"),
-                            ),
-                            F.col("__tr"),
-                        ),
-                    ),
-                ).select(
-                    KEY, "trig_ts", "trig_seq",
-                    F.explode("__rs").alias("__r"),
-                )
-                # r13 (VERDICT r12 item 6): F.broadcast(tr) here was
-                # built and measured — AQE-final plan SMJ 4 → 2,
-                # Exchange 16 → 12, but an 8-round interleaved A/B read
-                # medians 2.06 vs 1.99 s (wall-neutral at sf0.1, the
-                # query is job-latency-bound), and tr is |gated
-                # triggers| × window rows — NOT bounded by construction,
-                # so a forced hint would turn a large-trigger 100 TB run
-                # into a hard 8 GB-cap failure where SMJ works (the same
-                # reasoning that removed the q17/incremental_dedup
-                # hints in r12). Rejected: keep the un-hinted join.
-                j = obs_r.join(tr, [KEY, "__r"]).select(
-                    KEY, "trig_ts", "trig_seq", TS, SEQ, c
-                )
-            else:
-                raise ValueError(f"invalid window {window!r}")
-            merged = j if merged is None else merged.join(
-                j, [KEY, "trig_ts", "trig_seq", TS, SEQ], "full_outer"
+                        (tag == (j if tindex is None else n + 1 + j))
+                        & F.col(c).isNotNull(),
+                        F.struct(TS, SEQ),
+                    )
+                ).over(per_key).alias(f"__fv{j}")
+                for j, c in enumerate(names)
+            ]
+            u = (
+                u.select("*", *first_valid)
+                .filter(reduce(
+                    lambda a, j: a & (F.struct(TS, SEQ) >= F.col(f"__fv{j}")),
+                    range(n), tag <= n,
+                ))
+                .drop(*[f"__fv{j}" for j in range(n)])
             )
-        return merged
+        trig = u.filter(tag == n).select(
+            KEY, F.col(TS).alias(TRIG_TS), F.col(SEQ).alias(TRIG_SEQ)
+        )
+        if timed:
+            ticks = _merge(u.filter(tag < n), [KEY, TS, SEQ], names)
+            tkey = "__trig_key"
+            trig = trig.withColumnRenamed(KEY, tkey)
+            band = [
+                F.col(tkey).eqNullSafe(F.col(KEY)),
+                F.struct(TS, SEQ) <= F.struct(TRIG_TS, TRIG_SEQ),
+                F.col(TS) >= F.col(TRIG_TS) - F.lit(window),
+            ]
+            return trig.join(
+                ticks, band, "left" if keep_empty else "inner"
+            ).select(
+                F.col(tkey).alias(KEY), TRIG_TS, TRIG_SEQ, TS, SEQ, *names
+            )
+        # each column's last `window` ticks, held at every tick of it
+        last_n = (
+            W.partitionBy(KEY, _TAG)
+            .orderBy(TS, SEQ)
+            .rowsBetween(-(window - 1), W.currentRow)
+        )
+        running = (
+            W.partitionBy(KEY)
+            .orderBy(TS, SEQ, _TAG)
+            .rowsBetween(W.unboundedPreceding, W.currentRow)
+        )
+        u = u.withColumn(
+            "__buf",
+            F.collect_list(F.struct(TS, SEQ, *names)).over(last_n),
+        )
+        held = [
+            F.last(F.when(tag == j, F.col("__buf")), ignorenulls=True)
+            .over(running)
+            for j in range(n)
+        ]
+        explode = F.explode_outer if keep_empty else F.explode
+        rows = (
+            u.select(
+                KEY, TS, SEQ, _TAG,
+                F.flatten(F.array_compact(F.array(*held))).alias("__buf"),
+            )
+            .filter(tag == n)
+            .select(
+                KEY,
+                F.col(TS).alias(TRIG_TS),
+                F.col(SEQ).alias(TRIG_SEQ),
+                explode("__buf").alias("__b"),
+            )
+            .select(KEY, TRIG_TS, TRIG_SEQ, "__b.*")
+        )
+        return _merge(rows, [KEY, TRIG_TS, TRIG_SEQ, TS, SEQ], names)
 
     def to_pandas_ts(
         self,
@@ -385,48 +365,46 @@ class TsFrame:
         the last ``window`` ticks at that trigger (empty frame when no
         data is in the window, like make_pandas). Keyed frames get a
         (key, trigger-time) MultiIndex. This is the driver-side
-        convenience over to_spark_ts — use the Spark form at scale."""
+        convenience over to_spark_ts — use the Spark form at scale.
+        One Spark job: the buffer rows carry the trigger index too."""
         import pandas as pd
 
-        long = self.to_spark_ts(trigger, window, tindex, wait_all_valid)
-        pdf = long.orderBy(KEY, "trig_ts", "trig_seq", TS, SEQ).toPandas()
-
-        trigger_ts = self._resolve(trigger)
-        trig = trigger_ts.df.select(
-            KEY, F.col(TS).alias("trig_ts"), F.col(SEQ).alias("trig_seq")
+        pdf = (
+            self._buffer_rows(trigger, window, tindex, wait_all_valid,
+                              keep_empty=True)
+            .orderBy(KEY, TRIG_TS, TRIG_SEQ, TS, SEQ)
+            .toPandas()
         )
-        if wait_all_valid:
-            have = long.select(KEY, "trig_ts", "trig_seq").distinct()
-            trig = trig.join(have, [KEY, "trig_ts", "trig_seq"], "left_semi")
-        tpdf = trig.orderBy(KEY, "trig_ts", "trig_seq").toPandas()
-
-        grouped = {
-            k: g for k, g in pdf.groupby([KEY, "trig_ts", "trig_seq"])
-        } if len(pdf) else {}
+        if not len(pdf):
+            return pd.Series(dtype="object")
         empty = pd.DataFrame(
             {c: pd.Series(dtype="float64") for c in self.columns},
             index=pd.DatetimeIndex([]),
         )
-        single = set(tpdf[KEY].unique()) <= {GLOBAL_KEY}
+        single = set(pdf[KEY].unique()) <= {GLOBAL_KEY}
         # parallel label/value lists, NOT a dict: two trigger ticks at
         # the same timestamp (distinct seq) must stay distinct entries,
         # matching the reference's pandas Series duplicate index
         labels: list = []
         values: list = []
-        for r in tpdf.itertuples(index=False):
-            g = grouped.get((getattr(r, KEY), r.trig_ts, r.trig_seq))
-            frame = (
-                g.set_index(TS)[self.columns] if g is not None else empty
-            )
-            labels.append(
-                r.trig_ts if single else (getattr(r, KEY), r.trig_ts)
-            )
-            values.append(frame)
-        if not labels:
-            return pd.Series(dtype="object")
+        for (k, trig_ts, _), g in pdf.groupby(
+            [KEY, TRIG_TS, TRIG_SEQ], sort=False, dropna=False
+        ):
+            g = g[g[TS].notna()]
+            values.append(g.set_index(TS)[self.columns] if len(g) else empty)
+            labels.append(trig_ts if single else (k, trig_ts))
         index = (
             pd.Index(labels)
             if single
             else pd.MultiIndex.from_tuples(labels)
         )
         return pd.Series(values, index=index, dtype="object")
+
+
+def _merge(rows: SparkDataFrame, keys: list[str], names: list[str]):
+    """One row per ``keys``: ticks of several columns in one engine
+    cycle become one row holding each column's value (first non-NULL;
+    a NaN is a value)."""
+    return rows.groupBy(*keys).agg(
+        *[F.first(c, ignorenulls=True).alias(c) for c in names]
+    )

@@ -4,6 +4,7 @@ to_pandas evaluation)."""
 
 import math
 
+import pandas as pd
 import pytest
 
 from csp_spark import TsFrame, TickStream
@@ -164,29 +165,88 @@ def test_to_spark_ts_long_form(frame, spark):
     assert [r["ask"] for r in rows] == [100.0, None, 100.2]
 
 
-def test_to_spark_ts_count_window_plan_is_rank_band(frame, spark):
-    """Regression guard for the bounded count-window plan shape: the
-    r5 scale-killer joined every trigger against the FULL observation
-    history with a (ts,seq) <= trigger range condition; the fix ranks
-    ticks once and EQUI-joins on (key, rank) so the intermediate is
-    |trigger|×window. sf-small correctness can't tell the two apart —
-    this pins the plan."""
+def test_to_spark_ts_count_window_plan_is_one_exchange(frame, spark):
+    """Regression guard for the count-window plan shape: the r5
+    scale-killer joined every trigger against the FULL observation
+    history with a (ts,seq) <= trigger range condition. The count
+    window now collects each column's last ``window`` ticks with a
+    sliding window and hands them to the trigger with a running one,
+    all on ONE key shuffle — no join of any kind can appear, so
+    trigger × full history cannot either. sf-small correctness can't
+    tell the shapes apart — this pins the plan."""
     trig = bl.curve(spark, [(t(1.6), 1.0), (t(3), 2.0)])
     out = frame.to_spark_ts(trig, window=2)
     plan = out._jdf.queryExecution().executedPlan().toString()
-    join_lines = [l for l in plan.split("\n") if "Join" in l]
-    # the window band must never be a join range-condition against the
-    # trigger cycle (the unbounded shape); <= only ever appears in the
-    # old form's band predicate
-    assert not any("<=" in l for l in join_lines), join_lines
-    assert plan.count("NestedLoop") == 0 and plan.count("Cartesian") == 0
-    # buffer attachment is the rank-band equi join
-    assert any("__r" in l for l in join_lines), join_lines
-    # pinned ceilings for this 2-column fixture (observed 18/28; the
-    # unbounded form re-plans the band as extra sort+filter stages)
-    lines = plan.split("\n")
-    exch = sum(1 for l in lines if "Exchange hashpartitioning" in l
-               or "Exchange rangepartitioning" in l)
-    sorts = sum(1 for l in lines if "Sort [" in l)
-    assert exch <= 20, exch
-    assert sorts <= 32, sorts
+    for op in ("Join", "NestedLoop", "Cartesian"):
+        assert op not in plan, plan
+    assert plan.count("Exchange hashpartitioning") == 1, plan
+    assert "Exchange rangepartitioning" not in plan, plan
+    # one scan per source: bid, ask and the trigger
+    assert plan.count("Scan ExistingRDD") == 3, plan
+
+
+@pytest.mark.parametrize("window", [2, TD(seconds=2)], ids=["count", "time"])
+def test_to_spark_ts_streams_cut_from_one_table(spark, window):
+    # columns and trigger filtered out of ONE table: the gated time
+    # window once failed here as an ambiguous self-join
+    from pyspark.sql import functions as F
+
+    table = TickStream.from_table(
+        spark.createDataFrame(
+            [(7, t(i), i, float(i)) for i in range(6)],
+            "user_id long, t timestamp, event_id long, v double",
+        ),
+        ts_col="t", value_col="v", key_col="user_id", seq_col="event_id",
+    )
+
+    def cut(m, r):
+        return table.with_df(table.df.filter(F.col("seq") % m == r))
+
+    b = cut(2, 1)
+    b = b.with_df(b.df.withColumn(b.value_col, F.col(b.value_col) * 2))
+    frame = TsFrame({"a": cut(2, 0), "b": b})
+    rows = frame.to_spark_ts(cut(3, 0), window).orderBy("ts").collect()
+    # all valid from t1; the t3 trigger holds a's t2 and b's t1, t3
+    assert [(r["trig_ts"], r["ts"], r["a"], r["b"]) for r in rows] == [
+        (t(3), t(1), None, 2.0),
+        (t(3), t(2), 2.0, None),
+        (t(3), t(3), None, 6.0),
+    ]
+
+
+@pytest.mark.parametrize("window", [2, TD(seconds=2)], ids=["count", "time"])
+def test_to_spark_ts_degenerate_inputs(spark, window):
+    """Degenerate inputs, the same answer for both window kinds:
+    - a NULL key is a group like any other;
+    - two columns ticking in one cycle give ONE row with both values;
+    - a NaN is a value: it stays NaN and makes its column valid;
+    - a key where a column never ticks never becomes all-valid, so it
+      gives no rows (nor a to_pandas_ts entry);
+    - a tick in the trigger's own cycle is inside the buffer."""
+    schema = "key string, ts timestamp, seq long, value double"
+
+    def ticks(rows):
+        return TickStream(spark.createDataFrame(rows, schema))
+
+    a = ticks([(None, t(1), 1, 1.0), ("k", t(1), 1, math.nan),
+               ("z", t(0), 0, 5.0)])
+    b = ticks([(None, t(1), 1, 10.0), ("k", t(0), 0, 20.0),
+               ("k", t(2), 2, 21.0)])
+    trig = ticks([(None, t(2), 2, 0.0), ("k", t(2), 2, 0.0),
+                  ("z", t(2), 2, 0.0)])
+    frame = TsFrame({"a": a, "b": b})
+    rows = frame.to_spark_ts(trig, window).orderBy("key", "ts").collect()
+    got = [(r["key"], r["trig_ts"], r["ts"], r["a"], r["b"]) for r in rows]
+    # k's threshold is a's NaN tick at t1: b's t0 tick is gated out
+    assert got[0] == (None, t(2), t(1), 1.0, 10.0)
+    assert got[1][:3] == ("k", t(2), t(1)) and math.isnan(got[1][3])
+    assert got[1][4] is None
+    assert got[2] == ("k", t(2), t(2), None, 21.0)
+    assert len(got) == 3
+    if isinstance(window, int):
+        out = frame.to_pandas_ts(trig, window)
+        # a MultiIndex holds the NULL key as NaN
+        assert [ts for _, ts in out.index] == [t(2), t(2)]
+        assert pd.isna(out.index[0][0]) and out.index[1][0] == "k"
+        assert out.iloc[0]["b"].tolist() == [10.0]
+        assert list(out.iloc[1].index) == [t(1), t(2)]
