@@ -41,6 +41,16 @@ _DEFAULTS = {
     # Parquet vectorized reader + pushdown are defaults but we pin them.
     "spark.sql.parquet.filterPushdown": "true",
     "spark.sql.parquet.enableVectorizedReader": "true",
+    # PySpark's call-site capture (on by default) wraps every Column
+    # function: each call walks the Python stack and makes about five
+    # JVM round-trips. perfbench's six tick_replay queries make 370 such
+    # calls per build, and turning capture off cut that build from 1.35
+    # to 1.00 s (local[4], sf0.01). Off, an analysis error keeps its
+    # message but loses PySpark's "was called from file:line" block.
+    # PySpark reads the key once per process, at the first Column call;
+    # pass "true" through get_spark(**extra) in a fresh process to turn
+    # capture back on.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
     # local[N] runs executors inside the driver JVM, whose default heap
     # is 1g — far too small for 32 concurrent tasks with array-heavy
     # rows (shingle sets, signatures). On a real cluster this maps to

@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..core.session import _materialize
+from ..sources.parquet import read_table
 
 logger = logging.getLogger("csp_spark")
 
@@ -898,7 +899,7 @@ def load_index(spark, path: str):
 
     import numpy as np
 
-    df = spark.read.parquet(path)
+    df = read_table(spark, path)
     centers = None
     sidecar = os.path.join(path, "_centers.json")
     if os.path.exists(sidecar):
@@ -1480,7 +1481,7 @@ def load_pq_index(spark, path: str):
     import json
     import os
 
-    df = spark.read.parquet(path)
+    df = read_table(spark, path)
     with open(os.path.join(path, "_codebooks.json")) as f:
         books = np.asarray(json.load(f))
     return df, books

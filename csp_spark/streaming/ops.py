@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupStateTimeout
 
 from ..core.ticks import KEY, SEQ, TS, VALUE
+from ..sources.parquet import read_table
 
 
 def _iv(td: _dt.timedelta) -> str:
@@ -539,13 +540,13 @@ def ingest_dedup_batch(
         # ran, crashed before the checkpoint commit) its half-done
         # batch=N files must neither count as corpus nor sit in
         # the scan's file index while the overwrite below deletes
-        # them. Partition pruning keeps them unread.
+        # them. Partition pruning keeps them unread. read_table lists
+        # and analyses eagerly, so a missing corpus raises HERE.
         existing = (
-            spark.read.parquet(corpus_path)
+            read_table(spark, corpus_path)
             .filter(F.col("batch") < F.lit(int(epoch_id)))
             .select(id_col, text_col)
         )
-        existing.schema  # force analysis so a missing path raises HERE
     except Exception as ex:
         # only "no corpus yet" may fall through to the empty frame;
         # a corrupt file / IO / permission error must abort the

@@ -2,6 +2,8 @@
 
 import datetime as dt
 import math
+import pathlib
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -27,6 +29,167 @@ def test_parquet_roundtrip(spark, tmp_path):
     assert back.count() == 5
     # date partitioning applied
     assert any(p.name.startswith("__date=") for p in (tmp_path / "out").iterdir())
+
+
+SF = "/root/testdata/sf0.001"
+_NANOS = "spark.sql.legacy.parquet.nanosAsLong"
+
+
+def _build_jobs(spark, fn):
+    """(fn(), number of Spark jobs it launched), counted by job group."""
+    sc = spark.sparkContext
+    group = f"build-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup("idle", "idle")
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _nanos_table():
+    import pyarrow as pa
+
+    return pa.table({
+        "k": ["a", "b"],
+        "ts": pa.array([1_577_836_800_123_456_789, 1_577_836_801_000_000_999],
+                       pa.timestamp("ns")),
+        "s": pa.array([{"x": 1, "y": "p"}, {"x": 2, "y": "q"}]),
+        "m": pa.array([[("a", 1)], [("b", 2)]], pa.map_(pa.string(), pa.int64())),
+    })
+
+
+def _layouts(spark, tmp_path):
+    """name → path of every layout read_table must read like Spark."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from perfbench.gen import ticks, write_events
+
+    out = {t.name: str(t) for t in sorted(pathlib.Path(SF).glob("*.parquet"))}
+    write_events(ticks(1, 60, 4), str(tmp_path / "flat"), n_files=3)
+    out["flat"] = str(tmp_path / "flat")
+    flat = spark.read.parquet(out["flat"])
+    flat.write.parquet(str(tmp_path / "spark"))  # leaves _SUCCESS and .crc files
+    out["spark"] = str(tmp_path / "spark")
+    flat.write.partitionBy("event_type").parquet(str(tmp_path / "hive"))
+    out["hive"] = str(tmp_path / "hive")
+    # files disagree: Spark infers from the first by path (mergeSchema off)
+    (tmp_path / "mixed").mkdir()
+    pq.write_table(pa.table({"k": ["a"], "y": [1.0]}), str(tmp_path / "mixed" / "b.parquet"))
+    pq.write_table(pa.table({"k": ["a"], "x": [1]}), str(tmp_path / "mixed" / "a.parquet"))
+    out["mixed"] = str(tmp_path / "mixed")
+    return out
+
+
+def test_read_table_schema_is_sparks_and_launches_no_job(spark, tmp_path):
+    """read_table takes Spark's own inferred schema from one footer read
+    on the driver, so it launches no Spark job, for every test table and
+    directory layout (part files, Spark-written, hive-partitioned, files
+    that disagree)."""
+    for name, path in _layouts(spark, tmp_path).items():
+        df, jobs = _build_jobs(spark, lambda: read_table(spark, path))
+        assert jobs == 0, name
+        assert df.schema == spark.read.parquet(path).schema, name
+        if not name.endswith(".parquet"):  # a directory: every file read
+            assert df.count() == spark.read.parquet(path).count(), name
+
+
+def test_read_table_nanos_schema(spark, tmp_path):
+    """A TIMESTAMP(NANOS) column is Spark's nanosAsLong schema with that
+    column as a µs timestamp."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import StructField, StructType, TimestampType
+
+    path = str(tmp_path / "ns.parquet")
+    pq.write_table(_nanos_table(), path)
+    df, jobs = _build_jobs(spark, lambda: read_table(spark, path))
+    spark.conf.set(_NANOS, "true")
+    try:
+        ref = spark.read.parquet(path).schema
+    finally:
+        spark.conf.unset(_NANOS)
+    assert jobs == 0
+    assert df.schema == StructType([
+        StructField(f.name, TimestampType(), f.nullable) if f.name == "ts" else f
+        for f in ref.fields
+    ])
+
+
+def test_read_table_nanos_directory_reads_like_its_file(spark, tmp_path):
+    """A directory of nanos part files gives the single file's µs
+    timestamps (truncated), whatever was read before it."""
+    import pyarrow.parquet as pq
+
+    table = _nanos_table()
+    pq.write_table(table, str(tmp_path / "ns.parquet"))
+    (tmp_path / "nsdir").mkdir()
+    for i in range(2):
+        pq.write_table(table.slice(i, 1), str(tmp_path / "nsdir" / f"part-{i}.parquet"))
+    want = [dt.datetime(2020, 1, 1, 0, 0, 0, 123456), dt.datetime(2020, 1, 1, 0, 0, 1)]
+    for p in ("nsdir", "ns.parquet", "nsdir"):
+        rows = read_table(spark, str(tmp_path / p)).orderBy("k").collect()
+        assert [r["ts"] for r in rows] == want, p
+
+
+@pytest.mark.parametrize("vectorized", ["true", "false"])
+@pytest.mark.parametrize("prior", [None, "false"])
+def test_read_table_leaves_nanos_conf_alone(spark, tmp_path, vectorized, prior):
+    """read_table never sets nanosAsLong in the session, with either
+    parquet reader and nested columns beside the nanos one, so a later
+    plain read of the file still rejects TIMESTAMP(NANOS)."""
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "ns.parquet")
+    pq.write_table(_nanos_table(), path)
+    vec = "spark.sql.parquet.enableVectorizedReader"
+    if prior is not None:
+        spark.conf.set(_NANOS, prior)
+    spark.conf.set(vec, vectorized)
+    try:
+        df = read_table(spark, path)
+        assert spark.conf.get(_NANOS, None) == prior
+        rows = df.orderBy("k").collect()
+        assert rows[0]["ts"] == dt.datetime(2020, 1, 1, 0, 0, 0, 123456)
+        assert rows[1]["m"] == {"b": 2} and rows[1]["s"]["y"] == "q"
+        assert spark.conf.get(_NANOS, None) == prior
+        with pytest.raises(Exception, match="PARQUET_TYPE_ILLEGAL"):
+            spark.read.parquet(path).collect()
+    finally:
+        spark.conf.set(vec, "true")
+        spark.conf.unset(_NANOS)
+
+
+def test_tick_replay_queries_build_without_a_job(spark):
+    """Plan build of each tick_replay query launches no Spark job."""
+    import __spark_entry__ as E
+    from perfbench.batch import TICK_REPLAY
+
+    queries = E.queries()
+    for name in TICK_REPLAY:
+        _, jobs = _build_jobs(spark, lambda: queries[name](spark, SF))
+        assert jobs == 0, name
+
+
+def test_one_batch_parquet_reader():
+    """sources.parquet holds the package's only batch parquet read, so
+    every table read takes its schema from the footer (no job at build)
+    and reads TIMESTAMP(NANOS) the same way."""
+    import ast
+
+    import csp_spark
+
+    pkg = pathlib.Path(csp_spark.__file__).parent
+    sites = []
+    for path in sorted(pkg.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "parquet"
+                    and any(isinstance(n, ast.Attribute) and n.attr == "read"
+                            for n in ast.walk(node.func.value))):
+                sites.append(f"{path.relative_to(pkg)}:{node.lineno}")
+    assert len(sites) == 1 and sites[0].startswith("sources/parquet.py:"), sites
 
 
 def test_csv_roundtrip(spark, tmp_path):
